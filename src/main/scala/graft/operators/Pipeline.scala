@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus curation — the canonical training-data flow composed
@@ -53,85 +52,24 @@ object Pipeline {
       } finally pool.shutdown()
     }
 
-  /** [[parEval]] over optional arms: present arms run concurrently, the
-    * option structure is preserved for the caller's union/getOrElse. */
-  private def parEvalOpt(arms: Seq[Option[() => DataFrame]]): Seq[Option[DataFrame]] = {
-    val results = parEval(arms.flatten)
-    var i = -1
-    arms.map(_.map { _ => i += 1; results(i) })
-  }
-
-  /** The relation re-spread to cluster parallelism when its materialized
-    * source sits below it. AQE's size-based post-shuffle coalesce is
-    * tuned for IO-bound work, so at small corpus sizes a checkpointed
-    * stage like span removal lands on 1–2 partitions; a downstream scan
-    * whose per-row cost is HASHING-scale (the NB feature pass: md5 per
-    * uni/bigram) then runs on 1–2 of N cores (measured: 4.1 s over a
-    * 2-partition checkpoint vs 0.9 s at 32 — the same starvation
-    * `EntryInfra.widenedIfHeavy` fixes for narrow source files). Only
-    * such consumers get this wrapper — for the cheap-per-row scans
-    * (shingling, token counts) the extra exchange costs more than the
-    * imbalance (measured: blanket-widening every stage checkpoint cost
-    * q112 +1.2 s for zero downstream win).
+  /** One curation stage: the decision its drops carry, and its DROP
+    * relation — one id column, O(duplicates) rows, eagerly checkpointed
+    * by the body — computed from the stage's input survivors. A stage
+    * whose option is off is `None` in its core's list and adds no
+    * relation at all.
     *
-    * `df` must be a narrow chain over an already-materialized
-    * (checkpointed) leaf, so the partition probe triggers no job. At
-    * production scale stage outputs exceed parallelism and this is the
-    * identity. */
-  /** The three modality arms of the `bad_media` gate as ONE distinct'd
-    * drop relation over `survivors` (the exact-dedup output — only docs
-    * still in play get their assets decoded):
-    *  - image ([[MediaOps.decodeStatus]]): decode-fail / out-of-band
-    *    mean luminance / uniform raster,
-    *  - video ([[VideoOps.decodeStatus]]): demux-fail / zero decodable
-    *    frames (dead payloads) / out-of-band luminance / every-frame-
-    *    uniform (blank stream),
-    *  - audio ([[MediaOps.audioStatus]]): decode-fail / zero samples /
-    *    silent (every sample equal).
-    * Each arm is one partition-parallel decode pass, failures kept as
-    * status rows (no second scan of the binary column), checkpointed as
-    * its own leaf. The union is DISTINCT because modalities may overlap
-    * on a doc, and the caller left-joins this relation in the final
-    * assembly — duplicates would fan out output rows. Shared by
-    * [[curateFull]] (stage 1.5) and [[curateIncremental]] (stage 1.5,
-    * judging only batch docs). */
-  private def mediaGateDrops(survivors: DataFrame, idCol: String,
-      media: Option[DataFrame], mediaCodec: MediaOps.ImageCodec,
-      mediaGrid: Int, minMeanLum: Double, maxMeanLum: Double,
-      video: Option[DataFrame], videoContainer: VideoOps.VideoContainer,
-      videoEvery: Int, audio: Option[DataFrame],
-      audioCodec: MediaOps.AudioCodec, empty: DataFrame): DataFrame = {
-    val id = col(idCol)
-    def inPlay(assets: DataFrame): DataFrame =
-      assets.select(col(idCol).as("doc_id"), col("content"))
-        .join(survivors.select(id.as("doc_id")), Seq("doc_id"), "left_semi")
-    // the three modality decodes are independent full passes over their
-    // own asset relations — materialize them concurrently ([[parEval]])
-    val Seq(imageArm, videoArm, audioArm) = parEvalOpt(Seq(
-      media.map { m => () =>
-        val mean = col("checksum").cast("double") / (col("width") * col("height"))
-        MediaOps.decodeStatus(inPlay(m), mediaCodec, mediaGrid).toDF()
-          .filter(!col("ok") || mean < minMeanLum || mean > maxMeanLum ||
-            col("uniform"))
-          .select(col("doc_id").as("__media_drop")).localCheckpoint(eager = true)
-      },
-      video.map { v => () =>
-        val vMean = col("pix_sum").cast("double") / col("pix_cnt")
-        VideoOps.decodeStatus(inPlay(v), videoContainer, mediaCodec, videoEvery).toDF()
-          .filter(!col("ok") || col("n_decoded") === 0 ||
-            vMean < minMeanLum || vMean > maxMeanLum || col("uniform"))
-          .select(col("doc_id").as("__media_drop")).localCheckpoint(eager = true)
-      },
-      audio.map { a => () =>
-        MediaOps.audioStatus(inPlay(a), audioCodec).toDF()
-          .filter(!col("ok") || col("n_samples") === 0 || col("silent"))
-          .select(col("doc_id").as("__media_drop")).localCheckpoint(eager = true)
-      }))
-    val imageDrops = imageArm.getOrElse(empty)
-    val videoDrops = videoArm.getOrElse(empty)
-    val audioDrops = audioArm.getOrElse(empty)
-    imageDrops.union(videoDrops).union(audioDrops).distinct()
-  }
+    * Why every drop relation is an eager localCheckpoint (the Components
+    * precedent): each stage both feeds the next stage AND the final
+    * assembly, and several stages iterate (k-means) or self-join
+    * (near-dup) over the previous one, so an unbroken lineage makes the
+    * final plan tree grow EXPONENTIALLY in stage count (measured: the
+    * composed query spent ~18 s in Catalyst analysis/optimization alone
+    * at sf0.1 with all data cached — 4× the actual compute).
+    * Checkpointing makes each stage a leaf: compute runs exactly once,
+    * downstream plans stay O(stage). Blocks free with the session (or an
+    * explicit unpersist sweep); a deployment persists stage outputs as
+    * tables — same lifecycle, durable. */
+  private final case class Stage(decision: String, drops: DataFrame => DataFrame)
 
   /** A one-column drop leaf re-labeled to the shared `__dropped` name so
     * drop sets from different stages can union (r21). */
@@ -150,10 +88,237 @@ object Pipeline {
     * forced, the drop-set discipline) — and at scale one anti-join
     * against the union shuffles the corpus ONCE per stage instead of k
     * times. */
-  private def minusDrops(base: DataFrame, id: org.apache.spark.sql.Column,
-                         drops: DataFrame): DataFrame =
+  private def minusDrops(base: DataFrame, id: Column, drops: DataFrame): DataFrame =
     base.join(drops, id === col("__dropped"), "left_anti")
 
+  /** The one runner of both curation cores: `gates`, then the span-removal
+    * rewrite, then the `pairwise` stages, then the assembly over `rows`.
+    *
+    * Stage inputs: each stage reads `base` minus the cumulative union of
+    * the drops before it ([[minusDrops]]); the first stage reads `base`
+    * itself. `spanRemoval` maps the gate survivors to the CLEANED leaf
+    * (`idCol`, kept_tokens, removed_tokens, cleaned_text — eagerly
+    * checkpointed by the caller); its non-empty rows are the new base of
+    * the pairwise stages, whose drop union starts over (a doc cleaned
+    * down to nothing is `empty`, never judged by a pairwise stage).
+    *
+    * Assembly: ONE drop-verdict join (r21) — each drop leaf is tagged
+    * with its stage's PRIORITY, its position in `gates ++ pairwise`; the
+    * union aggregates to the min priority per id (a doc in several sets
+    * reads its earliest stage); and `rows` joins that single relation
+    * plus the cleaned leaf, so a run builds two broadcast relations (and
+    * at scale shuffles the doc relation at most twice) whatever the
+    * stage count. `empty` sits between the gates and the
+    * pairwise stages: a doc a gate dropped never reached span removal
+    * (no cleaned row), so the gate test must fire before the
+    * cleaned-null test, and every pairwise drop carries a kept_tokens > 0
+    * row. Returns `rows` plus `decision`, kept_tokens, removed_tokens and
+    * cleaned_text. */
+  private def runStages(rows: DataFrame, base: DataFrame, idCol: String,
+                        gates: Seq[Stage], spanRemoval: DataFrame => DataFrame,
+                        pairwise: Seq[Stage]): DataFrame = {
+    val id = col(idCol)
+    def survivors(from: DataFrame, drops: Seq[DataFrame]): DataFrame =
+      if (drops.isEmpty) from else minusDrops(from, id, drops.map(dropCol).reduce(_ union _))
+    def run(from: DataFrame, stages: Seq[Stage]): Seq[DataFrame] =
+      stages.foldLeft(Vector.empty[DataFrame])((done, s) => done :+ s.drops(survivors(from, done)))
+    val gateDrops = run(base, gates)
+    val cleaned = spanRemoval(survivors(base, gateDrops))
+    val drops = gateDrops ++ run(cleaned.filter(col("kept_tokens") > 0), pairwise)
+    val verdict = drops.zipWithIndex.map { case (d, p) =>
+        d.select(col(d.columns.head).as("__d_id"), lit(p).as("__d_p"))
+      }.reduce(_ union _)
+      .groupBy("__d_id").agg(min("__d_p").as("__d_p"))
+    val name = element_at(typedLit((gates ++ pairwise).map(_.decision)), col("__d_p") + 1)
+    rows.join(verdict, id === col("__d_id"), "left")
+      .join(cleaned.select(id, col("kept_tokens"), col("removed_tokens"),
+        col("cleaned_text")), Seq(idCol), "left")
+      .withColumn("decision",
+        when(col("__d_p") < gates.size, name)
+          .when(col("cleaned_text").isNull || col("kept_tokens") === 0L, "empty")
+          .when(col("__d_p").isNotNull, name)
+          .otherwise("kept"))
+  }
+
+  /** The audit columns after `decision` on a [[runStages]] result:
+    * removed_tokens, and for kept rows only n_tokens and final_md5 (of
+    * the released text — see [[outputText]]). */
+  private def releasedCols(piiRedact: Boolean): Seq[Column] = Seq(
+    coalesce(col("removed_tokens"), lit(0L)).as("removed_tokens"),
+    when(col("decision") === "kept", col("kept_tokens")).as("n_tokens"),
+    when(col("decision") === "kept",
+      md5(outputText(col("cleaned_text"), piiRedact).cast("binary"))).as("final_md5"))
+
+  /** The released text of a kept document: identity, or PII-redacted
+    * ([[Privacy.redact]] — email → IPv4 → phone, the q62 pattern tier)
+    * when the caller opts in. Redaction is an OUTPUT transform only:
+    * every stage judges the original text (a masked token must not
+    * change dedup/gram statistics), and counts stay pre-redaction. */
+  private def outputText(cleaned: Column, piiRedact: Boolean): Column =
+    if (piiRedact) Privacy.redact(cleaned) else cleaned
+
+  /** `assets` (idCol, content) narrowed to the docs still in `survivors`,
+    * as (doc_id, content): only docs in play get their assets decoded. */
+  private def inPlay(assets: DataFrame, survivors: DataFrame, idCol: String): DataFrame =
+    assets.select(col(idCol).as("doc_id"), col("content"))
+      .join(survivors.select(col(idCol).as("doc_id")), Seq("doc_id"), "left_semi")
+
+  /** A stage made of independent modality ARMS, each an optional drop
+    * relation over the same input survivors. Modalities are independent
+    * evidence, so the present arms' decode/pair jobs run concurrently
+    * ([[parEval]]) and their drops union DISTINCT (a doc may fail in
+    * several); a single arm keeps its exchange-free drop relation. All
+    * arms off → no stage. */
+  private def armStage(decision: String,
+                       arms: Seq[Option[DataFrame => DataFrame]]): Option[Stage] = {
+    val present = arms.flatten
+    if (present.isEmpty) None
+    else Some(Stage(decision, in => parEval(present.map(arm => () => arm(in))) match {
+      case Seq(one) => one
+      case several => several.reduce(_ union _).distinct()
+    }))
+  }
+
+  /** `bad_media` — the media-integrity gate's three modality arms, each
+    * one partition-parallel decode pass over its in-play assets, failures
+    * kept as status rows (no second scan of the binary column), its own
+    * checkpointed leaf:
+    *  - image ([[MediaOps.decodeStatus]]): decode-fail / out-of-band
+    *    mean luminance / uniform raster,
+    *  - video ([[VideoOps.decodeStatus]]): demux-fail / zero decodable
+    *    frames (dead payloads) / out-of-band luminance / every-frame-
+    *    uniform (blank stream),
+    *  - audio ([[MediaOps.audioStatus]]): decode-fail / zero samples /
+    *    silent (every sample equal).
+    * Runs BEFORE the text stages — a bad asset's text must not feed gram
+    * statistics any more than its pixels feed training. Docs without an
+    * asset row pass untouched. Shared by [[curateFull]] and
+    * [[curateIncremental]] (which judges batch docs only; history was
+    * gated at its own admission). */
+  private def mediaGate(idCol: String,
+      media: Option[DataFrame], mediaCodec: MediaOps.ImageCodec,
+      mediaGrid: Int, minMeanLum: Double, maxMeanLum: Double,
+      video: Option[DataFrame], videoContainer: VideoOps.VideoContainer,
+      videoEvery: Int, audio: Option[DataFrame],
+      audioCodec: MediaOps.AudioCodec): Option[Stage] = armStage("bad_media", Seq(
+    media.map { m => (in: DataFrame) =>
+      val mean = col("checksum").cast("double") / (col("width") * col("height"))
+      MediaOps.decodeStatus(inPlay(m, in, idCol), mediaCodec, mediaGrid).toDF()
+        .filter(!col("ok") || mean < minMeanLum || mean > maxMeanLum || col("uniform"))
+        .select(col("doc_id")).localCheckpoint(eager = true)
+    },
+    video.map { v => (in: DataFrame) =>
+      val vMean = col("pix_sum").cast("double") / col("pix_cnt")
+      VideoOps.decodeStatus(inPlay(v, in, idCol), videoContainer, mediaCodec, videoEvery).toDF()
+        .filter(!col("ok") || col("n_decoded") === 0 ||
+          vMean < minMeanLum || vMean > maxMeanLum || col("uniform"))
+        .select(col("doc_id")).localCheckpoint(eager = true)
+    },
+    audio.map { a => (in: DataFrame) =>
+      MediaOps.audioStatus(inPlay(a, in, idCol), audioCodec).toDF()
+        .filter(!col("ok") || col("n_samples") === 0 || col("silent"))
+        .select(col("doc_id")).localCheckpoint(eager = true)
+    }))
+
+  /** `wrong_lang` — the trained LANGUAGE gate, the CCNet discipline:
+    * lang-id runs FIRST among the text-reading stages, so a monolingual
+    * curation lane never lets other languages feed its gram/span/near-dup
+    * statistics. `model` is the per-snapshot multiclass char-trigram NB
+    * artifact ([[TextOps.langNbFit]], stored/loaded through
+    * [[SnapshotStore]] as (lang, k, v) rows — fit on the admitted corpus's
+    * labels for the incremental core, so admission language never drifts
+    * with batch composition); survivors whose argmax language falls
+    * outside `allow` drop. Scoring is one trigram pass + a broadcast join
+    * on C·buckets integer rows — per-row scan work, no text in any
+    * exchange. A doc with no trigram carries no evidence and passes
+    * through (it dies as `empty` downstream). */
+  private def langGate(model: Option[TextOps.LangNbModel], allow: Seq[String],
+                       idCol: String, textCol: String): Option[Stage] = model.map { lm =>
+    Stage("wrong_lang", in =>
+      TextOps.langNbPredict(lm, in.select(col(idCol), col(textCol)), idCol, textCol)
+        .filter(!col("pred_lang").isin(allow: _*))
+        .select(col(idCol)).localCheckpoint(eager = true))
+  }
+
+  /** `rule_filtered` — the Gopher/C4 heuristic RULE gate
+    * ([[QualityFilters.ruleReport]]): the cheapest text stage — a per-row
+    * scan over raw text, no model, no shuffle — so it runs right after
+    * the language gate to shrink every pairwise stage's candidate set.
+    * Judged on RAW text (the published rule sets are page-level filters
+    * over the crawl, not over span-cleaned output), with thresholds that
+    * travel with the deployment, not the data — so incremental admission
+    * can't drift with batch composition. Each rule's verdict is one audit
+    * `GROUP BY` away via the standalone report. The verdict is the
+    * single expression [[QualityFilters.rulePass]]: the pushed filter
+    * evaluates the byte scan ONCE per row, where filtering the report's
+    * rule_pass would inline graft_rule_stats per rule conjunct
+    * (FilterExec has no subexpression elimination). */
+  private def ruleGate(params: Option[QualityFilters.RuleParams],
+                       idCol: String, textCol: String): Option[Stage] = params.map { rp =>
+    Stage("rule_filtered", in =>
+      in.select(col(idCol), col(textCol))
+        .filter(!QualityFilters.rulePass(col(textCol), rp))
+        .select(col(idCol)).localCheckpoint(eager = true))
+  }
+
+  /** `contaminated` — eval-suite decontamination: survivors sharing a
+    * k-gram shingle with `benchmark` ([[Decontaminate.contaminatedIds]] —
+    * membership implies every span hit too, a ≥ minSpan verbatim run
+    * shares its k-grams) OR whose embedding reaches `cosTau` cosine
+    * against any `benchmarkEmb` vector (the paraphrase grain) drop BEFORE
+    * span removal — eval-suite text must not feed gram statistics or
+    * survive into training data. The benchmark is fixed and small, so
+    * the cosine scan is benchmark-bounded map-side work (the
+    * [[Decontaminate.report]] contract).
+    *
+    * ONE materialized survivor leaf feeds both grains (r22): the stage
+    * input is a lazy anti-join over the docs scan, which the two grains
+    * would otherwise each execute. `widenIfNarrow`: the k-gram shingle
+    * pass (a hash per window) is a hashing-scale scan, and the leaf's
+    * own partition count is the honest probe (it IS materialized); the
+    * identity once the leaf has `defaultParallelism` partitions. */
+  private def decontaminate(benchmark: Option[DataFrame], benchmarkEmb: Option[DataFrame],
+      ngramK: Int, cosTau: Double, embeddings: DataFrame,
+      idCol: String, textCol: String, vecIdCol: String, vecCol: String): Option[Stage] =
+    benchmark.map { b => Stage("contaminated", in => {
+      val id = col(idCol)
+      val leaf = in.select(id, col(textCol)).localCheckpoint(eager = true)
+      val ng = Decontaminate.contaminatedIds(widenIfNarrow(leaf),
+          b.select(id, col(textCol)), idCol, textCol, ngramK)
+        .select(col("doc"))
+      val bEmb = benchmarkEmb.getOrElse(sys.error(
+        "benchmark decontamination needs benchmarkEmb for the semantic grain"))
+      val sem = embeddings
+        .join(leaf.select(id.as("__cid")), col(vecIdCol) === col("__cid"), "left_semi")
+        .select(col(vecIdCol).as("doc"), col(vecCol).as("__cvec"),
+          SimilarityOps.norm(col(vecCol)).as("__cnrm"))
+        .crossJoin(bEmb.select(col(vecCol).as("__bvec"),
+          SimilarityOps.norm(col(vecCol)).as("__bnrm")))
+        .withColumn("__cos", SimilarityOps.dot(col("__cvec"), col("__bvec")) /
+          (col("__cnrm") * col("__bnrm")))
+        .groupBy("doc").agg(max(col("__cos")).as("__mc"))
+        .filter(col("__mc") >= cosTau)
+        .select(col("doc"))
+      ng.union(sem).distinct().localCheckpoint(eager = true)
+    }) }
+
+  /** The relation re-spread to cluster parallelism when its materialized
+    * source sits below it. AQE's size-based post-shuffle coalesce is
+    * tuned for IO-bound work, so at small corpus sizes a checkpointed
+    * stage like span removal lands on 1–2 partitions; a downstream scan
+    * whose per-row cost is HASHING-scale (the NB feature pass: md5 per
+    * uni/bigram) then runs on 1–2 of N cores (measured: 4.1 s over a
+    * 2-partition checkpoint vs 0.9 s at 32 — the same starvation
+    * `EntryInfra.widenedIfHeavy` fixes for narrow source files). Only
+    * such consumers get this wrapper — for the cheap-per-row scans
+    * (shingling, token counts) the extra exchange costs more than the
+    * imbalance (measured: blanket-widening every stage checkpoint cost
+    * q112 +1.2 s for zero downstream win).
+    *
+    * `df` must be a narrow chain over an already-materialized
+    * (checkpointed) leaf, so the partition probe triggers no job. At
+    * production scale stage outputs exceed parallelism and this is the
+    * identity. */
   private[graft] def widenIfNarrow(df: DataFrame): DataFrame =
     widenIfNarrow(df, df)
 
@@ -215,73 +380,39 @@ object Pipeline {
       .drop("__exact_drop", "__near_drop")
   }
 
-  /** The FULL curation pipeline at the r14 operator grain, stages chained
-    * so each consumes the previous stage's survivors:
-    *
-    *   1. exact dedup (normalized fingerprint; lowest id survives),
-    *   1.5. (optional, `media`) media-integrity gate: an image-bearing
-    *      doc whose asset fails decode, or decodes blank/extreme →
-    *      `bad_media`; (optional, `video`) the video arm of the same
-    *      gate — demux failure, zero decodable frames, out-of-band
-    *      luminance, or every-frame-uniform (blank stream) →
-    *      `bad_media` too; (optional, `audio`) the audio arm —
-    *      decode failure, zero samples, or a silent clip →
-    *      `bad_media` as well,
-    *   1.75. (optional, `benchmark`) eval-suite decontamination: a
-    *      survivor sharing a k-gram shingle with the benchmark or
-    *      reaching `contamCosTau` embedding cosine against any
-    *      benchmark vector → `contaminated` (its text never feeds the
-    *      gram statistics downstream),
-    *   2. duplicated-SPAN removal — survivor text is REWRITTEN (cleaned),
-    *      and a doc cleaned down to nothing is `empty`,
-    *   2.5. (optional, `seedFilter`) trained-quality gate: NB
-    *      seed-vs-crawl classifier scores the CLEANED text; integer
-    *      log-odds below `minNbScoreU` → `low_quality`,
-    *   3. near dedup over the CLEANED text (exact n-gram Jaccard ≥
-    *      `nearDupThreshold`; higher id of each pair drops),
-    *   4. semantic dedup over the survivors' embeddings (k-means
-    *      bucketed, SemDeDup keep rule at cosine `semTau`),
-    *   5. per-source token quota over cleaned token counts.
-    *
-    * One row out per input document: (id, source, decision,
-    * removed_tokens, n_tokens, final_md5), decision ∈ {exact_dup,
-    * bad_media, media_dup, wrong_lang, contaminated, empty, low_quality,
-    * near_dup, sem_dup, over_quota, kept}; n_tokens/final_md5 are
-    * non-null for kept rows only, so the result IS the survivor corpus
-    * fingerprint and the per-stage decision counts in one relation.
-    *
-    * Scale shape: every stage emits a DROP SET (O(duplicates) id rows,
-    * AQE-broadcastable when small, shuffle-joinable when not — never
-    * forced), chained by left-anti joins; text crosses an exchange only
-    * inside span removal's bounded reassembly join. Centroids are k×dim
-    * driver values (the [[KMeansOps.fit]] contract). The final assembly
-    * is the docs scan plus five id-keyed left joins. */
+  /** Stages [[curateFromHtml]] runs AHEAD of [[curateFull]]'s own list
+    * (its per-domain gate), set on the calling thread for the duration of
+    * its curateFull call, so curateFull's public signature carries no
+    * internal knob. Not inheritable: no thread started during the call
+    * keeps the page relation reachable. */
+  private val leadingStages = ThreadLocal.withInitial[Seq[Stage]](() => Nil)
+
   /** [[curateFull]] with [[HtmlExtract]] as STAGE 0 — the pipeline a
     * web crawl actually runs: `pages` carries raw markup in `htmlCol`;
     * block segmentation + jusText-class content rules produce the
-    * clean-text column every later stage consumes. One mapPartitions
-    * prepended to the chain (no shuffle, no extra checkpoint — the
-    * exact stage's scan absorbs it); a page whose markup yields no
+    * clean-text column every later stage consumes. One mapPartitions,
+    * eagerly checkpointed ONCE (r19): every stage input reads the
+    * extraction, so an unmaterialized chain re-parses every page per
+    * stage (measured 2× on the q149 floor). A page whose markup yields no
     * content text flows through as an empty doc (its fingerprint groups
     * with other empties — the exact stage's documented behavior).
     * Passthrough knobs stay at [[curateFull]] defaults; deployments
     * needing the full surface call `extract` + `curateFull` directly.
     *
-    * STAGE 0.5 (optional, r19) — per-DOMAIN curation, the web-pipeline
-    * gate between extraction and exact dedup: when `urlCol` names the
-    * pages' raw-URL column, each page's canonical domain
-    * ([[UrlOps.canonicalize]] → [[UrlOps.domain]], codegen'd built-ins)
-    * drives two drops BEFORE any cross-document statistics:
-    *  - `domainBlocklist` (a (domain) relation, AQE-broadcast
-    *    anti-join) → decision `blocked_domain`,
-    *  - `domainTokenBudget` > 0 → the deterministic per-domain token
-    *    cap ([[QuotaSample.tokenQuota]] with domain as the group — the
-    *    4096-bucket two-level scan, no per-domain straggler window) →
-    *    decision `over_domain_quota`.
-    * One crawl host can neither dominate the mix nor feed the dedup/
-    * gram statistics past its cap. Dropped pages still get their one
-    * output row (the audit contract); both knobs off → prior shape
-    * byte-identical. */
+    * Per-DOMAIN curation (optional, r19) — when `urlCol` names the pages'
+    * raw-URL column, each page's canonical domain ([[UrlOps.canonicalize]]
+    * → [[UrlOps.domain]], codegen'd built-ins) drives two stages put
+    * AHEAD of curateFull's list, before any cross-document statistics:
+    *  - `blocked_domain` — `domainBlocklist` (a (domain) relation,
+    *    broadcast semi-join),
+    *  - `over_domain_quota` — `domainTokenBudget` > 0: the deterministic
+    *    per-domain token cap ([[QuotaSample.tokenQuota]] with domain as
+    *    the group — the 4096-bucket two-level scan, no per-domain
+    *    straggler window).
+    * One crawl host can neither dominate the mix nor feed the dedup/gram
+    * statistics past its cap. Dropped pages keep their one output row
+    * (removed_tokens 0, null n_tokens/final_md5); both knobs off →
+    * curateFull's output over the extraction. */
   def curateFromHtml(pages: DataFrame, embeddings: DataFrame,
                      idCol: String, htmlCol: String, sourceCol: String,
                      minWords: Int = HtmlExtract.DefaultMinWords,
@@ -295,59 +426,85 @@ object Pipeline {
                      ruleParams: Option[QualityFilters.RuleParams] = None,
                      piiRedactOutput: Boolean = false): DataFrame = {
     val id = col(idCol)
-    // Extraction is eagerly checkpointed (r19): curateFull's stages each
-    // keep their `docs` input in lineage (only DROP SETS checkpoint), so
-    // an uncheckpointed extraction chain re-parses every page once PER
-    // STAGE — measured 2× on the q149 floor once the page fixture moved
-    // to the memo (the replayed local relation re-shuffles its bytes on
-    // every lineage re-execution where a parquet scan only re-reads
-    // cached footers). One parse pass, stages read a leaf.
     val extracted = HtmlExtract.extract(pages, idCol, htmlCol,
         minWords, maxLinkDensity)
       .select(col(idCol), col("extracted_text").as(textCol))
       .join(pages.select(col(idCol), col(sourceCol)), Seq(idCol))
       .localCheckpoint(eager = true)
-    if (urlCol.isEmpty)
-      return curateFull(extracted, embeddings, idCol, textCol, sourceCol,
-        langModel = langModel, langAllow = langAllow,
-        ruleParams = ruleParams, piiRedactOutput = piiRedactOutput)
-    require(domainBlocklist.nonEmpty || domainTokenBudget > 0,
-      "urlCol given but neither domainBlocklist nor domainTokenBudget is set")
-    val domains = pages.select(col(idCol),
-      UrlOps.domain(UrlOps.canonicalize(col(urlCol.get))).as("__domain"))
-    val withDom = extracted.join(domains, Seq(idCol))
-    val blockedDrops = domainBlocklist.map { bl =>
-      withDom.join(broadcast(bl.select(col("domain").as("__domain"))),
-          Seq("__domain"), "left_semi")
-        .select(id.as("__blocked_drop")).localCheckpoint(eager = true)
-    }.getOrElse(pages.limit(0).select(id.as("__blocked_drop")))
-    val s0 = withDom.join(blockedDrops, id === col("__blocked_drop"), "left_anti")
-    val domQuotaDrops =
-      if (domainTokenBudget <= 0) pages.limit(0).select(id.as("__domq_drop"))
-      else QuotaSample.tokenQuota(s0, "__domain", idCol, textCol, domainTokenBudget)
-        .filter(!col("kept")).select(id.as("__domq_drop"))
-        .localCheckpoint(eager = true)
-    // same rationale: the domain survivors feed every curateFull stage
-    val survivors = s0.join(domQuotaDrops, id === col("__domq_drop"), "left_anti")
-      .drop("__domain").localCheckpoint(eager = true)
-    val curated = curateFull(survivors, embeddings, idCol, textCol, sourceCol,
+    val domainStages = urlCol.toSeq.flatMap { url =>
+      require(domainBlocklist.nonEmpty || domainTokenBudget > 0,
+        "urlCol given but neither domainBlocklist nor domainTokenBudget is set")
+      val domains = pages.select(id,
+        UrlOps.domain(UrlOps.canonicalize(col(url))).as("__domain"))
+      def withDomain(in: DataFrame) = in.join(domains, Seq(idCol))
+      Seq(
+        domainBlocklist.map { bl => Stage("blocked_domain", in =>
+          withDomain(in).join(broadcast(bl.select(col("domain").as("__domain"))),
+              Seq("__domain"), "left_semi")
+            .select(id).localCheckpoint(eager = true)) },
+        Option.when(domainTokenBudget > 0)(Stage("over_domain_quota", in =>
+          QuotaSample.tokenQuota(withDomain(in), "__domain", idCol, textCol,
+              domainTokenBudget)
+            .filter(!col("kept")).select(id).localCheckpoint(eager = true)))).flatten
+    }
+    leadingStages.set(domainStages)
+    try curateFull(extracted, embeddings, idCol, textCol, sourceCol,
       langModel = langModel, langAllow = langAllow,
       ruleParams = ruleParams, piiRedactOutput = piiRedactOutput)
-    // dropped pages keep their one audit row, ahead of every downstream
-    // decision class (they never entered the corpus the stages judged)
-    val droppedRows = pages.select(id, col(sourceCol))
-      .join(blockedDrops, id === col("__blocked_drop"), "left")
-      .join(domQuotaDrops, id === col("__domq_drop"), "left")
-      .filter(col("__blocked_drop").isNotNull || col("__domq_drop").isNotNull)
-      .select(id, col(sourceCol),
-        when(col("__blocked_drop").isNotNull, "blocked_domain")
-          .otherwise("over_domain_quota").as("decision"),
-        lit(0L).as("removed_tokens"),
-        lit(null).cast("long").as("n_tokens"),
-        lit(null).cast("string").as("final_md5"))
-    curated.unionByName(droppedRows)
+    finally leadingStages.remove()
   }
 
+  /** The FULL curation pipeline at the r14 operator grain: one stage list
+    * run by [[runStages]], each stage judging the survivors of every
+    * stage before it. In execution order, with the decision each drop
+    * gets:
+    *
+    *   1. `exact_dup` — exact dedup (normalized fingerprint; the lowest
+    *      id of each group survives);
+    *   2. `bad_media` (optional, `media`/`video`/`audio`) — the
+    *      media-integrity gate ([[mediaGate]]);
+    *   3. `media_dup` (optional, `mediaDup`/`audioDup`/`videoDup`) —
+    *      perceptual media near-dup, run before the text stages (a
+    *      duplicate asset's caption must not feed gram statistics twice);
+    *      each arm judges the same survivors ([[armStage]]):
+    *       - image: aHash through the banded Hamming join
+    *         ([[MediaOps.perceptualChecksums]] — one decode pass feeds
+    *         both the band join and the keep rule); each perceptual
+    *         cluster keeps its brightest member (luminance-checksum
+    *         argmax via [[DedupOps.qualityKeepClusters]], ties → min id),
+    *       - audio: envelope hash through the same band core
+    *         ([[MediaOps.audioDupPairs]]); the higher id of a pair drops,
+    *       - video: per-frame perceptual hashes through the
+    *         exact-substring core ([[VideoOps.videoDupSegments]]); clips
+    *         sharing ≥ `videoDupMinFrames` aligned frames pair, higher id
+    *         drops;
+    *   4. `wrong_lang` (optional, `langModel`) — [[langGate]];
+    *   5. `rule_filtered` (optional, `ruleParams`) — [[ruleGate]];
+    *   6. `contaminated` (optional, `benchmark`) — [[decontaminate]];
+    *   7. `empty` — duplicated-SPAN removal: survivor text is REWRITTEN
+    *      (cleaned); a blank doc, or one cleaned down to nothing, is
+    *      `empty`. The later stages judge the CLEANED text;
+    *   8. `low_quality` (optional, `seedFilter`) — the trained NB
+    *      seed-vs-crawl quality gate over the cleaned text;
+    *   9. `near_dup` — near dedup (exact n-gram Jaccard ≥
+    *      `nearDupThreshold`; higher id of each pair drops);
+    *  10. `sem_dup` — semantic dedup over the survivors' embeddings
+    *      (k-means bucketed, SemDeDup keep rule at cosine `semTau`);
+    *  11. `over_quota` — per-source token quota over cleaned token counts;
+    *
+    * and `kept` for the survivors. One row out per input document: (id,
+    * source, decision, removed_tokens, n_tokens, final_md5); n_tokens and
+    * final_md5 are non-null for kept rows only, so the result IS the
+    * survivor corpus fingerprint and the per-stage decision counts in one
+    * relation.
+    *
+    * Scale shape: every stage emits a DROP SET (O(duplicates) id rows,
+    * AQE-broadcastable when small, shuffle-joinable when not — never
+    * forced), and each stage input is one left-anti join against the
+    * union of the drops before it; text crosses an exchange only inside
+    * span removal's bounded reassembly join. Centroids are k×dim driver
+    * values (the [[KMeansOps.fit]] contract). The final assembly is the
+    * docs scan plus two id-keyed left joins. */
   def curateFull(docs: DataFrame, embeddings: DataFrame,
                  idCol: String, textCol: String, sourceCol: String,
                  vecIdCol: String = "vec_id", vecCol: String = "embedding",
@@ -356,8 +513,8 @@ object Pipeline {
                  spanK: Int = 8, minSpan: Int = 20, maxGramOccurrences: Int = 1000,
                  semK: Int = 8, semIters: Int = 2, semTau: Double = 0.35,
                  tokenBudget: Long = 700L,
-                 seedFilter: Option[org.apache.spark.sql.Column] = None,
-                 crawlFilter: Option[org.apache.spark.sql.Column] = None,
+                 seedFilter: Option[Column] = None,
+                 crawlFilter: Option[Column] = None,
                  nbBuckets: Int = 4096, minNbScoreU: Long = 0L,
                  lowQualityFraction: Double = 0.0,
                  media: Option[DataFrame] = None,
@@ -383,372 +540,190 @@ object Pipeline {
                  ruleParams: Option[QualityFilters.RuleParams] = None,
                  piiRedactOutput: Boolean = false): DataFrame = {
     val id = col(idCol)
+    val gates = leadingStages.get ++ Seq(
+      Some(Stage("exact_dup", in => DedupOps.dupIds(in, idCol, textCol)
+        .select(col("__dup_id")).localCheckpoint(eager = true))),
+      mediaGate(idCol, media, mediaCodec, mediaGrid, minMeanLum, maxMeanLum,
+        video, videoContainer, videoEvery, audio, audioCodec),
+      armStage("media_dup", Seq(
+        mediaDup.map { md => (in: DataFrame) =>
+          val assets = inPlay(md, in, idCol)
+          val hx = MediaOps.perceptualChecksums(assets, mediaCodec).toDF()
+            .filter(col("ok")).localCheckpoint(eager = true)
+          val pairs = DedupOps.simhashPairsFromSigs(
+              hx.select(col("doc_id").as("doc"), col("ahash").as("sig")),
+              mediaDupMaxDist)
+            .localCheckpoint(eager = true)
+          DedupOps.qualityKeepClusters(assets.select(col("doc_id")), pairs,
+              hx.select(col("doc_id"), col("checksum")), "doc_id", scoreCol = "checksum")
+            .filter(!col("kept"))
+            .select(col("doc_id")).localCheckpoint(eager = true)
+        },
+        audioDup.map { ad => (in: DataFrame) =>
+          MediaOps.audioDupPairs(inPlay(ad, in, idCol), audioCodec, audioDupMaxDist)
+            .select(col("doc_b")).distinct().localCheckpoint(eager = true)
+        },
+        videoDup.map { vd => (in: DataFrame) =>
+          VideoOps.videoDupSegments(inPlay(vd, in, idCol), videoContainer, mediaCodec,
+              videoDupMinFrames)
+            .select(col("doc_b")).distinct().localCheckpoint(eager = true)
+        })),
+      langGate(langModel, langAllow, idCol, textCol),
+      ruleGate(ruleParams, idCol, textCol),
+      decontaminate(benchmark, benchmarkEmb, contamNgramK, contamCosTau, embeddings,
+        idCol, textCol, vecIdCol, vecCol)).flatten
 
-    // Each stage output is EAGERLY localCheckpoint'ed — the Components
-    // precedent, for the same reason: every stage both feeds the next
-    // stage AND the final assembly, and several stages iterate (k-means)
-    // or self-join (near-dup) over the previous one, so an unbroken
-    // lineage makes the final plan tree grow EXPONENTIALLY in stage count
-    // (measured: the composed query spent ~18 s in Catalyst
-    // analysis/optimization alone at sf0.1 with all data cached — 4× the
-    // actual compute). Checkpointing makes each stage a leaf: compute
-    // runs exactly once, downstream plans stay O(stage). Blocks free
-    // with the session (or an explicit unpersist sweep); a deployment
-    // persists stage outputs as tables — same lifecycle, durable.
-
-    // 1. exact dedup
-    val exactDrops = DedupOps.dupIds(docs, idCol, textCol)
-      .select(col("__dup_id").as("__exact_drop")).localCheckpoint(eager = true)
-    val drops1 = dropCol(exactDrops)
-    val s1 = minusDrops(docs, id, drops1)
-
-    // 1.5 (optional, r16) media-integrity gate — all three modality
-    //     arms ([[mediaGateDrops]]): a doc whose image fails decode /
-    //     is blank / extreme, whose video fails demux / decodes zero
-    //     frames / is a blank stream, or whose audio fails decode / is
-    //     empty / silent, drops as `bad_media` BEFORE the text stages —
-    //     its text must not feed gram statistics any more than its
-    //     pixels feed training. One decode pass per modality, per-
-    //     partition, no shuffle; docs without an asset row pass
-    //     untouched. All None → empty drop set, q112 unchanged.
-    val mediaDrops = mediaGateDrops(s1, idCol,
-      media, mediaCodec, mediaGrid, minMeanLum, maxMeanLum,
-      video, videoContainer, videoEvery, audio, audioCodec,
-      docs.limit(0).select(id.as("__media_drop")))
-    val drops2 = drops1.union(dropCol(mediaDrops))
-    val s1m = minusDrops(docs, id, drops2)
-
-    // 1.6 (optional, r17; r19: three modality arms) perceptual MEDIA
-    //     near-dup — the modality twin of the text near-dup stage, run
-    //     BEFORE the text stages (a duplicate asset's caption must not
-    //     feed gram statistics twice). Each arm judges the SAME
-    //     integrity-survivor set independently (modalities are
-    //     independent duplicate evidence, the [[mediaGateDrops]]
-    //     discipline) and the drops union-DISTINCT as `media_dup`:
-    //      - image (`mediaDup`): aHash through the banded Hamming join
-    //        ([[MediaOps.perceptualDupPairs]]); each perceptual cluster
-    //        keeps its brightest member (luminance-checksum argmax via
-    //        [[DedupOps.qualityKeepClusters]], ties → min id),
-    //      - audio (`audioDup`): envelope hash through the same band
-    //        core ([[MediaOps.audioDupPairs]]); the higher id of every
-    //        pair drops (the text near-dup keep rule — no luminance
-    //        analog for clips),
-    //      - video (`videoDup`): per-frame perceptual hashes through
-    //        the exact-substring core ([[VideoOps.videoDupSegments]]);
-    //        clips sharing ≥ `videoDupMinFrames` aligned frames pair,
-    //        higher id drops.
-    //     One decode pass per arm over asset-bearing in-play docs;
-    //     docs without an asset row pass untouched. All None → empty
-    //     drop set; a single arm keeps its exchange-free drop relation
-    //     (no distinct added), so the prior image-only shape is
-    //     unchanged.
-    def inPlayAssets(assets: DataFrame): DataFrame =
-      assets.select(col(idCol).as("doc_id"), col("content"))
-        .join(s1m.select(id.as("doc_id")), Seq("doc_id"), "left_semi")
-    // independent modality arms over independent asset relations — run
-    // the decode+pair jobs concurrently ([[parEval]]; the image arm's
-    // two checkpoints stay sequential inside its own thunk)
-    val Seq(imageDupDrops, audioDupDrops, videoDupDrops) = parEvalOpt(Seq(
-      mediaDup.map { md => () =>
-        val inPlay = inPlayAssets(md)
-        // ONE decode pass feeds both the band join (ahash) and the keep
-        // rule (checksum) — see [[MediaOps.perceptualChecksums]]: decode
-        // dominates this arm, and the former hashes-then-decodeImages
-        // shape paid it twice per asset
-        val hx = MediaOps.perceptualChecksums(inPlay, mediaCodec).toDF()
-          .filter(col("ok")).localCheckpoint(eager = true)
-        val pairs = DedupOps.simhashPairsFromSigs(
-            hx.select(col("doc_id").as("doc"), col("ahash").as("sig")),
-            mediaDupMaxDist)
+    val pairwise = Seq(
+      // the NB seed-vs-crawl classifier ([[TextOps.seedCrawlNbScores]])
+      // trained on raw doc slices, scoring the CLEANED text; a per-row
+      // scan + broadcast-join cut, so it runs first among the pairwise
+      // stages to shrink their candidate sets. `lowQualityFraction > 0`
+      // drops the WORST fraction by score (rank-based budgeting, the
+      // CCNet-style cut — robust to the score distribution shifting with
+      // corpus size); otherwise `minNbScoreU` is an absolute class-log-odds
+      // floor (score > 0 = "more seed-like than crawl-like"). The rank is
+      // a two-level prefix scan (the Sharding.tokenShards shape) — never
+      // a global single-task window.
+      seedFilter.map { sf => Stage("low_quality", in => {
+        // checkpointed so the rank path's count() and its rank plan read
+        // one materialized leaf instead of re-running the scoring pass;
+        // widenIfNarrow: the NB feature pass (md5 per uni/bigram) is the
+        // one hashing-scale scan of this stage's text
+        val scored = TextOps.seedCrawlNbScores(docs.filter(sf),
+            docs.filter(crawlFilter.getOrElse(!sf)),
+            widenIfNarrow(in.select(id, col("cleaned_text").as(textCol))),
+            idCol, textCol, nbBuckets)
+          .select(id, col("nb_score_u")).localCheckpoint(eager = true)
+        val drops =
+          if (lowQualityFraction > 0.0) {
+            val k = math.floor(lowQualityFraction * scored.count()).toLong
+            if (k <= 0L) scored.limit(0).select(id)
+            else TextOps.rankByScore(scored, col("nb_score_u"), id)
+              .filter(col("__grk") <= k).select(id)
+          } else scored.filter(col("nb_score_u") < minNbScoreU).select(id)
+        drops.localCheckpoint(eager = true)
+      }) },
+      Some(Stage("near_dup", in => DedupOps.jaccardPairs(in, idCol, "cleaned_text",
+          shingleK, nearDupThreshold, maxShingleDF)
+        .select(col("doc_b")).distinct().localCheckpoint(eager = true))),
+      Some(Stage("sem_dup", in => {
+        // centroids fit on the survivor slice — the corpus the stage
+        // actually sees. Checkpointed: fit's init + per-iteration passes
+        // and semDedup's self-join sides otherwise re-run the survivor
+        // semi-join 5×
+        val emb = embeddings.join(in.select(id.as("__sid")),
+            col(vecIdCol) === col("__sid"), "left_semi")
           .localCheckpoint(eager = true)
-        val scores = hx.select(col("doc_id"), col("checksum"))
-        DedupOps.qualityKeepClusters(inPlay.select(col("doc_id")), pairs, scores,
-            "doc_id", scoreCol = "checksum")
-          .filter(!col("kept"))
-          .select(col("doc_id").as("__mdup_drop")).localCheckpoint(eager = true)
-      },
-      audioDup.map { ad => () =>
-        MediaOps.audioDupPairs(inPlayAssets(ad), audioCodec, audioDupMaxDist)
-          .select(col("doc_b").as("__mdup_drop")).distinct()
+        // graceful degradation when the gate cascade shrinks the embedded
+        // survivor set below semK (a heavy rule/lang/quota configuration
+        // can legally do this): fit on min(k, survivors) clusters, or skip
+        // the stage when nothing embedded survives — a crash here would
+        // take a 100 TB run down at its LAST stage. The count is a
+        // metadata read on the checkpointed leaf; min() is the identity
+        // whenever survivors >= semK (every pinned oracle).
+        val n = emb.count()
+        (if (n == 0L) emb.select(col(vecIdCol).as("id"))
+          else KMeansOps.semDedup(emb, vecIdCol, vecCol,
+              KMeansOps.fit(emb, vecIdCol, vecCol, math.min(semK.toLong, n).toInt, semIters),
+              semTau)
+            .filter(!col("kept")).select(col("id")))
           .localCheckpoint(eager = true)
-      },
-      videoDup.map { vd => () =>
-        VideoOps.videoDupSegments(inPlayAssets(vd), videoContainer, mediaCodec,
-            videoDupMinFrames)
-          .select(col("doc_b").as("__mdup_drop")).distinct()
-          .localCheckpoint(eager = true)
-      }))
-    val mediaDupDrops =
-      Seq(imageDupDrops, audioDupDrops, videoDupDrops).flatten match {
-        case Nil => docs.limit(0).select(id.as("__mdup_drop"))
-        case one :: Nil => one
-        case several => several.reduce(_ union _).distinct()
-      }
-    val drops3 = drops2.union(dropCol(mediaDupDrops))
-    val s1d = minusDrops(docs, id, drops3)
+      })),
+      Some(Stage("over_quota", in =>
+        QuotaSample.tokenQuota(in.join(docs.select(id, col(sourceCol)), Seq(idCol)),
+            sourceCol, idCol, "cleaned_text", tokenBudget)
+          .filter(!col("kept")).select(id).localCheckpoint(eager = true)))).flatten
 
-    // 1.7 (optional, r19) trained LANGUAGE gate — the CCNet discipline:
-    //     lang-id runs FIRST among the text-reading stages, so a
-    //     monolingual curation lane never lets other languages feed its
-    //     gram/span/near-dup statistics. `langModel` is the per-snapshot
-    //     multiclass char-trigram NB artifact ([[TextOps.langNbFit]],
-    //     stored/loaded through [[SnapshotStore]] as (lang, k, v) rows);
-    //     survivors whose argmax language falls outside `langAllow` drop
-    //     as `wrong_lang`. Scoring is one trigram pass + a broadcast
-    //     join on C·buckets integer rows — per-row scan work, no text
-    //     in any exchange. A doc with no trigram carries no evidence
-    //     and passes through (it dies as `empty` downstream). None →
-    //     empty drop set, prior shape byte-identical.
-    val langDrops = langModel.map { lm =>
-      TextOps.langNbPredict(lm, s1d.select(id, col(textCol)), idCol, textCol)
-        .filter(!col("pred_lang").isin(langAllow: _*))
-        .select(col(idCol).as("__lang_drop")).localCheckpoint(eager = true)
-    }.getOrElse(docs.limit(0).select(id.as("__lang_drop")))
-    val drops4 = drops3.union(dropCol(langDrops))
-    val s1lg = minusDrops(docs, id, drops4)
-
-    // 1.8 (optional, r19) Gopher/C4 heuristic RULE gate
-    //     ([[QualityFilters.ruleReport]]): the cheapest text stage — a
-    //     per-row scan over raw text, no model, no shuffle — so it runs
-    //     right after the language gate to shrink every pairwise stage's
-    //     candidate set. Judged on RAW text (the published rule sets are
-    //     page-level filters over the crawl, not over span-cleaned
-    //     output); failures drop as `rule_filtered`, each rule's verdict
-    //     one audit `GROUP BY` away via the standalone report. None →
-    //     empty drop set, prior shape byte-identical.
-    val ruleDrops = ruleParams.map { rp =>
-      // single-expression verdict (QualityFilters.rulePass): the pushed
-      // filter evaluates the byte scan ONCE per row — filtering the
-      // ruleReport's rule_pass would inline graft_rule_stats per rule
-      // conjunct (FilterExec has no subexpression elimination)
-      s1lg.select(id, col(textCol))
-        .filter(!QualityFilters.rulePass(col(textCol), rp))
-        .select(id.as("__rule_drop")).localCheckpoint(eager = true)
-    }.getOrElse(docs.limit(0).select(id.as("__rule_drop")))
-    val drops5 = drops4.union(dropCol(ruleDrops))
-    val s1rl = minusDrops(docs, id, drops5)
-
-    // 1.75 (optional, r16) benchmark decontamination: exact/media
-    //     survivors sharing a k-gram shingle with the benchmark
-    //     ([[Decontaminate.contaminatedIds]] — membership implies every
-    //     span hit too, a ≥ minSpan verbatim run shares its k-grams) OR
-    //     whose embedding reaches `contamCosTau` cosine against any
-    //     benchmark vector (the paraphrase grain) drop as `contaminated`
-    //     BEFORE the text stages — eval-suite text must not feed gram
-    //     statistics or survive into training data. The benchmark is an
-    //     eval suite: fixed and small, so the cosine scan is
-    //     benchmark-bounded map-side work (the [[Decontaminate.report]]
-    //     contract). None → empty drop set, prior shape byte-identical.
-    val contamDrops = benchmark.map { b =>
-      // r22: ONE materialized leaf feeds the stage's two grains — `s1rl`
-      // is a lazy anti-join chain over the docs scan, and the former
-      // shape executed that whole chain twice (once inside the n-gram
-      // scan's job, once inside the semantic semi-join's). Text mass is
-      // survivor-bounded — the same order the `cleaned` checkpoint below
-      // already materializes.
-      val inPlay = s1rl.select(id, col(textCol)).localCheckpoint(eager = true)
-      val ng = Decontaminate.contaminatedIds(
-          inPlay, b.select(col(idCol), col(textCol)),
-          idCol, textCol, contamNgramK)
-        .select(col("doc"))
-      val bEmb = benchmarkEmb.getOrElse(sys.error(
-        "benchmark decontamination needs benchmarkEmb for the semantic grain"))
-      val sem = embeddings
-        .join(inPlay.select(id.as("__cid")), col(vecIdCol) === col("__cid"), "left_semi")
-        .select(col(vecIdCol).as("doc"), col(vecCol).as("__cvec"),
-          SimilarityOps.norm(col(vecCol)).as("__cnrm"))
-        .crossJoin(bEmb.select(col(vecCol).as("__bvec"),
-          SimilarityOps.norm(col(vecCol)).as("__bnrm")))
-        .withColumn("__cos", SimilarityOps.dot(col("__cvec"), col("__bvec")) /
-          (col("__cnrm") * col("__bnrm")))
-        .groupBy("doc").agg(max(col("__cos")).as("__mc"))
-        .filter(col("__mc") >= contamCosTau)
-        .select(col("doc"))
-      ng.union(sem).distinct()
-        .select(col("doc").as("__contam_drop")).localCheckpoint(eager = true)
-    }.getOrElse(docs.limit(0).select(id.as("__contam_drop")))
-    val drops6 = drops5.union(dropCol(contamDrops))
-    val s1c = minusDrops(docs, id, drops6)
-
-    // 2. span removal over exact survivors (blank docs fall out here and
-    //    are decided `empty` in the assembly, matching removeDuplicatedSpans'
-    //    non-blank output contract); a doc whose every token sat in a
-    //    duplicated span is `empty` too
-    val cleaned = SpanDedup.removeDuplicatedSpans(s1c, idCol, textCol,
-      spanK, minSpan, maxGramOccurrences).localCheckpoint(eager = true)
-    val s2 = cleaned.filter(col("kept_tokens") > 0)
-
-    // 2.5 (optional, r16) trained-quality gate: the NB seed-vs-crawl
-    //     classifier ([[TextOps.seedCrawlNbScores]]) trained on raw doc
-    //     slices, scoring the span survivors' CLEANED text; docs whose
-    //     integer class log-odds fall below `minNbScoreU` drop as
-    //     `low_quality` BEFORE the pairwise stages — a per-row scan+
-    //     broadcast-join cut is the cheapest stage, so it runs first to
-    //     shrink the near-dup/semantic candidate sets. None → disabled:
-    //     the drop side is an empty relation and the decision class never
-    //     fires (q112's shape and output are byte-identical).
-    //     Two drop semantics: `lowQualityFraction > 0` drops the WORST
-    //     fraction by score (rank-based budgeting, the CCNet-style cut —
-    //     robust to the score distribution shifting with corpus size);
-    //     otherwise `minNbScoreU` is an absolute class-log-odds floor
-    //     (score > 0 = "more seed-like than crawl-like"). The rank is a
-    //     two-level prefix scan (the Sharding.tokenShards shape): range
-    //     partition on (score, id), local row_number, P-row offset
-    //     broadcast — never a global single-task window.
-    val qualityDrops = seedFilter.map { sf =>
-      val crawl = crawlFilter.getOrElse(!sf)
-      // checkpointed so the rank path's count() and its rank plan read
-      // one materialized leaf instead of re-running the scoring pass
-      // widenIfNarrow: the NB feature pass (md5 per uni/bigram) is the
-      // one hashing-scale scan of this stage's text — see the helper doc
-      val scored = TextOps.seedCrawlNbScores(docs.filter(sf), docs.filter(crawl),
-          widenIfNarrow(s2.select(id, col("cleaned_text").as(textCol))),
-          idCol, textCol, nbBuckets)
-        .select(id, col("nb_score_u")).localCheckpoint(eager = true)
-      val drops =
-        if (lowQualityFraction > 0.0) {
-          val k = math.floor(lowQualityFraction * scored.count()).toLong
-          if (k <= 0L) scored.limit(0).select(id)
-          else TextOps.rankByScore(scored, col("nb_score_u"), id)
-            .filter(col("__grk") <= k).select(id)
-        } else scored.filter(col("nb_score_u") < minNbScoreU).select(id)
-      drops.select(id.as("__quality_drop")).localCheckpoint(eager = true)
-    }.getOrElse(docs.limit(0).select(id.as("__quality_drop")))
-    val dropsQ = dropCol(qualityDrops)
-    val s2q = minusDrops(s2, id, dropsQ)
-
-    // 3. near dedup on the cleaned text — the text duplicates must be
-    //    judged on what stage 2 kept, not the raw crawl
-    val nearDrops = DedupOps.jaccardPairs(s2q, idCol, "cleaned_text",
-        shingleK, nearDupThreshold, maxShingleDF)
-      .select(col("doc_b").as("__near_drop")).distinct().localCheckpoint(eager = true)
-    val dropsQN = dropsQ.union(dropCol(nearDrops))
-    val s3 = minusDrops(s2, id, dropsQN)
-
-    // 4. semantic dedup over the surviving docs' embeddings (centroids
-    //    fit on the survivor slice — the corpus the stage actually sees)
-    // checkpointed too: fit's init + per-iteration passes and semDedup's
-    // self-join sides otherwise re-run the survivor semi-join 5×
-    val emb3 = embeddings.join(s3.select(id.as("__sid")),
-        col(vecIdCol) === col("__sid"), "left_semi")
-      .localCheckpoint(eager = true)
-    // graceful degradation when the gate cascade shrinks the embedded
-    // survivor set below semK (a heavy rule/lang/quota configuration can
-    // legally do this): fit on min(k, survivors) clusters, or skip the
-    // stage when nothing embedded survives — a crash here would take a
-    // 100 TB run down at its LAST stage. The count is a metadata read on
-    // the checkpointed leaf. Fixtures with survivors >= semK (every
-    // pinned oracle) are byte-identical: min() is the identity there.
-    val nEmb3 = emb3.count()
-    val semDrops = (if (nEmb3 == 0L) emb3.select(col(vecIdCol).as("id"))
-      else {
-        val cent = KMeansOps.fit(emb3, vecIdCol, vecCol,
-          math.min(semK.toLong, nEmb3).toInt, semIters)
-        KMeansOps.semDedup(emb3, vecIdCol, vecCol, cent, semTau)
-          .filter(!col("kept")).select(col("id"))
-      }).select(col("id").as("__sem_drop"))
-      .localCheckpoint(eager = true)
-    val s4 = minusDrops(s2, id, dropsQN.union(dropCol(semDrops)))
-
-    // 5. per-source token quota over cleaned token counts
-    val s4src = s4.join(docs.select(id, col(sourceCol)), Seq(idCol))
-    val quotaDrops = QuotaSample.tokenQuota(s4src, sourceCol, idCol,
-        "cleaned_text", tokenBudget)
-      .filter(!col("kept")).select(id.as("__quota_drop"))
-      .localCheckpoint(eager = true)
-
-    // assembly: every input doc, one decision, survivor fingerprint.
-    // ONE drop-verdict join (r21) instead of ten: each drop leaf is
-    // tagged with its stage's PRIORITY, the union aggregates to the
-    // min priority per id (exactly the old when-chain's first-match
-    // order — a doc in several sets reads its earliest stage), and the
-    // docs scan joins that single relation plus the cleaned leaf. The
-    // former chain of ten sequential left joins built ten broadcast
-    // relations per run (and at scale would have shuffled the doc
-    // relation up to ten times); this is two. The `empty` class keeps
-    // its slot BETWEEN contaminated (5) and low_quality (6): a doc
-    // dropped at a stage ≤ 5 never reached span removal (no cleaned
-    // row), so the ≤ 5 guard must fire before the cleaned-null check,
-    // and quality/near/sem/quota docs all carry kept_tokens > 0 rows.
-    val dropTags = Seq(
-      exactDrops -> 0, mediaDrops -> 1, mediaDupDrops -> 2, langDrops -> 3,
-      ruleDrops -> 4, contamDrops -> 5, qualityDrops -> 6, nearDrops -> 7,
-      semDrops -> 8, quotaDrops -> 9)
-    val dropVerdict = dropTags.map { case (df, p) =>
-        df.select(col(df.columns.head).as("__d_id"), lit(p).as("__d_p"))
-      }.reduce(_ union _)
-      .groupBy("__d_id").agg(min("__d_p").as("__d_p"))
-    val dropName = when(col("__d_p") === 0, "exact_dup")
-      .when(col("__d_p") === 1, "bad_media")
-      .when(col("__d_p") === 2, "media_dup")
-      .when(col("__d_p") === 3, "wrong_lang")
-      .when(col("__d_p") === 4, "rule_filtered")
-      .when(col("__d_p") === 5, "contaminated")
-      .when(col("__d_p") === 6, "low_quality")
-      .when(col("__d_p") === 7, "near_dup")
-      .when(col("__d_p") === 8, "sem_dup")
-      .when(col("__d_p") === 9, "over_quota")
-    docs.select(id, col(sourceCol))
-      .join(dropVerdict, id === col("__d_id"), "left")
-      .join(cleaned.select(id, col("kept_tokens"), col("removed_tokens"),
-        col("cleaned_text")), Seq(idCol), "left")
-      .withColumn("decision",
-        when(col("__d_p") <= 5, dropName)
-          .when(col("cleaned_text").isNull || col("kept_tokens") === 0L, "empty")
-          .when(col("__d_p").isNotNull, dropName)
-          .otherwise("kept"))
-      .select(id, col(sourceCol), col("decision"),
-        coalesce(col("removed_tokens"), lit(0L)).as("removed_tokens"),
-        when(col("decision") === "kept", col("kept_tokens")).as("n_tokens"),
-        when(col("decision") === "kept",
-          md5(outputText(col("cleaned_text"), piiRedactOutput).cast("binary")))
-          .as("final_md5"))
+    runStages(docs.select(id, col(sourceCol)), docs, idCol, gates,
+        in => SpanDedup.removeDuplicatedSpans(in, idCol, textCol,
+          spanK, minSpan, maxGramOccurrences).localCheckpoint(eager = true),
+        pairwise)
+      .select(Seq(id, col(sourceCol), col("decision")) ++ releasedCols(piiRedactOutput): _*)
   }
 
-  /** The released text of a kept document: identity, or PII-redacted
-    * ([[Privacy.redact]] — email → IPv4 → phone, the q62 pattern tier)
-    * when the caller opts in. Redaction is an OUTPUT transform only:
-    * every stage judges the original text (a masked token must not
-    * change dedup/gram statistics), and counts stay pre-redaction. */
-  private def outputText(cleaned: org.apache.spark.sql.Column,
-                         piiRedact: Boolean): org.apache.spark.sql.Column =
-    if (piiRedact) Privacy.redact(cleaned) else cleaned
+  /** Both sides of an incremental media-dup arm, or neither. */
+  private def bothSides(arm: String, history: Option[DataFrame],
+                        batch: Option[DataFrame]): Option[(DataFrame, DataFrame)] =
+    (history, batch) match {
+      case (Some(h), Some(b)) => Some((h, b))
+      case (None, None) => None
+      case _ => sys.error(
+        s"incremental $arm dedup needs BOTH ${arm}DupHistory and ${arm}DupBatch")
+    }
+
+  /** An incremental perceptual-hash arm (image aHash or audio envelope
+    * hash, by `hash`): a batch doc drops when its hash sits within
+    * `maxDist` of ANY history hash ([[DedupOps.simhashCrossPairsFromSigs]]
+    * — the history band relation is snapshot-persistable, so per-batch
+    * cost is the batch's bands only) or of a SMALLER-id batch mate's. The
+    * batch hashes are materialized once; they feed both joins. */
+  private def hashDupArm(history: DataFrame, batchAssets: DataFrame, idCol: String,
+                         maxDist: Int)(hash: DataFrame => DataFrame): DataFrame = {
+    def sigs(assets: DataFrame) = hash(assets).filter(col("ok"))
+      .select(col("doc_id").as("doc"), col("ahash").as("sig"))
+    val hb = sigs(batchAssets).localCheckpoint(eager = true)
+    val hh = sigs(history.select(col(idCol).as("doc_id"), col("content")))
+    val cross = DedupOps.simhashCrossPairsFromSigs(hb, hh, maxDist).select(col("doc_a"))
+    val mates = DedupOps.simhashPairsFromSigs(hb, maxDist).select(col("doc_b").as("doc_a"))
+    cross.union(mates).distinct().localCheckpoint(eager = true)
+  }
 
   /** INCREMENTAL curation — [[curateFull]]'s ingest-time twin: a new
-    * crawl batch judged against the ADMITTED corpus, stage by stage with
-    * the cross/incremental operator variants (history is immutable —
-    * only batch rows are decided):
+    * crawl batch judged against the ADMITTED corpus with the
+    * cross/incremental operator variants (history is immutable — only
+    * batch rows are decided). One stage list run by [[runStages]] over
+    * the admitted batch; in execution order, with decision names:
     *
-    *   1. exact-vs-history ([[IncrementalDedup.dedupAgainstHistory]]:
-    *      bloom-probe + exact verify — exactly the anti-join),
-    *   1.5. (optional, `media`/`video`/`audio`) media-integrity gate at
-    *      ingest grain ([[mediaGateDrops]], batch docs only) →
-    *      `bad_media`,
-    *   2. cross-span CONTAMINATION removal ([[SpanDedup.removeCrossSpans]]:
-    *      batch copies of ≥ minSpan verbatim history runs are cut; a
-    *      batch doc cleaned to nothing is `empty`),
-    *   2.5. (optional, `nbModel`) trained-quality gate against the
-    *      snapshot's stored NB model — batch docs scoring below
-    *      `minNbScoreU` on their CLEANED text → `low_quality`,
-    *   3. cross near-dup on the CLEANED batch text vs history
-    *      ([[DedupOps.crossMinhashPairs]]),
-    *   4. cross semantic dedup ([[KMeansOps.incrementalSemDedup]] against
-    *      centroids fit on — or passed in from — the history snapshot).
+    *   1. `exact_dup` — exact vs history
+    *      ([[IncrementalDedup.dedupAgainstHistory]]: bloom-probe + exact
+    *      verify — exactly the anti-join); read from the admitted leaf,
+    *      which is the base of every later stage;
+    *   2. `bad_media` (optional, `media`/`video`/`audio`) — the
+    *      media-integrity gate ([[mediaGate]]) over batch docs only;
+    *   3. `media_dup` (optional, a `*DupHistory`/`*DupBatch` pair per
+    *      arm — both or neither) — a batch doc whose asset is a perceptual
+    *      duplicate of ANY history asset (whose copy survives) or of a
+    *      smaller-id batch mate's; the arms judge the same batch
+    *      survivors ([[armStage]]):
+    *       - image: aHash bands ([[hashDupArm]]),
+    *       - audio: envelope hash ([[MediaOps.audioHashes]],
+    *         [[hashDupArm]]),
+    *       - video: per-frame hashes through the exact-substring core's
+    *         cross twin ([[SpanDedup.crossSpansFromGrams]], k = 1) for
+    *         history segments and its self form for batch mates —
+    *         ≥ `videoDupMinFrames` aligned shared frames drop the batch
+    *         copy;
+    *   4. `wrong_lang` (optional, `langModel`) — [[langGate]] with the
+    *      per-snapshot model;
+    *   5. `rule_filtered` (optional, `ruleParams`) — [[ruleGate]];
+    *   6. `contaminated` (optional, `benchmark`) — [[decontaminate]]
+    *      against the SAME fixed eval suite (history contamination is
+    *      stage 7's job);
+    *   7. `empty` — cross-span CONTAMINATION removal
+    *      ([[SpanDedup.removeCrossSpans]]: batch copies of ≥ minSpan
+    *      verbatim history runs are cut; a batch doc cleaned to nothing
+    *      is `empty`);
+    *   8. `low_quality` (optional, `nbModel`) — the trained quality gate
+    *      against the snapshot's stored NB model on the CLEANED text;
+    *   9. `near_dup` — cross near-dup of the cleaned batch text vs
+    *      history ([[DedupOps.crossMinhashPairs]]);
+    *  10. `sem_dup` — cross semantic dedup
+    *      ([[KMeansOps.incrementalSemDedup]] against centroids fit on —
+    *      or passed in from — the history snapshot);
     *
-    * One row per BATCH document: (id, decision ∈ {exact_dup, bad_media,
-    * media_dup, wrong_lang, rule_filtered, contaminated, empty,
-    * low_quality, near_dup, sem_dup, kept}, removed_tokens, n_tokens,
-    * final_md5).
-    * Intra-batch dedup and quotas are deliberately out of scope — run
-    * [[curateFull]] over the admitted batch for those; this operator is
-    * the contamination gate against history.
+    * and `kept` for the survivors. One row per BATCH document: (id,
+    * decision, removed_tokens, n_tokens, final_md5), plus the released
+    * text when `keepCleanedText`. Intra-batch dedup and quotas are
+    * deliberately out of scope — run [[curateFull]] over the admitted
+    * batch for those; this operator is the contamination gate against
+    * history.
     *
     * Snapshot artifacts: `historyBloom` (the q64 lifecycle) and
     * `centroids` (the q101/q103 lifecycle) are per-snapshot builds a
     * deployment loads from [[SnapshotStore]]; None builds them inline.
     * Per-batch cost = batch passes + equi-joins into history relations —
     * never batch × history. Stage outputs are eagerly checkpointed (the
-    * [[curateFull]] plan-growth rationale). */
+    * [[Stage]] plan-growth rationale). */
   def curateIncremental(history: DataFrame, batch: DataFrame,
                         embeddings: DataFrame,
                         idCol: String, textCol: String,
@@ -792,15 +767,14 @@ object Pipeline {
                         historyFps: Option[DataFrame] = None): DataFrame = {
     val id = col(idCol)
 
-    // 1. exact vs history (bloom candidates + exact verify = the anti-join).
-    //    `historyFps` (one column `fp`) extends the drop set with
-    //    PRE-redaction fingerprints of admitted docs whose persisted text
-    //    is PII-masked (r19 advice): a re-ingested duplicate of an admitted
-    //    PII-bearing doc must still read exact_dup even though the store's
-    //    released text no longer equals it. The relation is bounded by the
-    //    admitted-history row count (16 B digests, no text), so the join
-    //    broadcasts at typical history sizes and shuffles digests, never
-    //    documents, beyond that.
+    // exact vs history. `historyFps` (one column `fp`) extends the drop
+    // set with PRE-redaction fingerprints of admitted docs whose persisted
+    // text is PII-masked (r19 advice): a re-ingested duplicate of an
+    // admitted PII-bearing doc must still read exact_dup even though the
+    // store's released text no longer equals it. The relation is bounded
+    // by the admitted-history row count (16 B digests, no text), so the
+    // join broadcasts at typical history sizes and shuffles digests, never
+    // documents, beyond that.
     val s1base = IncrementalDedup.dedupAgainstHistory(batch, history, idCol,
       textCol, historyBlob = historyBloom)
     val s1 = historyFps.fold(s1base) { fps =>
@@ -809,295 +783,103 @@ object Pipeline {
       }
       .localCheckpoint(eager = true)
 
-    // 1.5 (optional, r16) media-integrity gate — [[curateFull]]'s stage
-    //     at ingest grain: only BATCH docs get their assets decoded
-    //     (history was gated at its own admission), all three modality
-    //     arms via [[mediaGateDrops]], drops as `bad_media` before any
-    //     text stage. All None → empty drop set, q115 byte-identical.
-    val mediaDrops = mediaGateDrops(s1, idCol,
-      media, mediaCodec, mediaGrid, minMeanLum, maxMeanLum,
-      video, videoContainer, videoEvery, audio, audioCodec,
-      batch.limit(0).select(id.as("__media_drop")))
-    // cumulative drop union per stage input (r21) — the curateFull shape:
-    // one anti-join from the s1 leaf instead of a growing chain
-    val drops1 = dropCol(mediaDrops)
-    val s1v = minusDrops(s1, id, drops1)
+    // both-or-neither arm validation runs here, on the calling thread,
+    // before any stage job
+    val gates = Seq(
+      mediaGate(idCol, media, mediaCodec, mediaGrid, minMeanLum, maxMeanLum,
+        video, videoContainer, videoEvery, audio, audioCodec),
+      armStage("media_dup", Seq(
+        bothSides("media", mediaDupHistory, mediaDupBatch).map { case (h, b) =>
+          (in: DataFrame) => hashDupArm(h, inPlay(b, in, idCol), idCol, mediaDupMaxDist)(
+            MediaOps.perceptualHashes(_, mediaCodec).toDF())
+        },
+        bothSides("audio", audioDupHistory, audioDupBatch).map { case (h, b) =>
+          (in: DataFrame) => hashDupArm(h, inPlay(b, in, idCol), idCol, audioDupMaxDist)(
+            MediaOps.audioHashes(_, audioCodec).toDF())
+        },
+        bothSides("video", videoDupHistory, videoDupBatch).map { case (h, b) =>
+          (in: DataFrame) =>
+            // batch frames hashed ONCE (they feed both the cross and the
+            // mate join); history as its own relation — a snapshot-
+            // persistable artifact, like the image band relation
+            val bg = VideoOps.frameHashes(inPlay(b, in, idCol), videoContainer,
+              mediaCodec).localCheckpoint(eager = true)
+            val hg = VideoOps.frameHashes(h.select(col(idCol).as("doc_id"), col("content")),
+              videoContainer, mediaCodec)
+            val cross = SpanDedup.crossSpansFromGrams(hg, bg, k = 1,
+                minSpan = videoDupMinFrames, maxGramOccurrences = 1000)
+              .select(col("right_id").as("doc_a"))
+            val mates = SpanDedup.duplicatedSpansFromGrams(bg, k = 1,
+                minSpan = videoDupMinFrames, maxGramOccurrences = 1000)
+              .select(col("doc_b").as("doc_a"))
+            cross.union(mates).distinct().localCheckpoint(eager = true)
+        })),
+      langGate(langModel, langAllow, idCol, textCol),
+      ruleGate(ruleParams, idCol, textCol),
+      decontaminate(benchmark, benchmarkEmb, contamNgramK, contamCosTau, embeddings,
+        idCol, textCol, vecIdCol, vecCol)).flatten
 
-    // 1.6 (optional, r17; r19: three modality arms) incremental
-    //     perceptual MEDIA dedup — the ingest twin of [[curateFull]]'s
-    //     stage 1.6 under the incremental keep rule: a batch doc drops
-    //     as `media_dup` when its asset is a perceptual duplicate of
-    //     ANY history asset (history is immutable — its copy survives)
-    //     or of a SMALLER-id batch mate's. Per arm:
-    //      - image: aHash bands, candidates from the banded cross join
-    //        ([[DedupOps.simhashCrossPairsFromSigs]] — the history band
-    //        relation is snapshot-persistable, so per-batch cost is the
-    //        batch's bands only),
-    //      - audio: envelope hash ([[MediaOps.audioHashes]]) through
-    //        the same cross + batch-mate band joins,
-    //      - video: per-frame hashes through the exact-substring core's
-    //        cross twin ([[SpanDedup.crossSpansFromGrams]], k = 1) for
-    //        history segments and its self form for batch mates —
-    //        ≥ `videoDupMinFrames` aligned shared frames drop the batch
-    //        copy.
-    //     Arms judge the SAME in-play batch independently; drops
-    //     union-DISTINCT. Each arm needs BOTH its history and batch
-    //     sides; all None → empty drop set, prior shape byte-identical.
-    def inPlayBatchAssets(assets: DataFrame): DataFrame =
-      assets.select(col(idCol).as("doc_id"), col("content"))
-        .join(s1v.select(id.as("doc_id")), Seq("doc_id"), "left_semi")
-    // arm argument validation stays on the calling thread; the arm BODIES
-    // (independent decode/hash/pair jobs) run concurrently ([[parEval]])
-    val imageDupThunk = (mediaDupHistory, mediaDupBatch) match {
-      case (Some(hist), Some(ba)) => Some(() => {
-        val hb = MediaOps.perceptualHashes(inPlayBatchAssets(ba), mediaCodec).toDF()
-          .filter(col("ok"))
-          .select(col("doc_id").as("doc"), col("ahash").as("sig"))
+    val pairwise = Seq(
+      // `nbModel` is the per-snapshot artifact (fit on the admitted
+      // corpus's seed/crawl slices via [[TextOps.seedCrawlNbFit]],
+      // stored/loaded through [[SnapshotStore]] as long pairs): every
+      // batch is scored against the SAME fixed model, so admission
+      // decisions never drift with batch composition. Absolute threshold
+      // (not the rank cut): a per-batch quantile would admit a different
+      // quality floor per batch.
+      nbModel.map { m => Stage("low_quality", in =>
+        TextOps.nbScore(m, widenIfNarrow(in.select(id, col("cleaned_text").as(textCol))),
+            idCol, textCol)
+          .filter(col("nb_score_u") < minNbScoreU)
+          .select(id).localCheckpoint(eager = true)) },
+      // history's raw text vs the batch's CLEANED text (both sides under
+      // crossMinhashPairs' shared union hot list)
+      Some(Stage("near_dup", in => DedupOps.crossMinhashPairs(
+          history.select(id, col(textCol)),
+          in.select(id, col("cleaned_text").as(textCol)),
+          idCol, textCol, shingleK, nearDupThreshold, maxShingleDF = maxShingleDF)
+        .select(col("doc_b")).distinct().localCheckpoint(eager = true))),
+      Some(Stage("sem_dup", in => {
+        // two independent embedding slices — materialize concurrently
+        val Seq(embHist, embBatch) = parEval(Seq(
+          () => embeddings.join(history.select(id.as("__hid")),
+              col(vecIdCol) === col("__hid"), "left_semi")
+            .localCheckpoint(eager = true),
+          () => embeddings.join(in.select(id.as("__sid")),
+              col(vecIdCol) === col("__sid"), "left_semi")
+            .localCheckpoint(eager = true)))
+        // inline-fit clamp: the curateFull sem stage's graceful
+        // degradation — a small admitted history must not crash the
+        // ingest gate. A provided snapshot artifact (the production path)
+        // skips the count.
+        val cent = centroids.getOrElse {
+          val nHist = embHist.count()
+          if (nHist == 0L) Array.empty[Array[Double]]
+          else KMeansOps.fit(embHist, vecIdCol, vecCol,
+            math.min(semK.toLong, nHist).toInt, semIters)
+        }
+        // empty history (no centroids, nothing admitted yet) => nothing
+        // to dup against: the drop set is EMPTY
+        (if (cent.isEmpty) embBatch.limit(0).select(col(vecIdCol).as("id"))
+          else KMeansOps.incrementalSemDedup(embHist, embBatch,
+              vecIdCol, vecCol, cent, semTau)
+            .filter(!col("kept")).select(col("id")))
           .localCheckpoint(eager = true)
-        val hh = MediaOps.perceptualHashes(
-            hist.select(col(idCol).as("doc_id"), col("content")), mediaCodec).toDF()
-          .filter(col("ok"))
-          .select(col("doc_id").as("doc"), col("ahash").as("sig"))
-        val cross = DedupOps.simhashCrossPairsFromSigs(hb, hh, mediaDupMaxDist)
-          .select(col("doc_a"))
-        val mates = DedupOps.simhashPairsFromSigs(hb, mediaDupMaxDist)
-          .select(col("doc_b").as("doc_a"))
-        cross.union(mates).distinct()
-          .select(col("doc_a").as("__mdup_drop")).localCheckpoint(eager = true)
-      })
-      case (None, None) => None
-      case _ => sys.error(
-        "incremental media dedup needs BOTH mediaDupHistory and mediaDupBatch")
-    }
-    val audioDupThunk = (audioDupHistory, audioDupBatch) match {
-      case (Some(hist), Some(ba)) => Some(() => {
-        val hb = MediaOps.audioHashes(inPlayBatchAssets(ba), audioCodec).toDF()
-          .filter(col("ok"))
-          .select(col("doc_id").as("doc"), col("ahash").as("sig"))
-          .localCheckpoint(eager = true)
-        val hh = MediaOps.audioHashes(
-            hist.select(col(idCol).as("doc_id"), col("content")), audioCodec).toDF()
-          .filter(col("ok"))
-          .select(col("doc_id").as("doc"), col("ahash").as("sig"))
-        val cross = DedupOps.simhashCrossPairsFromSigs(hb, hh, audioDupMaxDist)
-          .select(col("doc_a"))
-        val mates = DedupOps.simhashPairsFromSigs(hb, audioDupMaxDist)
-          .select(col("doc_b").as("doc_a"))
-        cross.union(mates).distinct()
-          .select(col("doc_a").as("__mdup_drop")).localCheckpoint(eager = true)
-      })
-      case (None, None) => None
-      case _ => sys.error(
-        "incremental audio dedup needs BOTH audioDupHistory and audioDupBatch")
-    }
-    val videoDupThunk = (videoDupHistory, videoDupBatch) match {
-      case (Some(hist), Some(ba)) => Some(() => {
-        // frame-hash relations: batch hashed ONCE (feeds both the cross
-        // and the mate join), history as its own relation — a snapshot-
-        // persistable artifact, like the image band relation
-        val bg = VideoOps.frameHashes(inPlayBatchAssets(ba), videoContainer,
-          mediaCodec).localCheckpoint(eager = true)
-        val hg = VideoOps.frameHashes(
-          hist.select(col(idCol).as("doc_id"), col("content")),
-          videoContainer, mediaCodec)
-        val cross = SpanDedup.crossSpansFromGrams(hg, bg, k = 1,
-            minSpan = videoDupMinFrames, maxGramOccurrences = 1000)
-          .select(col("right_id").as("doc_a"))
-        val mates = SpanDedup.duplicatedSpansFromGrams(bg, k = 1,
-            minSpan = videoDupMinFrames, maxGramOccurrences = 1000)
-          .select(col("doc_b").as("doc_a"))
-        cross.union(mates).distinct()
-          .select(col("doc_a").as("__mdup_drop")).localCheckpoint(eager = true)
-      })
-      case (None, None) => None
-      case _ => sys.error(
-        "incremental video dedup needs BOTH videoDupHistory and videoDupBatch")
-    }
-    val Seq(imageDupDrops, audioDupDrops, videoDupDrops) =
-      parEvalOpt(Seq(imageDupThunk, audioDupThunk, videoDupThunk))
-    val mediaDupDrops =
-      Seq(imageDupDrops, audioDupDrops, videoDupDrops).flatten match {
-        case Nil => batch.limit(0).select(id.as("__mdup_drop"))
-        case one :: Nil => one
-        case several => several.reduce(_ union _).distinct()
-      }
-    val drops2 = drops1.union(dropCol(mediaDupDrops))
-    val s1pd = minusDrops(s1, id, drops2)
+      }))).flatten
 
-    // 1.7 (optional, r19) trained LANGUAGE gate at ingest grain —
-    //     [[curateFull]]'s stage 1.7 with the per-SNAPSHOT model
-    //     artifact (fit on the admitted corpus's labels via
-    //     [[TextOps.langNbFit]], the stored-model discipline of the NB
-    //     quality gate): batch docs whose argmax language falls outside
-    //     `langAllow` drop as `wrong_lang` before any history stage.
-    //     None → empty drop set, prior shape byte-identical.
-    val langDrops = langModel.map { lm =>
-      TextOps.langNbPredict(lm, s1pd.select(id, col(textCol)), idCol, textCol)
-        .filter(!col("pred_lang").isin(langAllow: _*))
-        .select(col(idCol).as("__lang_drop")).localCheckpoint(eager = true)
-    }.getOrElse(batch.limit(0).select(id.as("__lang_drop")))
-    val drops3 = drops2.union(dropCol(langDrops))
-    val s1lg = minusDrops(s1, id, drops3)
-
-    // 1.8 (optional, r19) Gopher/C4 heuristic RULE gate at ingest grain
-    //     — [[curateFull]]'s stage 1.8 judged per batch: the rule set is
-    //     a fixed page-level contract (thresholds travel with the
-    //     deployment, not the data), so admission decisions can't drift
-    //     with batch composition by construction. Raw batch text,
-    //     failures drop as `rule_filtered` before any history stage.
-    //     None → empty drop set, prior shape byte-identical.
-    val ruleDrops = ruleParams.map { rp =>
-      // single-expression verdict — see curateFull's stage 1.8 note
-      s1lg.select(id, col(textCol))
-        .filter(!QualityFilters.rulePass(col(textCol), rp))
-        .select(id.as("__rule_drop")).localCheckpoint(eager = true)
-    }.getOrElse(batch.limit(0).select(id.as("__rule_drop")))
-    val drops4 = drops3.union(dropCol(ruleDrops))
-    val s1rl = minusDrops(s1, id, drops4)
-
-    // 1.9 (optional, r16) eval-suite decontamination — the ingest twin
-    //     of [[curateFull]]'s stage 1.75, judged per batch against the
-    //     SAME fixed benchmark (k-gram membership implies span hits; the
-    //     cosine grain catches paraphrases). History contamination is
-    //     stage 2's cross-span job; this stage guards the eval suite,
-    //     whose text must not enter the corpus store at any grain.
-    //     None → empty drop set, prior shape byte-identical.
-    val contamDrops = benchmark.map { b =>
-      // r22: ONE materialized leaf feeds the stage's two grains (the
-      // curateFull stage's rationale — the former shape executed the
-      // s1rl anti-join chain once per grain). widenIfNarrow: the k-gram
-      // shingle pass (hash per window) is a hashing-scale scan — the
-      // helper's case; the leaf's own partition count is now the honest
-      // probe (it IS materialized).
-      val inPlay = s1rl.select(id, col(textCol)).localCheckpoint(eager = true)
-      val ng = Decontaminate.contaminatedIds(
-          widenIfNarrow(inPlay),
-          b.select(col(idCol), col(textCol)),
-          idCol, textCol, contamNgramK)
-        .select(col("doc"))
-      val bEmb = benchmarkEmb.getOrElse(sys.error(
-        "benchmark decontamination needs benchmarkEmb for the semantic grain"))
-      val sem = embeddings
-        .join(inPlay.select(id.as("__cid")), col(vecIdCol) === col("__cid"), "left_semi")
-        .select(col(vecIdCol).as("doc"), col(vecCol).as("__cvec"),
-          SimilarityOps.norm(col(vecCol)).as("__cnrm"))
-        .crossJoin(bEmb.select(col(vecCol).as("__bvec"),
-          SimilarityOps.norm(col(vecCol)).as("__bnrm")))
-        .withColumn("__cos", SimilarityOps.dot(col("__cvec"), col("__bvec")) /
-          (col("__cnrm") * col("__bnrm")))
-        .groupBy("doc").agg(max(col("__cos")).as("__mc"))
-        .filter(col("__mc") >= contamCosTau)
-        .select(col("doc"))
-      ng.union(sem).distinct()
-        .select(col("doc").as("__contam_drop")).localCheckpoint(eager = true)
-    }.getOrElse(batch.limit(0).select(id.as("__contam_drop")))
-    val drops5 = drops4.union(dropCol(contamDrops))
-    val s1c = minusDrops(s1, id, drops5)
-
-    // 2. cross-span contamination removal vs history
-    val cleaned = SpanDedup.removeCrossSpans(history, s1c, idCol, textCol,
-      spanK, minSpan, maxGramOccurrences).localCheckpoint(eager = true)
-    val s2 = cleaned.filter(col("kept_tokens") > 0)
-
-    // 2.5 (optional, r16) trained-quality gate against the SNAPSHOT
-    //     model: `nbModel` is the per-snapshot artifact (fit on the
-    //     admitted corpus's seed/crawl slices via
-    //     [[TextOps.seedCrawlNbFit]], stored/loaded through
-    //     [[SnapshotStore]] as long pairs) — the ingest stream scores
-    //     every batch against the SAME fixed model, so admission
-    //     decisions never drift with batch composition (the centroid
-    //     discipline, applied to quality). Absolute threshold here (not
-    //     the rank cut): a per-batch quantile would admit a different
-    //     quality floor per batch. None → disabled, q115 byte-identical.
-    val qualityDrops = nbModel.map { m =>
-      TextOps.nbScore(m,
-          widenIfNarrow(s2.select(id, col("cleaned_text").as(textCol))),
-          idCol, textCol)
-        .filter(col("nb_score_u") < minNbScoreU)
-        .select(id.as("__quality_drop")).localCheckpoint(eager = true)
-    }.getOrElse(batch.limit(0).select(id.as("__quality_drop")))
-    val dropsQ = dropCol(qualityDrops)
-    val s2q = minusDrops(s2, id, dropsQ)
-
-    // 3. cross near-dup: history's raw text vs the batch's CLEANED text
-    //    (both sides under crossMinhashPairs' shared union hot list)
-    val nearDrops = DedupOps.crossMinhashPairs(
-        history.select(id, col(textCol)),
-        s2q.select(id, col("cleaned_text").as(textCol)),
-        idCol, textCol, shingleK, nearDupThreshold, maxShingleDF = maxShingleDF)
-      .select(col("doc_b").as("__near_drop")).distinct()
-      .localCheckpoint(eager = true)
-    val s3 = minusDrops(s2, id, dropsQ.union(dropCol(nearDrops)))
-
-    // 4. cross semantic dedup: batch survivors' embeddings vs the history
-    //    snapshot's (centroids fit on history — the stored-artifact side)
-    // two independent embedding slices — materialize concurrently
-    val Seq(embHist, embBatch) = parEval(Seq(
-      () => embeddings.join(history.select(id.as("__hid")),
-          col(vecIdCol) === col("__hid"), "left_semi")
-        .localCheckpoint(eager = true),
-      () => embeddings.join(s3.select(id.as("__sid")),
-          col(vecIdCol) === col("__sid"), "left_semi")
-        .localCheckpoint(eager = true)))
-    // inline-fit clamp: same graceful degradation as curateFull's stage
-    // 4 — a small admitted history must not crash the ingest gate. A
-    // provided snapshot artifact (the production path) skips the count.
-    val cent = centroids.getOrElse {
-      val nHist = embHist.count()
-      if (nHist == 0L) Array.empty[Array[Double]]
-      else KMeansOps.fit(embHist, vecIdCol, vecCol,
-        math.min(semK.toLong, nHist).toInt, semIters)
-    }
-    // empty history (no centroids, nothing admitted yet) => nothing to
-    // dup against: the drop set is EMPTY, every batch vector survives
-    val semDrops = (if (cent.isEmpty) embBatch.limit(0).select(col(vecIdCol).as("id"))
-      else KMeansOps.incrementalSemDedup(embHist, embBatch,
-          vecIdCol, vecCol, cent, semTau)
-        .filter(!col("kept")).select(col("id")))
-      .select(col("id").as("__sem_drop"))
-      .localCheckpoint(eager = true)
-
-    // assembly over the batch. `keepCleanedText` adds the survivor text
-    // itself (kept rows only) — what an ingest sink APPENDS to the
-    // corpus store ([[graft.streaming.StreamingDedup.curateSink]]);
-    // the q115 oracle shape carries only its md5.
-    // one drop-verdict join (r21) — the curateFull assembly shape; the
-    // admitted (s1) join keeps its separate slot because its verdict
-    // reads from NULL (not-admitted = exact_dup), and `empty` keeps its
-    // place between contaminated (5) and low_quality (6)
-    val dropTags = Seq(
-      mediaDrops -> 1, mediaDupDrops -> 2, langDrops -> 3,
-      ruleDrops -> 4, contamDrops -> 5, qualityDrops -> 6,
-      nearDrops -> 7, semDrops -> 8)
-    val dropVerdict = dropTags.map { case (df, p) =>
-        df.select(col(df.columns.head).as("__d_id"), lit(p).as("__d_p"))
-      }.reduce(_ union _)
-      .groupBy("__d_id").agg(min("__d_p").as("__d_p"))
-    val dropName = when(col("__d_p") === 1, "bad_media")
-      .when(col("__d_p") === 2, "media_dup")
-      .when(col("__d_p") === 3, "wrong_lang")
-      .when(col("__d_p") === 4, "rule_filtered")
-      .when(col("__d_p") === 5, "contaminated")
-      .when(col("__d_p") === 6, "low_quality")
-      .when(col("__d_p") === 7, "near_dup")
-      .when(col("__d_p") === 8, "sem_dup")
-    val ann = batch.select(id)
-      .join(s1.select(id.as("__adm")), id === col("__adm"), "left")
-      .join(dropVerdict, id === col("__d_id"), "left")
-      .join(cleaned.select(id, col("kept_tokens"), col("removed_tokens"),
-        col("cleaned_text")), Seq(idCol), "left")
-      .withColumn("decision",
-        when(col("__adm").isNull, "exact_dup")
-          .when(col("__d_p") <= 5, dropName)
-          .when(col("cleaned_text").isNull || col("kept_tokens") === 0L, "empty")
-          .when(col("__d_p").isNotNull, dropName)
-          .otherwise("kept"))
-    val baseCols = Seq(id, col("decision"),
-      coalesce(col("removed_tokens"), lit(0L)).as("removed_tokens"),
-      when(col("decision") === "kept", col("kept_tokens")).as("n_tokens"),
-      when(col("decision") === "kept",
-        md5(outputText(col("cleaned_text"), piiRedactOutput).cast("binary")))
-        .as("final_md5"))
+    // `keepCleanedText` adds the survivor text itself (kept rows only) —
+    // what an ingest sink APPENDS to the corpus store
+    // ([[graft.streaming.StreamingDedup.curateSink]]); the q115 oracle
+    // shape carries only its md5. A batch doc missing from the admitted
+    // leaf is `exact_dup`, ahead of every stage decision.
+    val ann = runStages(
+        batch.select(id).join(s1.select(id.as("__adm")), id === col("__adm"), "left"),
+        s1, idCol, gates,
+        in => SpanDedup.removeCrossSpans(history, in, idCol, textCol,
+          spanK, minSpan, maxGramOccurrences).localCheckpoint(eager = true),
+        pairwise)
+      .withColumn("decision", when(col("__adm").isNull, "exact_dup").otherwise(col("decision")))
+    val baseCols = Seq(id, col("decision")) ++ releasedCols(piiRedactOutput)
     if (!keepCleanedText) ann.select(baseCols: _*)
     else {
       // The kept docs' text columns are a PROJECTION of `ann`, not a join

@@ -316,7 +316,23 @@ object StreamingDedup {
       .start()
   }
 
-  /** True iff the store already holds rows at trigger `id` or later —
+  /** In-JVM high-water mark of batch ids appended to each store path by
+    * THIS process (r22): steady-state triggers (fresh query, monotonically
+    * advancing batchIds) were documented as "never paying the anti-join",
+    * but every trigger over a non-empty store still paid the
+    * [[replaySuspected]] footer-stats scan — one full Spark job per
+    * micro-batch of pure guard overhead. The sink owns its store (the
+    * foreachBatch single-writer contract this file already assumes — a
+    * concurrent writer would corrupt the admission history regardless of
+    * this guard), so after ONE initializing scan the mark is exact: a
+    * trigger with id above everything this JVM has seen or written cannot
+    * be a replay, and anything else falls back to the content anti-join
+    * exactly as before. A fresh JVM (post-failure restart — the replay
+    * case the guard exists for) starts with an empty map and pays the
+    * scan, same as the prior shape. */
+  private val storeHwm = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  /** True iff the store may already hold rows at trigger `id` or later —
     * this invocation MAY be a post-failure REPLAY. Spark's exactly-once
     * contract for foreachBatch is "same batchId, same data, caller
     * dedupes": after a driver restart the engine re-invokes the function
@@ -330,29 +346,8 @@ object StreamingDedup {
     * footer-stats scan) and confirm by content: anti-join the batch's ids
     * against the store, so replayed rows vanish and genuinely new docs
     * under a recycled batchId still land. Steady-state triggers (fresh,
-    * monotonically advancing batchIds) never pay the anti-join. */
-  private[graft] def storeHasBatch(spark: org.apache.spark.sql.SparkSession,
-                                   path: String, id: Long): Boolean = {
-    val row = spark.read.parquet(path).agg(max(col("batch_id"))).head()
-    !row.isNullAt(0) && row.getLong(0) >= id
-  }
-
-  /** In-JVM high-water mark of batch ids appended to each store path by
-    * THIS process (r22): steady-state triggers (fresh query, monotonically
-    * advancing batchIds) were documented as "never paying the anti-join",
-    * but every trigger over a non-empty store still paid the
-    * [[storeHasBatch]] footer-stats scan — one full Spark job per
-    * micro-batch of pure guard overhead. The sink owns its store (the
-    * foreachBatch single-writer contract this file already assumes — a
-    * concurrent writer would corrupt the admission history regardless of
-    * this guard), so after ONE initializing scan the mark is exact: a
-    * trigger with id above everything this JVM has seen or written cannot
-    * be a replay, and anything else falls back to the content anti-join
-    * exactly as before. A fresh JVM (post-failure restart — the replay
-    * case the guard exists for) starts with an empty map and pays the
-    * scan, same as the prior shape. */
-  private val storeHwm = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
+    * monotonically advancing batchIds) never pay the anti-join, and only
+    * a store's first trigger in this JVM pays the scan ([[storeHwm]]). */
   private def replaySuspected(spark: org.apache.spark.sql.SparkSession,
                               path: String, id: Long): Boolean = {
     val key = new java.io.File(path).getAbsolutePath
@@ -471,7 +466,7 @@ object StreamingDedup {
   }
 
   /** The per-trigger body of [[semDedupSink]], exposed so the replay
-    * guard ([[storeHasBatch]]) is testable in isolation. */
+    * guard ([[replaySuspected]]) is testable in isolation. */
   private[graft] def semDedupBatch(batch: DataFrame, id: Long,
                                    idCol: String, vecCol: String,
                                    centroids: Array[Array[Double]],

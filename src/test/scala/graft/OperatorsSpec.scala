@@ -1337,6 +1337,152 @@ class OperatorsSpec extends SparkTestBase {
     assert(off.values.forall(_ != "contaminated"), s"decisions with hook off: $off")
   }
 
+  // one-hot test embeddings: identical vectors are sem-dups, the rest
+  // are orthogonal (cosine 0)
+  private def oneHot(dims: Int, rows: (Long, Int)*) = {
+    val spark2 = spark
+    import spark2.implicits._
+    rows.map { case (i, d) => val v = Array.fill(dims)(0.0f); v(d) = 1.0f; (i, v) }
+      .toDF("vec_id", "emb")
+  }
+
+  // a two-language model: `xxId`'s text is the `xx` class, every other doc
+  // `en`; the `xx` text is repeated so both classes carry similar trigram
+  // mass (a tiny class would win every trigram it has not seen)
+  private def langModel(docs: org.apache.spark.sql.DataFrame, xxId: Long) = {
+    val xx = docs.filter(col("doc_id") === xxId).select(col("text"))
+    TextOps.langNbFit(docs.filter(col("doc_id") =!= xxId)
+      .select(col("text"), lit("en").as("lang"))
+      .union((1 to 20).map(_ => xx.select(col("text"), lit("xx").as("lang"))).reduce(_ union _)))
+  }
+
+  // every gate passes these rules except a doc with a brace
+  private val gateRules = QualityFilters.RuleParams(minWords = 3, minStopHits = 1,
+    minTermLines = 0)
+
+  test("curateFull: every stage on, each decision class lands on its constructed doc") {
+    import spark.implicits._
+    val span = "the " + (1 to 29).map(i => s"spanw$i").mkString(" ")  // >= minSpan=20
+    val near = "the " + (1 to 14).map(i => s"common$i").mkString(" ") // < minSpan
+    val run13 = (1 to 16).map(i => s"evalw$i").mkString(" ")          // 13-gram grain
+    val corpus = Seq(
+      (0L, "s0", "the alpha beta gamma delta epsilon zeta eta theta"),
+      (1L, "s1", "  the alpha beta   gamma delta epsilon zeta eta theta "),
+      (2L, "s2", "qzxv vbnkq wyyrt plomj xxzzq kjhgf qwrtz zxcvb"),
+      (3L, "s3", s"the prefix3a prefix3b $span suffix3a suffix3b"),
+      (4L, "s4", span),                                 // cut to nothing by the span stage
+      (5L, "s5", s"$near ending5"),
+      (6L, "s6", s"$near ending6"),
+      (7L, "s7", "the doc seven body words here now"),
+      (8L, "s8", "the doc eight body words here now two"),
+      (9L, "s9", "the alpha beta gamma delta epsilon zeta eta theta {"),
+      (10L, "s10", s"the lead words $run13 trailing words"),
+      (11L, "s11", "the cosine grain document with fresh words only"),
+      (12L, "c12", "the click here buy cheap pills now winner free casino bonus offer"),
+      (13L, "c13", "the free casino winner click buy now cheap bonus pills offer today"),
+      (14L, "sq", "the nine one two three four five six seven"),
+      (15L, "sq", "the ten one two three four five six eight")
+    ).toDF("doc_id", "source", "text")
+    // 7 and 8 share a vector; 11's is the benchmark's
+    val embs = oneHot(16, (0L to 15L).map(i => i -> (if (i == 8L) 7 else i.toInt)): _*)
+    val bench = Seq((100L, "b", s"eval item starts $run13 closes")).toDF("doc_id", "source", "text")
+    val benchEmb = oneHot(16, 100L -> 11)
+    val lang = langModel(corpus, 2L)
+    val out = Pipeline.curateFull(corpus, embs, "doc_id", "text", "source",
+        vecIdCol = "vec_id", vecCol = "emb",
+        nearDupThreshold = 0.8, semK = 4, tokenBudget = 10L,
+        seedFilter = Some(!col("source").isin("c12", "c13")),
+        benchmark = Some(bench), benchmarkEmb = Some(benchEmb),
+        contamNgramK = 13, contamCosTau = 0.9,
+        langModel = Some(lang), ruleParams = Some(gateRules))
+      .collect().map(r => r.getLong(0) -> (r.getString(2), r.getLong(3))).toMap
+    val expected = Map(0L -> "kept", 1L -> "exact_dup", 2L -> "wrong_lang",
+      3L -> "kept", 4L -> "empty", 5L -> "kept", 6L -> "near_dup", 7L -> "kept",
+      8L -> "sem_dup", 9L -> "rule_filtered", 10L -> "contaminated",
+      11L -> "contaminated", 12L -> "low_quality", 13L -> "low_quality")
+    assert(expected.forall { case (i, d) => out(i)._1 == d }, s"decisions: $out")
+    assert(out(4L)._2 == 30L, s"doc4: ${out(4L)}")
+    assert(Seq(out(14L)._1, out(15L)._1).sorted == Seq("kept", "over_quota"), s"$out")
+    assert(out.size == 16)
+  }
+
+  test("curateIncremental: every stage on, each decision class lands on its batch doc") {
+    import spark.implicits._
+    val span = "the " + (1 to 29).map(i => s"hspan$i").mkString(" ")
+    val near = "the " + (1 to 14).map(i => s"hcommon$i").mkString(" ")
+    val run13 = (1 to 16).map(i => s"evalv$i").mkString(" ")
+    val crawlText = "the click here buy cheap pills now winner free casino bonus offer"
+    val history = Seq(
+      (0L, "the alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, s"the hpre1 hpre2 $span hpost1 hpost2"),
+      (4L, s"$near hending4"),
+      (6L, "the history six body words here now"),
+      (8L, crawlText)
+    ).toDF("doc_id", "text")
+    val batch = Seq(
+      (1L, "  the alpha beta   gamma delta epsilon zeta eta theta "),
+      (3L, "qzxv vbnkq wyyrt plomj xxzzq kjhgf qwrtz zxcvb"),
+      (5L, "the batch five words here now {"),
+      (7L, s"the lead words $run13 trailing words"),
+      (9L, "the cosine grain batch document fresh words"),
+      (11L, span),                                     // all of it a history run
+      (13L, "the free casino winner click buy now cheap bonus pills offer today"),
+      (15L, s"$near hending15"),
+      (17L, "the batch seventeen body words here now"),
+      (19L, "the fresh batch content nothing shared at all")
+    ).toDF("doc_id", "text")
+    // 17 shares history 6's vector; 9's is the benchmark's
+    val embs = oneHot(20, (0L to 19L).map(i => i -> (if (i == 17L) 6 else i.toInt)): _*)
+    val bench = Seq((100L, s"eval question $run13 eval answer")).toDF("doc_id", "text")
+    val benchEmb = oneHot(20, 100L -> 9)
+    val all = history.union(batch)
+    val lang = langModel(all, 3L)
+    val crawl = all.filter(col("doc_id").isin(8L, 13L))
+    val nb = TextOps.seedCrawlNbFit(all.filter(!col("doc_id").isin(8L, 13L)), crawl)
+    val out = Pipeline.curateIncremental(history, batch, embs, "doc_id", "text",
+        vecIdCol = "vec_id", vecCol = "emb", nearDupThreshold = 0.8, semK = 4,
+        nbModel = Some(nb), benchmark = Some(bench), benchmarkEmb = Some(benchEmb),
+        contamCosTau = 0.9, langModel = Some(lang), ruleParams = Some(gateRules))
+      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+    val expected = Map(1L -> "exact_dup", 3L -> "wrong_lang", 5L -> "rule_filtered",
+      7L -> "contaminated", 9L -> "contaminated", 11L -> "empty",
+      13L -> "low_quality", 15L -> "near_dup", 17L -> "sem_dup", 19L -> "kept")
+    assert(out.keySet == expected.keySet, s"batch rows only: $out")
+    assert(expected.forall { case (i, d) => out(i)._1 == d }, s"decisions: $out")
+    assert(out(11L)._2 == 30L, s"doc11: ${out(11L)}")
+  }
+
+  test("curateFromHtml domain gate: dropped pages keep one audit row, zero tokens") {
+    import spark.implicits._
+    val d = Seq(
+      (0L, "s0", "http://blocked.example.com/a", "the alpha beta gamma delta epsilon zeta"),
+      (1L, "s1", "http://blocked.example.com/b", "the second blocked page words here now"),
+      (2L, "s2", "http://big.example.com/1", "the first big host page with eight words"),
+      (3L, "s3", "http://big.example.com/2", "the second big host page has eight words"),
+      (4L, "s4", "http://big.example.com/3", "the third big host page carries eight words"),
+      (5L, "s5", "http://ok.example.com/x", "the fresh page with its own words here"),
+      (6L, "s6", "http://other.example.com/y", "the fresh page with its own words here")
+    ).toDF("doc_id", "source", "url", "text")
+    val pages = HtmlExtract.htmlTable(d).join(d.select("doc_id", "source", "url"), Seq("doc_id"))
+    val out = Pipeline.curateFromHtml(pages, oneHot(8, (0L to 6L).map(i => i -> i.toInt): _*)
+          .withColumnRenamed("emb", "embedding"),
+        "doc_id", "html", "source", urlCol = Some("url"),
+        domainBlocklist = Some(Seq("blocked.example.com").toDF("domain")),
+        domainTokenBudget = 10L)
+      .collect()
+    assert(out.map(_.getLong(0)).sorted.toSeq == (0L to 6L), "one row per page")
+    val byId = out.map(r => r.getLong(0) -> r).toMap
+    assert(byId(0L).getString(2) == "blocked_domain" && byId(1L).getString(2) == "blocked_domain")
+    // 8 tokens a page against a 10-token cap: one big-host page survives
+    val big = Seq(2L, 3L, 4L).map(i => byId(i).getString(2))
+    assert(big.count(_ == "over_domain_quota") == 2, big.toString)
+    assert(byId(6L).getString(2) == "exact_dup" && byId(5L).getString(2) == "kept")
+    for (r <- out if Set("blocked_domain", "over_domain_quota")(r.getString(2))) {
+      assert(r.getLong(3) == 0L && r.isNullAt(4) && r.isNullAt(5), r.toString)
+      assert(r.getString(1) == s"s${r.getLong(0)}", r.toString)
+    }
+  }
+
   test("leakageFreeSplit: components share a split, no pair straddles, reproducible") {
     import spark.implicits._
     val docsDf = (0L to 30L).map(i => (i, s"doc $i")).toDF("doc_id", "text")

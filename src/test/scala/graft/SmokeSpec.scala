@@ -185,4 +185,16 @@ class SmokeSpec extends SparkTestBase {
       "SELECT datasketch_hll_estimate(datasketch_hll(12, id)) AS e FROM items").head().getDouble(0)
     assert(est > 95000 && est < 105000)
   }
+
+  test("bench summary numbers stay dot-decimal under a comma-decimal locale") {
+    val cat = java.util.Locale.Category.FORMAT
+    val prior = java.util.Locale.getDefault(cat)
+    java.util.Locale.setDefault(cat, java.util.Locale.GERMANY)
+    try {
+      assert(f"${1.5}%.3f" == "1,500") // what the f"" interpolator emits here
+      assert(Bench.fixed(1234.5678, 3) == "1234.568")
+      assert(Bench.fixed(-1.0, 3) == "-1.000")
+      assert(Bench.fixed(12.0, 2) == "12.00" && Bench.fixed(2.0, 1) == "2.0")
+    } finally java.util.Locale.setDefault(cat, prior)
+  }
 }

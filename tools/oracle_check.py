@@ -6,10 +6,17 @@ against the same testdata parquet tables, and compares: columns sorted by
 name, rows sorted, values hashed. Usage:
 
     python3 tools/oracle_check.py /tmp/verify_out /root/testdata/sf0.01
+
+Reads SPARK_GRAFT_VERIFY_ONLY as graft.Verify does (comma-separated
+names; unset selects every query). A selected query with no output dir
+is a FAIL: Verify only logs a query that throws, so a missing dump is
+how a crash shows here. Queries outside the filter are skipped.
 """
 import json
 import math
+import os
 import sys
+import time
 
 import duckdb
 
@@ -33,6 +40,14 @@ def table_key(rows, cols):
     return out
 
 
+def selected_names(env=os.environ):
+    """The SPARK_GRAFT_VERIFY_ONLY names, or None (all) when it is unset."""
+    raw = env.get("SPARK_GRAFT_VERIFY_ONLY")
+    if raw is None:
+        return None
+    return {n.strip() for n in raw.split(",") if n.strip()}
+
+
 def main(outdir, sfdir, report_path=None):
     con = duckdb.connect()
     for t in TABLES:
@@ -41,14 +56,21 @@ def main(outdir, sfdir, report_path=None):
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     ok = bad = skipped = 0
     report = {}
-    import time
+    only = selected_names()
     for name, sql in sorted(oracle.items()):
         # Verify dumps oracle_sql.json in full even under
-        # SPARK_GRAFT_VERIFY_ONLY; skip queries that were not dumped.
-        import os
-        if not os.path.isdir(f"{outdir}/{name}"):
+        # SPARK_GRAFT_VERIFY_ONLY; queries outside the filter are skipped.
+        if only is not None and name not in only:
             skipped += 1
-            report[name] = {"status": "not_dumped"}
+            report[name] = {"status": "not_selected"}
+            continue
+        if not os.path.isdir(f"{outdir}/{name}"):
+            print(f"FAIL {name}: not dumped (the query failed in Verify)",
+                  flush=True)
+            bad += 1
+            report[name] = {"status": "fail", "err": "not dumped",
+                            "rows_match": False, "schema_match": False,
+                            "hash_match": False}
             continue
         t0 = time.monotonic()
         try:
@@ -115,10 +137,10 @@ def main(outdir, sfdir, report_path=None):
                 print(f"  only-duck : {list(sb - sa)[:2]}", flush=True)
             bad += 1
     print(f"\n{ok} ok, {bad} fail" +
-          (f", {skipped} not dumped (VERIFY_ONLY filter)" if skipped else ""))
+          (f", {skipped} not selected (VERIFY_ONLY filter)" if skipped else ""))
     if report_path:
         summary = {"sf_dir": sfdir,
-                   "counts": {"ok": ok, "fail": bad, "not_dumped": skipped},
+                   "counts": {"ok": ok, "fail": bad, "not_selected": skipped},
                    "queries": report}
         with open(report_path, "w") as f:
             json.dump(summary, f, indent=1, sort_keys=True)

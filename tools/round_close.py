@@ -66,7 +66,11 @@ def check_report(path, kind):
     if len(queries) < MIN_QUERIES:
         die(f"{kind} report has only {len(queries)} query entries "
             f"(< {MIN_QUERIES}) — EMPTY/TRUNCATED ARTIFACT")
-    if counts.get("fail", 1) != 0 or counts.get("not_dumped", 1) != 0:
+    # sf01_gate counts queries it found no dump for as `not_dumped`;
+    # oracle_check counts those as failures and filtered-out ones as
+    # `not_selected` — a round close must have neither
+    skipped = counts.get("not_dumped", 0) + counts.get("not_selected", 0)
+    if counts.get("fail", 1) != 0 or skipped != 0:
         die(f"{kind} report has failures: {counts}")
     print(f"[round_close] {kind}: {counts} ({len(queries)} queries) — OK",
           flush=True)
