@@ -27,7 +27,13 @@ import org.apache.spark.sql.functions._
   */
 object Sharding {
 
-  /** Per-document shard assignment: (doc, ntok, shard). */
+  /** Per-document shard assignment: (doc, ntok, shard).
+    *
+    * Eager: the call itself runs Spark jobs (the range-bound sample and
+    * the `localCheckpoint(eager = true)` of the ranged relation), not
+    * the first action on the result. The checkpoint blocks stay in
+    * executor storage until the ContextCleaner frees them, after the
+    * returned DataFrame is garbage-collected on the driver. */
   def tokenShards(df: DataFrame, idCol: String, textCol: String,
                   budget: Long,
                   tokenCounter: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
@@ -77,7 +83,10 @@ object Sharding {
     * (the scorer's own domain rule — e.g. blank docs under the trigram
     * LM); same two-level distributed scan, same byte-identical-to-
     * global-window contract, just a different range key. Output:
-    * (doc, scoreCol, ntok, shard). */
+    * (doc, scoreCol, ntok, shard).
+    *
+    * Eager, as [[tokenShards]] is: the call runs its jobs and holds its
+    * checkpoint blocks until the ContextCleaner frees them. */
   def curriculumShards(df: DataFrame, idCol: String, textCol: String,
                        scores: DataFrame, budget: Long,
                        scoreCol: String = "lm_score_u"): DataFrame = {
@@ -179,7 +188,11 @@ object Sharding {
     * emitted tokens ≤ totalBudget + one doc per source), so the
     * exploded relation is budget-sized, not corpus×epochs-sized;
     * everything else is the [[curriculumShards]] scan on the md5 key.
-    * Output: (doc, copy_idx, ntok, shard). */
+    * Output: (doc, copy_idx, ntok, shard).
+    *
+    * Eager, as [[tokenShards]] is: the call runs its jobs (the
+    * per-source token-mass collect among them) and holds its checkpoint
+    * blocks until the ContextCleaner frees them. */
   def trainingOrder(df: DataFrame, sourceCol: String, idCol: String,
                     textCol: String, weights: Seq[(String, Double)],
                     totalBudget: Long, shardBudget: Long): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions._
@@ -35,21 +35,4 @@ object Skew {
         round(datasketch_theta_estimate(col("sketch"))).cast("long").as("approx_distinct"),
         col("sketch"))
   }
-
-  /** Salted KLL quantile sketch per key (same two-stage shape). */
-  def saltedQuantiles(df: DataFrame, keyCol: String, valueCol: String,
-                      salts: Int = 16, k: Int = 200): DataFrame = {
-    require(salts >= 1)
-    graft.Registration.register(df.sparkSession)
-    df.groupBy(col(keyCol), pmod(xxhash64(col(valueCol)), lit(salts)).as("__salt"))
-      .agg(datasketch_kll(k, col(valueCol).cast("double")).as("__partial"))
-      .groupBy(col(keyCol))
-      .agg(call_function("datasketch_kll", lit(k), col("__partial")).as("sketch"))
-      .select(col(keyCol),
-        datasketch_kll_quantile(col("sketch"), 0.5).as("median"),
-        col("sketch"))
-  }
-
-  private def call_function(name: String, cols: Column*): Column =
-    org.apache.spark.sql.functions.call_function(name, cols: _*)
 }

@@ -62,11 +62,6 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     spark.read.parquet(p)
   }
 
-  def loadDf(corpusPath: String, name: String): Option[DataFrame] = {
-    val p = artifactPath(corpusPath, name)
-    if (exists(p)) Some(spark.read.parquet(p)) else None
-  }
-
   // ---- driver-bounded artifacts (arrays / blobs; KB–MB by contract) ------
 
   /** Long-array artifact (hot-shingle stop lists). */
@@ -104,26 +99,6 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     import spark.implicits._
     val df = getOrBuildDf(corpusPath, name)(Seq(Tuple1(build)).toDF("v"))
     df.select("v").as[Array[Byte]].head()
-  }
-
-  /** Remove artifacts of STALE snapshots of `corpusPath` (same path hash,
-    * different mtime) — the retention hook a deployment calls after
-    * admitting a new snapshot. Returns the number of stale snapshot
-    * directories removed. */
-  def sweepStale(corpusPath: String): Int = {
-    val f = new java.io.File(corpusPath)
-    val abs = f.getAbsolutePath
-    val prefix = f"${f.getName}-${abs.hashCode & 0x7fffffff}%08x-m"
-    val live = prefix + SnapshotStore.newestMtime(f)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootPath)) return 0
-    val stale = fs.listStatus(rootPath).filter { st =>
-      val n = st.getPath.getName
-      n.startsWith(prefix) && n != live
-    }
-    stale.foreach(st => fs.delete(st.getPath, true))
-    stale.length
   }
 }
 

@@ -2,7 +2,7 @@ package graft.sketch
 
 import org.apache.datasketches.filters.bloomfilter.{BloomFilter, BloomFilterBuilder}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -206,6 +206,20 @@ case class BloomMightContain(left: Expression, right: Expression)
     try { lane; org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess }
     catch { case e: GraftBloomTypeException =>
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(e.getMessage) }
+  }
+
+  /** A literal filter renders as its size. Spark prints a binary literal
+    * as full hex, and every plan description (explain, each adaptive
+    * plan update, the SQL executions the status store keeps) holds the
+    * plan string, so a 1.26 MB filter would cost 2.5 MB of text per copy.
+    * `simpleString`, which plan nodes print their conditions with,
+    * delegates here. */
+  override def toString: String = {
+    val filter = left match {
+      case Literal(b: Array[Byte], BinaryType) => s"<${b.length} bytes>"
+      case other => other.toString
+    }
+    s"$prettyName($filter, $right)"
   }
 
   override protected def nullSafeEval(blob: Any, v: Any): Any = {

@@ -936,7 +936,7 @@ class OperatorsSpec extends SparkTestBase {
     assert(none.count() == batch.count())
   }
 
-  test("sized incremental dedup selects identically to the 2^20 default") {
+  test("self-sized incremental dedup selects identically to explicit 2^20 filters") {
     // Right-sizing moves only filter capacity (a cost/fpp dial), never
     // the verified output: bloom has no false negatives at any size, and
     // the verify join is exact.
@@ -944,14 +944,38 @@ class OperatorsSpec extends SparkTestBase {
     val batch = docs.filter(col("doc_id") % 3 =!= 0)
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0)).toSeq
-    val default = ids(IncrementalDedup.dedupAgainstHistory(batch, hist, "doc_id", "text"))
-    val sized = ids(IncrementalDedup.dedupAgainstHistorySized(batch, hist,
-      "doc_id", "text", expectedHistoryDocs = hist.count(), expectedBatchDocs = batch.count()))
-    assert(sized == default)
+    val sized = ids(IncrementalDedup.dedupAgainstHistory(batch, hist, "doc_id", "text"))
+    val fixed = ids(IncrementalDedup.dedupAgainstHistory(batch, hist, "doc_id", "text",
+      maxDistinct = 1 << 20, candMaxDistinct = 1 << 20))
+    assert(sized == fixed)
     // headroom policy is shared with the streaming geometry
     assert(IncrementalDedup.sizedMaxDistinct(10000) ==
       math.ceil(10000 * graft.streaming.StreamingDedup.CapacityHeadroom).toLong)
     assert(IncrementalDedup.sizedMaxDistinct(10) == 1024L) // floor
+  }
+
+  test("self-sized incremental dedup plants small filters, never past 2^20") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.BinaryType
+    // every batch doc is in history, so both filters get built
+    val hist = docs
+    val batch = docs.filter(col("doc_id") % 2 === 1)
+    assert(hist.count() <= 1000 && batch.count() <= 1000)
+    val plan = IncrementalDedup.dedupAgainstHistory(batch, hist, "doc_id", "text")
+      .queryExecution.analyzed
+    val blobs = plan.flatMap(_.expressions.flatMap(_.collect {
+      case Literal(b: Array[Byte], BinaryType) => b.length
+    }))
+    assert(blobs.size >= 2, s"expected history and candidate filters in the plan:\n$plan")
+    assert(blobs.forall(_ <= (16 << 10)), s"filter literal sizes ${blobs.mkString(", ")} B")
+    // an over-cap count is clamped to the size every call used to build
+    assert(IncrementalDedup.callCapacity(100L << 20) == (1L << 20))
+    assert(IncrementalDedup.callCapacity(1L << 20) == (1L << 20))
+    assert(IncrementalDedup.callCapacity(1) == 1024L)
+    val capped = IncrementalDedup.buildHistoryFilter(hist, "text",
+      IncrementalDedup.callCapacity(100L << 20))
+    val fixed = IncrementalDedup.buildHistoryFilter(hist, "text", 1 << 20)
+    assert(capped.length == fixed.length)
   }
 
   test("q60 pair-evidence memo: memoized clustering ≡ fresh mining, and replays") {

@@ -461,6 +461,28 @@ class PlanSpec extends SparkTestBase {
       s"expected bloom probes filtering batch AND history scans:\n$analyzed")
   }
 
+  test("incremental dedup: a persisted filter stays out of the plan string") {
+    // Spark prints a binary literal as full hex; the probe prints its
+    // filter literal by size, so a 2^17 shared filter (~150 KB) costs
+    // bytes, not ~300 K characters, in every plan description.
+    val hist = docs.filter(col("doc_id") % 2 === 0)
+    val batch = docs.filter(col("doc_id") % 2 === 1)
+    val blob = operators.IncrementalDedup.buildHistoryFilter(hist, "text",
+      maxDistinct = 1 << 17)
+    assert(blob.length > (100 << 10))
+    val df = operators.IncrementalDedup.dedupAgainstHistory(batch, hist,
+      "doc_id", "text", historyBlob = Some(blob))
+    val got = df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    val plan = planOf(df)
+    assert(plan.length < (20 << 10), s"plan string is ${plan.length} chars")
+    assert(plan.contains(s"datasketch_bloom_might_contain(<${blob.length} bytes>"), plan)
+    val fp = operators.TextOps.fingerprint(col("text"))
+    val expect = batch.join(hist.select(fp.as("__h")).distinct(), fp === col("__h"),
+        "left_anti")
+      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(got == expect)
+  }
+
   test("shared-gram profile: gram text never enters an exchange") {
     val plan = operators.QualityFilters
       .sharedGramStats(docs, "doc_id", "text", n = 5)

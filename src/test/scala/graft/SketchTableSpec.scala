@@ -66,6 +66,30 @@ class SketchTableSpec extends SparkTestBase {
       s"probe should prune partitions:\n$plan")
   }
 
+  test("ANN index build salts a hot sign bucket over at most filesPerBucket files") {
+    import org.apache.spark.sql.functions.{col, min}
+    val dir = java.nio.file.Files.createTempDirectory("graft_annhot").toString
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    // every row carries the same vector, so every row lands in one bucket
+    val first = emb.agg(min("vec_id")).head().getLong(0)
+    val hot = emb.select("vec_id")
+      .crossJoin(emb.filter(col("vec_id") === first).select("embedding"))
+    // adaptive coalescing would fold this small bucket's salted
+    // partitions back into one write task (as intended below its 1 MB
+    // minimum partition size); off, the salt alone sets the file count
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prior = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try operators.AnnIndex.build(hot, "vec_id", "embedding", dir, planes = 6,
+      filesPerBucket = 4)
+    finally spark.conf.set(coalesce, prior)
+    val buckets = new java.io.File(dir).listFiles().filter(_.getName.startsWith("sig="))
+    assert(buckets.length == 1, buckets.map(_.getName).mkString(", "))
+    val files = buckets.head.listFiles().count(_.getName.endsWith(".parquet"))
+    assert(files > 1 && files <= 4, s"hot bucket holds $files files")
+    assert(spark.read.parquet(dir).count() == emb.count())
+  }
+
   test("quantized ANN index: ~4x smaller files, near-identical neighbors") {
     import org.apache.spark.sql.functions.col
     val dirF = java.nio.file.Files.createTempDirectory("graft_annf").toString
