@@ -12,6 +12,35 @@ object Bench {
   private[graft] def fixed(x: Double, digits: Int): String =
     String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(x))
 
+  /** Display family of a bench query for the summary line's subtotals.
+    * Harness queries (`SparkEntry.harnessQueries`) form their own
+    * `harness` family: `value` excludes them, so with it the operator
+    * families sum to `value` and all families to `value_total`. */
+  private[graft] def family(n: String): String =
+    if (SparkEntry.harnessQueries(n)) "harness"
+    else if (n.contains("streaming") || n == "q74_sessionize") "streaming"
+    else if (n.contains("ann")) "ann"
+    else if (n.contains("curate")) "curate"
+    else if (n.contains("media") || n.contains("audio") || n.contains("video") ||
+      n.contains("demux") || n.contains("frame")) "media"
+    else if (n.contains("dedup") || n.contains("jaccard") || n.contains("minhash") ||
+      n.contains("simhash") || n.contains("cosine") || n.contains("span") ||
+      n.contains("cluster") || n.contains("grams") || n.contains("kmeans") ||
+      n.contains("semdedup") || n.contains("decontaminate") || n.contains("contamination") ||
+      n.contains("fingerprint")) "dedup"
+    else if (n.contains("shard") || n.contains("split") || n.contains("order") ||
+      n.contains("mixture") || n.contains("quota") || n.contains("sample") ||
+      n.contains("zorder")) "shard_mix"
+    else if (n.contains("token") || n.contains("bpe") || n.contains("pii") ||
+      n.contains("lang") || n.contains("quality") || n.contains("rules") ||
+      n.contains("classifier") || n.contains("bm25") || n.contains("tfidf") ||
+      n.contains("trigram") || n.contains("entropy") || n.contains("drift") ||
+      n.contains("repetition") || n.contains("boilerplate") || n.contains("dsir") ||
+      n.contains("rank") || n.contains("html") || n.contains("url") ||
+      n.contains("warc") || n.contains("tokenizer") || n.contains("seed") ||
+      n.contains("perplexity") || n.contains("curation")) "text"
+    else "sketch_sql"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -286,29 +315,6 @@ object Bench {
       // family-grain movement/scaling visibility (per-query floors live in
       // bench_last.json and the committed BENCH_QUERIES_rN.json). Display
       // grouping only — no measurement or methodology change.
-      def family(n: String): String =
-        if (n.contains("streaming") || n == "q74_sessionize") "streaming"
-        else if (n.contains("ann")) "ann"
-        else if (n.contains("curate")) "curate"
-        else if (n.contains("media") || n.contains("audio") || n.contains("video") ||
-          n.contains("demux") || n.contains("frame")) "media"
-        else if (n.contains("dedup") || n.contains("jaccard") || n.contains("minhash") ||
-          n.contains("simhash") || n.contains("cosine") || n.contains("span") ||
-          n.contains("cluster") || n.contains("grams") || n.contains("kmeans") ||
-          n.contains("semdedup") || n.contains("decontaminate") || n.contains("contamination") ||
-          n.contains("fingerprint")) "dedup"
-        else if (n.contains("shard") || n.contains("split") || n.contains("order") ||
-          n.contains("mixture") || n.contains("quota") || n.contains("sample") ||
-          n.contains("zorder")) "shard_mix"
-        else if (n.contains("token") || n.contains("bpe") || n.contains("pii") ||
-          n.contains("lang") || n.contains("quality") || n.contains("rules") ||
-          n.contains("classifier") || n.contains("bm25") || n.contains("tfidf") ||
-          n.contains("trigram") || n.contains("entropy") || n.contains("drift") ||
-          n.contains("repetition") || n.contains("boilerplate") || n.contains("dsir") ||
-          n.contains("rank") || n.contains("html") || n.contains("url") ||
-          n.contains("warc") || n.contains("tokenizer") || n.contains("seed") ||
-          n.contains("perplexity") || n.contains("curation")) "text"
-        else "sketch_sql"
       val famTotals = names.collect {
           case (n, _) if samples(n).nonEmpty => family(n) -> median(samples(n))
         }.groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2).sum }

@@ -633,7 +633,41 @@ object Registration {
         arity(name, args, 1, 1)
         toExpression(f(column(args.head)))
       }
+    // a native kernel: every Int argument (k, numHashes, planes) is a
+    // constant folded at bind and must lie in [1, maxInt]
+    def kernel(name: String, k: graft.operators.Kernel, maxInt: Int = Int.MaxValue): (String, B) =
+      name -> { (args: Seq[Expression]) =>
+        arity(name, args, k.inputTypes.size, k.inputTypes.size)
+        k.call(args.zip(k.inputTypes).map {
+          case (a, IntegerType) =>
+            val n = foldInt(a, name)
+            if (n < 1 || n > maxInt) bindErr(s"$name: the constant argument must be " +
+              (if (maxInt == Int.MaxValue) ">= 1" else s"between 1 and $maxInt") + s", got $n")
+            Literal(n)
+          case (a, _) => a
+        }: _*)
+      }
+    import graft.operators.Kernel
     Seq(
+      kernel("graft_simhash64", Kernel.simhash64),
+      kernel("graft_token_stats", Kernel.tokenStats),
+      kernel("graft_shingle_set", Kernel.shingleSet),
+      kernel("graft_word_chunks", Kernel.wordChunks),
+      kernel("graft_word_windows", Kernel.wordWindows),
+      kernel("graft_term_runs", Kernel.termRuns),
+      kernel("graft_gram_hashes", Kernel.gramHashes),
+      kernel("graft_minhash_sig", Kernel.minhashSig),
+      // int8 quantization primitives — SQL face of operators.Quantize's
+      // packed lane (CTAS a quantized index, re-rank with byte dots)
+      kernel("graft_int8_pack", Kernel.int8Pack),
+      kernel("graft_int8_dot", Kernel.int8Dot),
+      // sign-bit LSH bucket signature — the SQL face of the ANN/near-dup
+      // bucketing primitive, so SQL-only users can bucket/partition a
+      // corpus (e.g. GROUP BY graft_lsh_signature(embedding, 12)) with
+      // signatures identical to the Scala operators'; planes are sign
+      // bits packed into one long
+      kernel("graft_lsh_signature", Kernel.lshSignature, maxInt = 63),
+
       wrap1("graft_token_count", graft.operators.TextOps.tokenCount),
       wrap1("graft_subword_count", graft.operators.TextOps.subwordCount),
       wrap1("graft_stopword_ratio", graft.operators.TextOps.stopwordRatio),
@@ -641,30 +675,6 @@ object Registration {
       wrap1("graft_lang_id", graft.operators.TextOps.langId),
       wrap1("graft_fingerprint", graft.operators.TextOps.fingerprint),
       wrap1("graft_rolling_hash", graft.operators.TextOps.rollingHash),
-      "graft_simhash64" -> { (args: Seq[Expression]) =>
-        arity("graft_simhash64", args, 1, 1)
-        graft.operators.SimHash64(args.head)
-      },
-      "graft_token_stats" -> { (args: Seq[Expression]) =>
-        arity("graft_token_stats", args, 1, 1)
-        graft.operators.TokenStats(args.head)
-      },
-      "graft_shingle_set" -> { (args: Seq[Expression]) =>
-        arity("graft_shingle_set", args, 2, 2)
-        graft.operators.ShingleSet(args.head, foldInt(args(1), "graft_shingle_set"))
-      },
-      "graft_word_chunks" -> { (args: Seq[Expression]) =>
-        arity("graft_word_chunks", args, 2, 2)
-        graft.operators.WordChunks(args.head, foldInt(args(1), "graft_word_chunks"))
-      },
-      "graft_word_windows" -> { (args: Seq[Expression]) =>
-        arity("graft_word_windows", args, 2, 2)
-        graft.operators.WordWindows(args.head, foldInt(args(1), "graft_word_windows"))
-      },
-      "graft_term_runs" -> { (args: Seq[Expression]) =>
-        arity("graft_term_runs", args, 1, 1)
-        graft.operators.TermRuns(args.head)
-      },
       // Morton (z-order) key over 2-4 quantized BIGINT dims — the
       // multi-dimensional clustered-layout sort key
       "graft_zorder" -> { (args: Seq[Expression]) =>
@@ -681,14 +691,6 @@ object Registration {
         graft.operators.TopKByAgg(k,
           Cast(args(1), DoubleType), Cast(args(2), LongType))
       },
-      "graft_gram_hashes" -> { (args: Seq[Expression]) =>
-        arity("graft_gram_hashes", args, 2, 2)
-        graft.operators.GramHashes(args.head, foldInt(args(1), "graft_gram_hashes"))
-      },
-      "graft_minhash_sig" -> { (args: Seq[Expression]) =>
-        arity("graft_minhash_sig", args, 2, 2)
-        graft.operators.MinHashSig(args.head, foldInt(args(1), "graft_minhash_sig"))
-      },
       "graft_hamming64" -> { (args: Seq[Expression]) =>
         arity("graft_hamming64", args, 2, 2)
         toExpression(graft.operators.DedupOps.hamming(column(args(0)), column(args(1))))
@@ -697,28 +699,6 @@ object Registration {
         arity("graft_cosine", args, 2, 2)
         toExpression(graft.operators.SimilarityOps.cosine(column(args(0)), column(args(1))))
       },
-      // int8 quantization primitives — SQL face of operators.Quantize's
-      // packed lane (CTAS a quantized index, re-rank with byte dots)
-      "graft_int8_pack" -> { (args: Seq[Expression]) =>
-        arity("graft_int8_pack", args, 2, 2)
-        graft.operators.Int8Pack(args(0), args(1))
-      },
-      "graft_int8_dot" -> { (args: Seq[Expression]) =>
-        arity("graft_int8_dot", args, 2, 2)
-        graft.operators.Int8Dot(args(0), args(1))
-      },
-      // sign-bit LSH bucket signature — the SQL face of the ANN/near-dup
-      // bucketing primitive, so SQL-only users can bucket/partition a
-      // corpus (e.g. GROUP BY graft_lsh_signature(embedding, 12)) with
-      // signatures identical to the Scala operators'
-      "graft_lsh_signature" -> { (args: Seq[Expression]) =>
-        arity("graft_lsh_signature", args, 2, 2)
-        val planes = foldInt(args(1), "graft_lsh_signature")
-        if (planes < 1 || planes > 63)
-          bindErr(s"graft_lsh_signature: planes must be between 1 and 63, got $planes")
-        graft.operators.LshSignature(args.head, planes)
-      },
-
       // The reference's 36 named sketch alias types, as a reinterpret
       // cast ([[graft.plans.SketchCastRewrite]] turns `CAST(b AS
       // sketch_kll_double)` / `b::sketch_kll_float` into this call):

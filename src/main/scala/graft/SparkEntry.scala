@@ -44,7 +44,7 @@ object SparkEntry
     * swapped for the production path. q37's `queries` entry computes token
     * hashes via md5 purely so an external ANSI engine can re-derive the
     * signatures bit-for-bit; a deployment runs the native xxhash64-based
-    * `SimHash64` signatures (~4× cheaper per token). The two emit pair sets
+    * `simhash64` kernel signatures (~4× cheaper per token). The two emit pair sets
     * under the same shared banding core (pinned in OperatorsSpec), so the
     * correctness gate still covers the benched shape. */
   def benchQueries: Map[String, (SparkSession, String) => DataFrame] =

@@ -25,6 +25,9 @@ object Verify {
       case None        => SparkEntry.queries
     }
     selected.foreach { case (name, fn) =>
+      // marks where each query's log lines start, and names its jobs
+      System.err.println(s"[verify] start $name")
+      spark.sparkContext.setJobDescription(name)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -597,7 +597,7 @@ private[graft] trait PipelineEntries extends EntryInfra {
     // Lloyd's-replay SemDeDup (fit on the survivor slice), q104's
     // per-source token quota — proving the operators compose, not
     // just pass in isolation. Short-doc rule: a doc span-cleaned below k
-    // tokens shingles to the single fold of ALL its tokens (ShingleSet's
+    // tokens shingles to the single fold of ALL its tokens (shingleSet's
     // documented semantics), replicated here as the whole-text 1-shingle
     // CASE so identical span-remnants still pair at J=1.
     //
@@ -727,13 +727,13 @@ private[graft] trait PipelineEntries extends EntryInfra {
     // the cross-stage oracles chained on each other's survivors:
     // q64's history-membership dedup, q88's cross-span detection +
     // q86's reassembly (batch side only), q97's cross jaccard (over
-    // CLEANED batch text, ShingleSet short-doc rule), q103's
+    // CLEANED batch text, shingleSet short-doc rule), q103's
     // incremental-semdedup Lloyd's replay (fit on history)
 
     // the cross-stage oracles chained on each other's survivors:
     // q64's history-membership dedup, q88's cross-span detection +
     // q86's reassembly (batch side only), q97's cross jaccard (over
-    // CLEANED batch text, ShingleSet short-doc rule), q103's
+    // CLEANED batch text, shingleSet short-doc rule), q103's
     // incremental-semdedup Lloyd's replay (fit on history)
     "q115_curate_incremental" ->
       """WITH norm AS (

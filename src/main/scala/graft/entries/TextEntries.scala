@@ -316,12 +316,12 @@ private[graft] trait TextEntries extends EntryInfra {
     "q64_incremental_dedup" -> qdd { (spark, dir) =>
       import org.apache.spark.sql.functions._
       val docs = spark.table("documents")
-      // bloom sized for the corpus actually protected (2^17 ≈ 2.6× the
-      // sf0.1 history; a 100 TB deployment passes its own maxDistinct)
+      // the history filter is the persisted per-snapshot one
+      // (sharedHistoryBloom, sized 2^17 ≈ 2.6× the sf0.1 history); the
+      // candidate filter sizes itself from the batch
       operators.IncrementalDedup.dedupAgainstHistory(
           docs.filter(col("doc_id") % 2 === 1),
           docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-          maxDistinct = 1 << 17,
           historyBlob = sharedHistoryBloom(spark, dir))
         .select(col("doc_id"))
         .orderBy("doc_id")

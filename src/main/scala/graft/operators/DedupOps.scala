@@ -92,13 +92,12 @@ object DedupOps {
     * xor-rotate combination of its k token hashes — no per-position string
     * slicing/concatenation, and nothing downstream ever carries text.
     * Entirely map-side: no shuffle, no explode. Delegates to the native
-    * [[ShingleSet]] expression (see its scaladoc; the equivalent composed
-    * higher-order-function formulation, kept in [[shingleSetsArrayOps]],
-    * evaluates interpreted and is ~20× slower). */
+    * [[GraftRuntime.shingleSet]] kernel (see its scaladoc; the equivalent
+    * composed higher-order-function formulation, kept in
+    * [[shingleSetsArrayOps]], evaluates interpreted and is ~20× slower). */
   def shingleSets(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.GraftShims
-    df.select(col(idCol).as("doc"),
-        GraftShims.column(ShingleSet(GraftShims.expression(col(textCol)), k)).as("shset"))
+    require(k >= 1, s"shingle size must be >= 1, got $k")
+    df.select(col(idCol).as("doc"), Kernel.shingleSet(col(textCol), lit(k)).as("shset"))
       .select(col("doc"), size(col("shset")).as("sz"), col("shset"))
   }
 
@@ -302,20 +301,18 @@ object DedupOps {
   def weightedJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                            threshold: Double, maxTermDF: Int = 1000,
                            eager: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.GraftShims
-    // (doc, term-hash, tf) straight from the native one-pass TermRuns
+    // (doc, term-hash, tf) straight from the native one-pass termRuns
     // scan — the tf aggregation happens INSIDE the row, so no token
     // instance ever reaches an exchange (the r14 rewrite: the composed
     // explode+groupBy formulation shuffled every token occurrence and
     // floored 6× over baseline). Terms hash to 8-byte keys; note
-    // TermRuns lowercases, so similarity is case-insensitive.
+    // termRuns lowercases, so similarity is case-insensitive.
     // Cached at the most-derived-from point (the jaccardPairs precedent):
     // the hot-term aggregation, the anti-join probe, the tot aggregation,
     // and BOTH self-join sides all re-derive from these rows — uncached,
     // each consumer re-runs the text scan (measured 3× the query floor).
     val tf0 = df.select(col(idCol).cast("long").as("doc"),
-        explode(GraftShims.column(
-          TermRuns(GraftShims.expression(col(textCol))))).as("e"))
+        explode(Kernel.termRuns(col(textCol))).as("e"))
       .select(col("doc"), xxhash64(col("e.term")).as("term"), col("e.tf").as("tf"))
       .cache()
     val tfs =
@@ -348,11 +345,10 @@ object DedupOps {
 
   /** MinHash signatures from shingle SETS: for each of `numHashes` seeded
     * hash functions, the min over the doc's shingle hashes. Entirely
-    * map-side, NO shuffle, one fused loop (native [[MinHashSig]]). */
+    * map-side, NO shuffle, one fused loop ([[GraftRuntime.minhashSig]]). */
   def minhashSignatures(sets: DataFrame, numHashes: Int): DataFrame = {
-    import org.apache.spark.sql.GraftShims
-    val sig = GraftShims.column(
-      MinHashSig(GraftShims.expression(col("shset")), numHashes))
+    require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
+    val sig = Kernel.minhashSig(col("shset"), lit(numHashes))
     sets.select(col("doc"), sig.as("sig"))
       .select(col("doc") +:
         (0 until numHashes).map(i => element_at(col("sig"), i + 1).as(s"h$i")): _*)
@@ -484,12 +480,10 @@ object DedupOps {
 
   /** 64-bit SimHash over tokens: bit j of the result is the sign of
     * Σ_tokens (bit j of xxhash64(token) ? +1 : -1). Delegates to the
-    * native [[SimHash64]] expression (single byte-scan per row; see its
-    * scaladoc for why this beats the composed array-ops formulation). */
-  def simhash(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(SimHash64(GraftShims.expression(text)))
-  }
+    * native [[GraftRuntime.simhash64]] kernel (single byte-scan per row;
+    * see its scaladoc for why this beats the composed array-ops
+    * formulation). */
+  def simhash(text: Column): Column = Kernel.simhash64(text)
 
   /** Reference formulation of [[simhash]] with pure array ops (kept for
     * the property test that pins the native expression's semantics). */

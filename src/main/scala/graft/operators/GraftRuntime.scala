@@ -6,10 +6,12 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared runtime bodies for the native expressions — called both from
-  * interpreted `nullSafeEval` and from generated code (each expression's
-  * `doGenCode` emits a static call here, so whole-stage codegen spans stay
-  * unbroken instead of falling back to interpreted expression bridges). */
+/** Native kernels of the text, dedup and vector operators. Most are
+  * called through [[GraftCall]] (their call shapes are listed in
+  * [[Kernel]]), the rest from the hand-written expressions that carry a
+  * driver-side object into generated code. Either way generated code makes
+  * one static call here, so whole-stage codegen spans stay unbroken
+  * instead of falling back to interpreted expression bridges. */
 object GraftRuntime {
 
   @inline private def isWs(b: Byte): Boolean =
@@ -17,8 +19,15 @@ object GraftRuntime {
 
   @inline private def rot5(a: Long): Long = (a << 5) | (a >>> 59)
 
-  // ---- DotProduct ---------------------------------------------------------
+  // ---- dot ----------------------------------------------------------------
 
+  /** Double-precision dot product of two float vectors. Bit-identical to
+    * the composed
+    * `aggregate(zip_with(a, b, (x, y) => x.cast(double) * y.cast(double)), 0.0, _ + _)`
+    * (same left-to-right fold order, so oracle-compared cosines don't
+    * move), but one fused loop instead of two interpreted higher-order
+    * passes — the pair loop of brute-force similarity search runs this
+    * millions of times. */
   def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0
@@ -30,11 +39,13 @@ object GraftRuntime {
     acc
   }
 
-  // ---- Int8Pack / Int8Dot -------------------------------------------------
+  // ---- int8Pack / int8Dot -------------------------------------------------
 
   /** Pack a float vector into int8 codes at `scale` (= max|v|/127):
     * round-half-away-from-zero of v/scale, clamped to ±127, one byte per
-    * element — the storage form of [[Quantize]]. `scale <= 0` (the zero
+    * element — the BINARY storage form of [[Quantize]]: exactly dim bytes
+    * per vector instead of parquet-encoded INT32s, the layout a 100 TB ANN
+    * index actually wants on disk and through the shuffle. `scale <= 0` (the zero
     * vector) packs all-zero codes. Rounding matches Spark/DuckDB
     * `round()` (away from zero), so packed codes equal the q80-oracled
     * ARRAY<INT> lane byte-for-byte. */
@@ -55,7 +66,9 @@ object GraftRuntime {
   }
 
   /** Fused signed-byte dot product — the re-rank inner loop over packed
-    * codes. Fits in a long: 127² × dim ≪ 2⁶³ for any real dim. */
+    * codes. Quantization scales cancel out of cosine
+    * (cos(s_a·a, s_b·b) = cos(a, b)), so ranking needs only these integer
+    * dots. Fits in a long: 127² × dim ≪ 2⁶³ for any real dim. */
   def int8Dot(a: Array[Byte], b: Array[Byte]): Long = {
     val n = math.min(a.length, b.length)
     var acc = 0L
@@ -67,8 +80,20 @@ object GraftRuntime {
     acc
   }
 
-  // ---- SimHash64 ----------------------------------------------------------
+  // ---- simhash64 ----------------------------------------------------------
 
+  /** 64-bit SimHash over whitespace tokens. Semantics match the
+    * composed-array-ops version ([[DedupOps.simhashArrayOps]]): token hash =
+    * Spark `xxhash64` (seed 42) over the token's UTF-8 bytes; bit j of the
+    * result = sign of Σ_tokens (bit j set ? +1 : -1); ties (vote 0) clear
+    * the bit; empty/blank input → 0.
+    *
+    * Why native: the composed version materializes a 64-long vote array
+    * per token per row through `aggregate`/`zip_with` codegen —
+    * O(tokens·64) array writes. This keeps the 64 counters in a local
+    * array across one byte-scan of the string; ~6× faster at sf0.1 and
+    * the difference grows with document length, so it is the version a
+    * 100 TB dedup pass would run. */
   def simhash64(s: UTF8String): Long = {
     val bytes = s.getBytes
     val votes = new Array[Int](64)
@@ -102,8 +127,22 @@ object GraftRuntime {
     }
   }
 
-  // ---- ShingleSet ---------------------------------------------------------
+  // ---- shingleSet ---------------------------------------------------------
 
+  /** Distinct k-shingle hash set over whitespace tokens. Semantics match
+    * the composed-column formulation kept in
+    * [[DedupOps.shingleSetsArrayOps]]: token hash = `xxhash64` (seed 42)
+    * of the token bytes; shingle id = xor-rotate-5 fold of its k
+    * consecutive token hashes; docs with fewer than k tokens produce the
+    * single fold of all their tokens; result is the distinct set
+    * (first-occurrence order).
+    *
+    * Why native: the composed version nests three higher-order functions
+    * (`transform(sequence, i => aggregate(slice(...)))`) which evaluate
+    * interpreted with per-element boxing — ~1.1 ms/doc at sf0.1. This is
+    * a single byte-scan plus an insertion-ordered dedup table, ~20×
+    * faster, and the shingle step is the front of every dedup pipeline
+    * the engine runs at 100 TB. */
   def shingleSet(s: UTF8String, k: Int): ArrayData = {
     val bytes = s.getBytes
     val n = bytes.length
@@ -145,7 +184,7 @@ object GraftRuntime {
     new GenericArrayData(out)
   }
 
-  // ---- GramHashes ---------------------------------------------------------
+  // ---- gramHashes ---------------------------------------------------------
 
   /** Positional k-gram hashes over whitespace tokens: element `p` is the
     * xor-rotate-5 fold of the xxhash64 (seed 42) token hashes at positions
@@ -153,7 +192,16 @@ object GraftRuntime {
     * POSITION ORDER with no dedup, so a consumer can detect aligned
     * duplicated runs. Documents with fewer than k tokens produce an EMPTY
     * array (a span of length ≥ k cannot start in them), unlike
-    * [[shingleSet]]'s single whole-doc fold. */
+    * [[shingleSet]]'s single whole-doc fold.
+    *
+    * This is the map-side front of the duplicated-span detector
+    * ([[SpanDedup]]): one byte-scan per document, so the only thing that
+    * ever leaves the document scan is (doc, position, 8-byte gram id).
+    * The composed higher-order-function formulation (`transform(sequence,
+    * i => aggregate(slice(...)))`, kept in
+    * [[SpanDedup.gramHashesArrayOps]]) evaluates interpreted with
+    * per-element boxing — the same ~20× penalty measured for
+    * [[shingleSet]]. */
   def gramHashes(s: UTF8String, k: Int): ArrayData = {
     val bytes = s.getBytes
     val n = bytes.length
@@ -186,7 +234,14 @@ object GraftRuntime {
     }
   }
 
-  // ---- WordChunks / WordWindows -------------------------------------------
+  // ---- wordChunks / wordWindows -------------------------------------------
+  //
+  // Tokenize once, emit single-space-re-joined token groups. The composed
+  // formulations (`transform(sequence(...), i => array_join(slice(
+  // split(...), ...)))`) embed the split inside the lambda, so interpreted
+  // evaluation re-splits the text once per emitted gram — O(len²/k) per
+  // document. These read the text once and copy token bytes out of one
+  // array.
 
   /** Byte ranges (start, end) of whitespace-separated tokens. */
   private def tokenRanges(bytes: Array[Byte]): (Array[Int], Array[Int], Int) = {
@@ -233,7 +288,8 @@ object GraftRuntime {
     * partial chunk included; blank input → empty array. Equals
     * `transform(sequence(0, ceil(n/k)-1), i => array_join(slice(
     * split(trim(s), '\s+'), i*k+1, k), ' '))` without re-splitting the
-    * text once per chunk. */
+    * text once per chunk — the unit of paragraph-style dedup on corpora
+    * without newline structure ([[ParagraphDedup]]). */
   def wordChunks(s: UTF8String, k: Int): ArrayData = {
     val bytes = s.getBytes
     val (starts, ends, nTok) = tokenRanges(bytes)
@@ -251,7 +307,8 @@ object GraftRuntime {
   }
 
   /** Sliding k-token windows (full windows only), single-space
-    * re-joined; fewer than k tokens → empty array. */
+    * re-joined; fewer than k tokens → empty array — textual n-grams for
+    * boilerplate profiling (q67). */
   def wordWindows(s: UTF8String, k: Int): ArrayData = {
     val bytes = s.getBytes
     val (starts, ends, nTok) = tokenRanges(bytes)
@@ -267,7 +324,7 @@ object GraftRuntime {
     }
   }
 
-  // ---- TermRuns -----------------------------------------------------------
+  // ---- termRuns -----------------------------------------------------------
 
   /** Per-document (term, tf) pairs over the LOWERCASED whitespace tokens,
     * in sorted-term order — one lowercase, one tokenize, one sort, one
@@ -305,13 +362,22 @@ object GraftRuntime {
     }
   }
 
-  // ---- CharWindows --------------------------------------------------------
+  // ---- charWindows --------------------------------------------------------
 
   /** All k-code-point windows of a string, in order: element `i` equals
     * `substr(s, i+1, k)` (code-point semantics, matching Spark/DuckDB
     * substr). Strings shorter than k code points yield an empty array.
     * One pass: code-point byte offsets are walked once and windows are
-    * zero-copy-sliced out of one shared byte array. */
+    * zero-copy-sliced out of one shared byte array. The front of the
+    * char-n-gram operators (trigram LM scoring, DSIR weighting).
+    *
+    * Why native: the composed formulation
+    * `transform(sequence(1, length(t)-k+1), i => t.substr(i, k))` embeds
+    * the WHOLE argument expression `t` inside the lambda body, so an
+    * interpreted lambda re-evaluates it per element — for a normalized
+    * argument (`lower(regexp_replace(trim(text)))`) that is one regex pass
+    * per emitted window, O(len²) regex work per document. Here the
+    * argument evaluates once. */
   def charWindows(s: UTF8String, k: Int): ArrayData = {
     val bytes = s.getBytes
     val n = bytes.length
@@ -338,8 +404,14 @@ object GraftRuntime {
     }
   }
 
-  // ---- MinHashSig ---------------------------------------------------------
+  // ---- minhashSig ---------------------------------------------------------
 
+  /** MinHash signature over a shingle-hash set: element i = min over
+    * shingles s of `xxhash64(s, i)`, with the exact hash composition of
+    * the column form `xxhash64(col, lit(i))` (seed 42 → fold the long,
+    * then fold the int) — pinned by a property test against the composed
+    * `array_min(transform(...))` formulation, which evaluates `numHashes`
+    * interpreted passes per row. One fused loop. */
   def minhashSig(arr: ArrayData, numHashes: Int): ArrayData = {
     val n = arr.numElements()
     val mins = Array.fill(numHashes)(Long.MaxValue)
@@ -357,7 +429,7 @@ object GraftRuntime {
     new GenericArrayData(mins)
   }
 
-  // ---- LshSignature -------------------------------------------------------
+  // ---- lshSignature -------------------------------------------------------
 
   /** Hyperplane components, lazily materialized per plane index and grown
     * to the largest dimension seen. Component (p, j) is fully determined
@@ -390,16 +462,26 @@ object GraftRuntime {
   /** Sign-bit LSH signature: bit p set iff the dot product of `vec` with
     * pseudo-random hyperplane p is > 0. Bit-identical to the composed
     * `zip_with`/`aggregate` fold (same left-to-right summation order,
-    * same per-component double arithmetic) on null-free vectors; two
-    * DEFINED divergences, both pinned by tests:
-    *  - whole-null vector → null signature (the expression wrapper is
-    *    null-intolerant) where the composed form's `when` collapsed null
-    *    to 0 — a bucket-0 collision artifact, not a behavior to keep;
+    * same per-component double arithmetic) on null-free vectors, but one
+    * fused loop over a plane matrix memoized per executor. The composed
+    * form runs `planes` separate folds, each re-deriving every hyperplane
+    * component through an interpreted `xxhash64` lambda per element: the
+    * last interpreted higher-order-function hot path, which every ANN
+    * probe and LSH near-dup pass paid planes × dim times per corpus row.
+    *
+    * `containsNull` arrays are accepted on purpose — parquet list columns
+    * read back with nullable elements even when no null exists. Two
+    * DEFINED divergences from the composed fold, both pinned by tests:
+    *  - whole-null vector → null signature (the call is null-intolerant)
+    *    where the composed form's `when` collapsed null to 0 — a bucket-0
+    *    collision artifact, not a behavior to keep;
     *  - null ELEMENT → 0.0 contribution to every plane (sparse-vector
     *    reading; explicit isNullAt so the semantics cannot depend on an
     *    ArrayData implementation's null-slot representation), where the
     *    composed fold would null-poison the plane's projection into an
-    *    unconditional 0 bit. */
+    *    unconditional 0 bit. Zeroing one missing component keeps the
+    *    other dims' geometry; collapsing the whole plane to bit 0 would
+    *    bucket every null-containing vector together. */
   def lshSignature(vec: ArrayData, planes: Int): Long = {
     val dim = vec.numElements()
     var sig = 0L
@@ -418,8 +500,17 @@ object GraftRuntime {
     sig
   }
 
-  // ---- TokenStats ---------------------------------------------------------
+  // ---- tokenStats ---------------------------------------------------------
 
+  /** One-scan token statistics for the text-analysis operators: the
+    * [[TokenStats.schema]] struct `(n_tokens, n_chars, stop, en, es, de,
+    * fr)`. Token semantics match `TextOps.tokens` (trim + ASCII-whitespace
+    * split).
+    *
+    * Why native: `langId`/`qualityScore` as column compositions evaluate
+    * `split` + interpreted `filter` lambdas several times per row (no
+    * common-subexpression elimination across when/greatest chains). This
+    * is one byte-scan. */
   def tokenStats(s: UTF8String): InternalRow = {
     val bytes = s.getBytes
     val n = bytes.length
@@ -443,7 +534,7 @@ object GraftRuntime {
     InternalRow(nTokens, nChars, stop, en, es, de, fr)
   }
 
-  // ---- RepetitionStats ----------------------------------------------------
+  // ---- repetitionStats ----------------------------------------------------
 
   private val Space = UTF8String.fromString(" ")
 
@@ -452,7 +543,14 @@ object GraftRuntime {
     * semantics (UTF8String equality — no hashing shortcut), matching the
     * composed `array_distinct` formulation token-for-token; bigram
     * identity is the space-joined pair, identical to `concat_ws(" ", ...)`
-    * (tokens cannot contain whitespace, so the join is injective). */
+    * (tokens cannot contain whitespace, so the join is injective).
+    *
+    * Why native: the composed form
+    * ([[QualityFilters.repetitionStatsArrayOps]]) materializes the token
+    * array, a transformed bigram array, and two `array_distinct` copies
+    * per row — five short-lived arrays per document. This runs one byte
+    * scan with two hash sets and allocates only the token slices, the same
+    * discipline as [[tokenStats]]. */
   def repetitionStats(s: UTF8String): InternalRow = {
     val bytes = s.getBytes
     val n = bytes.length
@@ -610,7 +708,8 @@ object GraftRuntime {
     count
   }
 
-  /** (emails, ips, phones) hit counts — three byte scans, no regex. */
+  /** (emails, ips, phones) hit counts — three byte scans, no regex (see
+    * [[Privacy.piiCounts]]). */
   def piiStats(s: UTF8String): InternalRow = {
     val b = s.getBytes
     InternalRow(scanEmails(b, null), scanIps(b, null), scanPhones(b, null))
@@ -643,7 +742,8 @@ object GraftRuntime {
 
   /** Sequential-pass redaction, same order and placeholders as the
     * regexp_replace chain: emails, then IPs, then phones — each pass
-    * scans the previous pass's output, exactly like the Column version. */
+    * scans the previous pass's output, exactly like the Column version
+    * (see [[Privacy.redact]]). */
   def piiRedact(s: UTF8String): UTF8String = {
     var b = s.getBytes
     b = replaceAll(b, scanEmails, EmailTag)
@@ -662,7 +762,7 @@ object GraftRuntime {
     * `cc(j) - 2·(v·c_j)` — the `v·v` term is constant across j, so it
     * never moves the argmin. Strict `<` keeps the LOWEST index on an
     * exact tie (mirroring the oracle's `ORDER BY dist, cl`). Null vector
-    * elements contribute 0.0 (the [[LshSignature]] sparse-null
+    * elements contribute 0.0 (the [[lshSignature]] sparse-null
     * convention); a vector shorter than dim treats missing dims as 0. */
   def nearestCentroid(v: ArrayData, flat: Array[Double], cc: Array[Double],
                       dim: Int): Int = {
@@ -869,8 +969,9 @@ object GraftRuntime {
   /** The NB FIT side's feature stream, fused: md5-prefix bucket ids of
     * every uni+bigram word feature of the normalized text — replaces
     * `explode(wordFeatures) → md5 → conv → %` whose higher-order
-    * transform/element_at lambdas run INTERPRETED and dominated the fit
-    * pass. Normalization replicates normText exactly (Spark trim →
+    * transform/element_at lambdas run INTERPRETED and dominated the
+    * q119/q122 fit pass (parity-pinned against the composed form in the
+    * spec and end-to-end by the q119/q122/q123 oracles). Normalization replicates normText exactly (Spark trim →
     * java-regex whitespace squeeze → UTF8String lowercase — the
     * [[NbDocScore.Compiled.score]] path, parity-pinned). Blank text →
     * empty array. */
@@ -901,8 +1002,9 @@ object GraftRuntime {
 
   /** Char-TRIGRAM bucket stream — [[nbFeatBuckets]]'s orthographic twin
     * for the multiclass lang-id fit/predict passes: md5-prefix bucket of
-    * every 3-code-point window of the normalized text (the CharWindows
-    * slicing, the featBucket hash). Texts under 3 code points → empty. */
+    * every 3-code-point window of the normalized text (the charWindows
+    * slicing, the featBucket hash), fused for the same reason. Texts
+    * under 3 code points → empty. */
   def triBuckets(text: org.apache.spark.unsafe.types.UTF8String,
                  buckets: Int): ArrayData = {
     val squeezed = text.trim().toString.replaceAll("\\s+", " ")
@@ -925,7 +1027,7 @@ object GraftRuntime {
     }
   }
 
-  // ---- RuleStats (Gopher/C4 heuristic gate) -------------------------------
+  // ---- ruleStats (Gopher/C4 heuristic gate) -------------------------------
 
   private val LoremNeedle = UTF8String.fromString("lorem ipsum")
 

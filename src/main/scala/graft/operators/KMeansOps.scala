@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * IVF-style coarse quantization.
   *
   * The matrix rides into generated code as a reference object (it is
-  * data-dependent, unlike [[LshSignature]]'s derivable plane matrix), so
+  * data-dependent, unlike [[GraftRuntime.lshSignature]]'s derivable plane matrix), so
   * the per-row cost is one fused k·dim multiply-accumulate pass with no
   * per-row allocation; whole-stage codegen spans stay unbroken. The
   * argmin compares `‖c_j‖² − 2·v·c_j` (the shared `‖v‖²` term cannot move

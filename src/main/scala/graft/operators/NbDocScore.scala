@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims.{column, toExpression}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -111,51 +112,8 @@ object NbDocScore {
     column(NbDocScore(toExpression(text.cast("string")), model))
 
   def featBucketsCol(text: Column, buckets: Int): Column =
-    column(NbFeatBuckets(toExpression(text.cast("string")), buckets))
+    Kernel.nbFeatBuckets(text.cast("string"), lit(buckets))
 
   def triBucketsCol(text: Column, buckets: Int): Column =
-    column(TriBuckets(toExpression(text.cast("string")), buckets))
-}
-
-/** Native feature-bucket stream — the FIT side of the NB pipeline fused:
-  * md5-prefix bucket ids (LONGs) of every uni+bigram feature of the
-  * normalized text. The composed `explode(wordFeatures) → md5 → conv →
-  * %` formulation runs its transform/element_at lambdas INTERPRETED
-  * (higher-order functions never enter whole-stage codegen), which
-  * dominated the q119/q122 fit pass; this emits the bucket array in one
-  * generated static call (r19; parity-pinned against the composed form
-  * in the spec and end-to-end by the q119/q122/q123 oracles). */
-case class NbFeatBuckets(child: Expression, buckets: Int)
-    extends UnaryExpression {
-  override def prettyName: String = "nb_feat_buckets"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.nbFeatBuckets(input.asInstanceOf[UTF8String], buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      a => s"graft.operators.GraftRuntime.nbFeatBuckets($a, $buckets)")
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** [[NbFeatBuckets]]'s orthographic twin: md5-prefix bucket ids of every
-  * 3-code-point window of the normalized text — the multiclass lang-id
-  * fit/predict feature stream, fused for the same reason. */
-case class TriBuckets(child: Expression, buckets: Int)
-    extends UnaryExpression {
-  override def prettyName: String = "tri_buckets"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.triBuckets(input.asInstanceOf[UTF8String], buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      a => s"graft.operators.GraftRuntime.triBuckets($a, $buckets)")
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
+    Kernel.triBuckets(text.cast("string"), lit(buckets))
 }

@@ -29,13 +29,14 @@ object ParagraphDedup {
 
   /** Per-document chunk array: fixed windows of `chunkWords` whitespace
     * tokens, single-space re-joined (the trailing chunk may be short).
-    * Blank documents produce an empty array. Native [[WordChunks]] —
+    * Blank documents produce an empty array. Native
+    * [[GraftRuntime.wordChunks]] —
     * the composed transform+slice formulation (kept in
     * [[chunkArrayOps]] as the property pin) re-splits the text once per
     * chunk when the lambda evaluates interpreted. */
   private[graft] def chunkArray(text: Column, chunkWords: Int): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(WordChunks(GraftShims.expression(text), chunkWords))
+    require(chunkWords >= 1, s"gram size must be >= 1, got $chunkWords")
+    Kernel.wordChunks(text, lit(chunkWords))
   }
 
   /** Reference formulation of [[chunkArray]] (property-test pin). */

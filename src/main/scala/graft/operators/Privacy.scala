@@ -1,12 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** PII detection and redaction for training-data curation.
   *
@@ -40,13 +36,11 @@ object Privacy {
     * scanner; java.util.regex's backtracking NFA was ~4× slower on the
     * same scan — q62). [[piiCountsRegex]] is the parity-tested reference
     * formulation and the shape the DuckDB oracle runs. */
-  def piiCounts(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
+  def piiCounts(text: Column): Column =
     // cast preserves the regexp_count formulation's implicit coercion
     // (numeric input counts over its string rendering); identity casts
     // are folded away on string inputs
-    GraftShims.column(PiiStats(GraftShims.expression(text.cast("string"))))
-  }
+    Kernel.piiStats(text.cast("string"))
 
   /** Regex formulation of [[piiCounts]] (parity-test reference). */
   private[graft] def piiCountsRegex(text: Column): Column = struct(
@@ -60,10 +54,7 @@ object Privacy {
     * characters, so passes cannot create new matches. Native sequential-
     * pass scanner, pass-for-pass equivalent to the regexp_replace chain
     * in [[redactRegex]] (the parity-test reference). */
-  def redact(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(PiiRedact(GraftShims.expression(text.cast("string"))))
-  }
+  def redact(text: Column): Column = Kernel.piiRedact(text.cast("string"))
 
   /** Regex formulation of [[redact]] (parity-test reference). */
   private[graft] def redactRegex(text: Column): Column =
@@ -74,39 +65,10 @@ object Privacy {
       PhoneRe, "<PHONE>")
 }
 
-/** Native (emails, ips, phones) counts — see [[Privacy.piiCounts]]. */
-case class PiiStats(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "graft_pii_stats"
-  override def dataType: DataType = PiiStats.schema
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_pii_stats requires a string column, got ${child.dataType.simpleString}")
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.piiStats(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.operators.GraftRuntime.piiStats($a)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
+/** The (emails, ips, phones) struct of [[GraftRuntime.piiStats]]. */
 object PiiStats {
   val schema: StructType = StructType(Seq(
     StructField("emails", IntegerType, nullable = false),
     StructField("ips", IntegerType, nullable = false),
     StructField("phones", IntegerType, nullable = false)))
-}
-
-/** Native three-pass redaction — see [[Privacy.redact]]. */
-case class PiiRedact(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "graft_pii_redact"
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_pii_redact requires a string column, got ${child.dataType.simpleString}")
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.piiRedact(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.operators.GraftRuntime.piiRedact($a)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -37,12 +37,9 @@ object QualityFilters {
     * occurrences beyond the first (so dup/total is the duplicated
     * fraction). Integer-valued by design: downstream aggregates stay
     * exactly oracle-comparable (no float-summation order sensitivity).
-    * Native one-scan expression ([[RepetitionStats]]); the composed
+    * Native one-scan kernel ([[GraftRuntime.repetitionStats]]); the composed
     * [[repetitionStatsArrayOps]] is the parity-tested reference shape. */
-  def repetitionStats(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(RepetitionStats(GraftShims.expression(text)))
-  }
+  def repetitionStats(text: Column): Column = Kernel.repetitionStats(text)
 
   /** Array-ops formulation of [[repetitionStats]] — kept as the unit-test
     * oracle for the native expression (five array allocations per row vs
@@ -61,7 +58,7 @@ object QualityFilters {
     * of its DISTINCT token n-grams occur in at least `minDf` documents
     * (shared boilerplate). Output: (doc, grams, shared_grams).
     *
-    * Gram identity rides the native [[ShingleSet]] fold (one byte scan
+    * Gram identity rides the native [[GraftRuntime.shingleSet]] fold (one byte scan
     * per doc emitting the distinct hashed n-gram set — the q35/q36
     * machinery and its no-collision regime) instead of materializing
     * string gram arrays; docs under n tokens are pre-filtered because the
@@ -155,16 +152,13 @@ object QualityFilters {
     *    (occurrences beyond first of a trimmed line),
     *  - `has_lorem` ("lorem ipsum" case-folded), `has_brace` ('{').
     *
-    * Native one-scan expression ([[RuleStats]] →
-    * [[GraftRuntime.ruleStats]]): the composed built-in formulation
+    * Native one-scan kernel ([[GraftRuntime.ruleStats]]): the composed
+    * built-in formulation
     * ([[ruleStatsArrayOps]], kept as the parity pin) evaluates ~10
     * higher-order array lambdas per row INTERPRETED — HOFs never enter
     * whole-stage codegen — which is real money on the gate's place in
     * the pipeline (the cheapest text stage, run over every raw doc). */
-  def ruleStats(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(RuleStats(GraftShims.expression(text)))
-  }
+  def ruleStats(text: Column): Column = Kernel.ruleStats(text)
 
   /** Built-in-composition formulation of [[ruleStats]] — the parity-test
     * reference for the native expression (NULL handling differs: the
@@ -279,16 +273,13 @@ object QualityFilters {
   }
 
   /** Gopher §A1.1 repetition fractions as a 9-double struct (native
-    * [[RepFractions]] → [[GraftRuntime.repFractions]]): top n-gram
+    * [[GraftRuntime.repFractions]]): top n-gram
     * character fractions (n = 2..4, max-coverage tie-break — see the
     * runtime scaladoc for the documented deviation from the paper's
     * tie-ambiguous "most frequent") and duplicate n-gram character
     * fractions (n = 5..10, position-union coverage). Spec-pinned against
     * an independent Scala reference and the q162 SQL re-derivation. */
-  def repFractions(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(RepFractions(GraftShims.expression(text)))
-  }
+  def repFractions(text: Column): Column = Kernel.repFractions(text)
 
   /** Per-rule verdicts over a [[repFractions]] struct (true = passes);
     * the repetition twin of [[ruleVerdicts]]. */
@@ -354,38 +345,7 @@ object QualityFilters {
   }
 }
 
-/** Native one-scan Gopher/C4 rule counters — see
-  * [[QualityFilters.ruleStats]]. */
-case class RuleStats(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "graft_rule_stats"
-  override def dataType: DataType = RuleStats.schema
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_rule_stats requires a string column, got ${child.dataType.simpleString}")
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.ruleStats(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.operators.GraftRuntime.ruleStats($a)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Native Gopher repetition fractions — see
-  * [[QualityFilters.repFractions]]. */
-case class RepFractions(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "graft_rep_fractions"
-  override def dataType: DataType = RepFractions.schema
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_rep_fractions requires a string column, got ${child.dataType.simpleString}")
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.repFractions(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.operators.GraftRuntime.repFractions($a)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
+/** The 9-double struct of [[GraftRuntime.repFractions]]. */
 object RepFractions {
   val schema: StructType = StructType(
     (Seq("top2_frac", "top3_frac", "top4_frac") ++
@@ -414,6 +374,7 @@ case class RuleGate(child: Expression, params: QualityFilters.RuleParams)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** The rule-counter struct of [[GraftRuntime.ruleStats]]. */
 object RuleStats {
   val schema: StructType = StructType(Seq(
     StructField("n_tokens", IntegerType, nullable = false),

@@ -42,21 +42,17 @@ object Quantize {
     transform(codes, c => (c.cast("double") * scale).cast("float"))
 
   /** Quantize `vecCol` into the PACKED form: `q_scale` DOUBLE + `q_bytes`
-    * BINARY, exactly one byte per element ([[Int8Pack]]) — what a 100 TB
+    * BINARY, exactly one byte per element ([[GraftRuntime.int8Pack]]) — what a 100 TB
     * index stores instead of parquet-encoded INT32 code arrays. Codes
     * equal [[quantizeInt8]]'s (same round-half-away-from-zero), so the
     * q80 oracle pins this lane too. */
   def quantizeInt8Packed(embeddings: DataFrame, vecCol: String = "embedding"): DataFrame = {
     val df = embeddings.withColumn("q_scale", int8Scale(col(vecCol)))
-    df.withColumn("q_bytes", org.apache.spark.sql.GraftShims.column(Int8Pack(
-      org.apache.spark.sql.GraftShims.expression(col(vecCol)),
-      org.apache.spark.sql.GraftShims.expression(col("q_scale")))))
+    df.withColumn("q_bytes", Kernel.int8Pack(col(vecCol), col("q_scale")))
   }
 
-  /** Signed-byte dot product of two packed code columns ([[Int8Dot]]). */
-  def int8Dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftShims.column(Int8Dot(
-      org.apache.spark.sql.GraftShims.expression(a), org.apache.spark.sql.GraftShims.expression(b)))
+  /** Signed-byte dot product of two packed code columns ([[GraftRuntime.int8Dot]]). */
+  def int8Dot(a: Column, b: Column): Column = Kernel.int8Dot(a, b)
 
   /** Cosine over packed codes. Quantization scales cancel out of cosine
     * (cos(s_a·a, s_b·b) = cos(a, b)), so this needs only integer dots —

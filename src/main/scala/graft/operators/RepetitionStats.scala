@@ -1,41 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** One-scan intra-document repetition counters for the quality filters.
-  *
-  * Emits `struct(tokens, dup_tokens, bigrams, dup_bigrams)` with the same
-  * semantics as the composed `array_distinct` formulation in
-  * [[QualityFilters.repetitionStatsArrayOps]] (the parity-tested
-  * reference shape).
-  *
-  * Why a custom expression: the composed form materializes the token
-  * array, a transformed bigram array, and two `array_distinct` copies per
-  * row — five short-lived arrays per document. This expression runs one
-  * byte scan with two hash sets and allocates only the token slices, the
-  * same discipline as [[TokenStats]]. */
-case class RepetitionStats(child: Expression) extends UnaryExpression {
-
-  override def prettyName: String = "graft_repetition_stats"
-  override def dataType: DataType = RepetitionStats.schema
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"graft_repetition_stats requires a string column, got ${child.dataType.simpleString}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.repetitionStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.operators.GraftRuntime.repetitionStats($a)")
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
+/** The struct of [[GraftRuntime.repetitionStats]]:
+  * `struct(tokens, dup_tokens, bigrams, dup_bigrams)`. */
 object RepetitionStats {
   val schema: StructType = StructType(Seq(
     StructField("tokens", IntegerType, nullable = false),

@@ -24,12 +24,9 @@ import org.apache.spark.sql.functions._
 object SimilarityOps {
 
   /** Double-precision dot product of two float vectors (native
-    * [[DotProduct]]; bit-identical to the composed zip_with/aggregate
+    * [[GraftRuntime.dot]]; bit-identical to the composed zip_with/aggregate
     * fold, pinned by a property test). */
-  def dot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(DotProduct(GraftShims.expression(a), GraftShims.expression(b)))
-  }
+  def dot(a: Column, b: Column): Column = Kernel.dot(a, b)
 
   /** Reference formulation of [[dot]] (property-test pin). */
   private[graft] def dotArrayOps(a: Column, b: Column): Column =
@@ -62,11 +59,13 @@ object SimilarityOps {
   }
 
   /** Sign-bit signature of a vector against `planes` deterministic
-    * pseudo-random hyperplanes (native [[LshSignature]]; bit-identical to
-    * the composed zip_with/aggregate folds, pinned by a property test). */
+    * pseudo-random hyperplanes (native [[GraftRuntime.lshSignature]];
+    * bit-identical to the composed zip_with/aggregate folds, pinned by a
+    * property test). */
   def lshSignature(vec: Column, planes: Int): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(LshSignature(GraftShims.expression(vec), planes))
+    require(planes >= 1 && planes <= 63,
+      s"planes must be in [1, 63] (sign bits packed into one long), got $planes")
+    Kernel.lshSignature(vec, lit(planes))
   }
 
   /** Deterministic pseudo-random hyperplane component: plane `p`,

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * (find every maximal run of ≥ minSpan tokens shared verbatim between two
   * documents), re-expressed as a shuffle-friendly Spark plan:
   *
-  *  1. positional k-gram hashes per document (native [[GramHashes]] —
+  *  1. positional k-gram hashes per document ([[GraftRuntime.gramHashes]] —
   *     one byte-scan, map-side, whole-stage codegen'd);
   *  2. ONE shuffle groups the gram mass by gram id into per-gram
   *     occurrence lists via the size-bounded [[BoundedOccListAgg]];
@@ -37,15 +37,14 @@ object SpanDedup {
   /** Positional gram relation: (doc, pos, g) — one row per k-gram start
     * position. Docs with fewer than k tokens contribute nothing. */
   def gramRelation(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.GraftShims
-    df.select(col(idCol).as("doc"),
-        GraftShims.column(GramHashes(GraftShims.expression(col(textCol)), k)).as("ga"))
+    require(k >= 1, s"gram size must be >= 1, got $k")
+    df.select(col(idCol).as("doc"), Kernel.gramHashes(col(textCol), lit(k)).as("ga"))
       .select(col("doc"), posexplode(col("ga")))
       .select(col("doc"), col("pos").cast("long").as("pos"), col("col").as("g"))
   }
 
   /** Reference formulation of the positional gram array with pure array
-    * ops (kept for the property test pinning [[GramHashes]] semantics). */
+    * ops (kept for the property test pinning [[GraftRuntime.gramHashes]] semantics). */
   private[graft] def gramHashesArrayOps(text: Column, k: Int): Column = {
     val th = transform(TextOps.tokens(text), t => xxhash64(t))
     val n = size(th)

@@ -16,13 +16,10 @@ object TextOps {
     when(length(trim(text)) === 0, array().cast("array<string>"))
       .otherwise(split(trim(text), "\\s+"))
 
-  /** One-scan token statistics (native [[TokenStats]] expression); the
+  /** One-scan token statistics (native [[GraftRuntime.tokenStats]]); the
     * shared input for tokenCount/stopwordRatio/qualityScore/langId so a
     * row is tokenized once, not once per metric. */
-  def tokenStats(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(TokenStats(GraftShims.expression(text)))
-  }
+  def tokenStats(text: Column): Column = Kernel.tokenStats(text)
 
   /** Token count (whitespace tokenizer). */
   def tokenCount(text: Column): Column = tokenStats(text).getField("n_tokens")
@@ -96,13 +93,11 @@ object TextOps {
 
   /** Character trigrams of the normalized text (empty for texts shorter
     * than 3 chars). Normalization runs ONCE as the native expression's
-    * child; windows are zero-copy slices (see [[CharWindows]] for why
-    * the composed transform+substr formulation — kept in
-    * [[charTrigramsArrayOps]] as the property-test pin — is O(len²)). */
-  def charTrigrams(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(CharWindows(GraftShims.expression(normText(text)), 3))
-  }
+    * argument; windows are zero-copy slices (see
+    * [[GraftRuntime.charWindows]] for why the composed transform+substr
+    * formulation — kept in [[charTrigramsArrayOps]] as the property-test
+    * pin — is O(len²)). */
+  def charTrigrams(text: Column): Column = Kernel.charWindows(normText(text), lit(3))
 
   /** Reference formulation of [[charTrigrams]] with pure built-ins
     * (property-test pin for the native expression). */
@@ -320,7 +315,7 @@ object TextOps {
     // parquet read + job per fit, ~8 fixed-cost jobs across the q122
     // pipeline) disappears. Counts are identical by construction: same
     // rows, same keys.
-    // r19: the feature stream is the fused [[NbFeatBuckets]] expression.
+    // r19: the feature stream is the fused [[GraftRuntime.nbFeatBuckets]] kernel.
     // The composed explode(wordFeatures) -> md5 -> conv chain ran its
     // higher-order lambdas INTERPRETED (HOFs never enter whole-stage
     // codegen) and dominated the pass -- 2.2 s of q119's 2.7 s at
@@ -331,7 +326,7 @@ object TextOps {
 
   /** The pre-r19 composed fit (explode(wordFeatures) -> md5-prefix
     * bucket in the plan) -- the executable parity reference for
-    * [[NbFeatBuckets]]: the fused fit must emit the identical model
+    * [[GraftRuntime.nbFeatBuckets]]: the fused fit must emit the identical model
     * (spec-pinned, multibyte corpora included). */
   private[graft] def seedCrawlNbFitComposed(seed: DataFrame, crawl: DataFrame,
                                             textCol: String = "text",
@@ -539,7 +534,7 @@ object TextOps {
     require(nd.nonEmpty, "training slice has no trigram-bearing documents")
     val langs = nd.keySet.toSeq.sorted
     val nTot = nd.values.sum.toDouble
-    // fused [[TriBuckets]] stream (the NbFeatBuckets rationale: the
+    // fused [[GraftRuntime.triBuckets]] stream (the nbFeatBuckets rationale: the
     // composed explode(charTrigrams) → md5 → conv chain pays per-trigram
     // string materialization + hex parsing; the spec pins parity)
     val cc = withTri

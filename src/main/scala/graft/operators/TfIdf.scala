@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape, in the order the 100 TB audit cares about:
   *   - Per-document term frequencies never shuffle token instances: the
-  *     (term, tf) pairs are built map-side by the native [[TermRuns]]
-  *     expression (one sorted-run scan, O(n log n) per doc, whole-stage
+  *     (term, tf) pairs are built map-side by the native [[GraftRuntime.termRuns]]
+  *     kernel (one sorted-run scan, O(n log n) per doc, whole-stage
   *     codegen'd) — the explode carries one row per DISTINCT term per
   *     doc, not one per token.
   *   - BM25's document-frequency pass aggregates only tokens that match
@@ -34,13 +34,10 @@ object TfIdf {
       .otherwise(split(lower(trim(text)), "\\s+"))
 
   /** Per-document (term, tf) pairs as `array<struct<term,tf>>` in sorted
-    * term order, computed WITHOUT a shuffle by the native [[TermRuns]]
-    * expression (one lowercase → tokenize → sort → run-length scan per
-    * document, whole-stage codegen'd). */
-  def termRuns(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(TermRuns(GraftShims.expression(text)))
-  }
+    * term order, computed WITHOUT a shuffle by the native
+    * [[GraftRuntime.termRuns]] kernel (one lowercase → tokenize → sort →
+    * run-length scan per document, whole-stage codegen'd). */
+  def termRuns(text: Column): Column = Kernel.termRuns(text)
 
   /** Composed reference formulation of [[termRuns]] over a pre-split
     * token array — run boundaries from a filtered index sequence. Its

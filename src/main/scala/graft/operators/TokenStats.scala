@@ -1,40 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One-scan token statistics for the text-analysis operators.
-  *
-  * Emits `struct(n_tokens, n_chars, stop, en, es, de, fr)` where `stop`
-  * counts [[TokenStats.stopwords]] hits and the language fields count the
-  * per-language marker-word hits used by the language-ID heuristic.
-  * Token semantics match `TextOps.tokens` (trim + ASCII-whitespace split).
-  *
-  * Why a custom expression: `langId`/`qualityScore` as column compositions
-  * evaluate `split` + interpreted `filter` lambdas several times per row
-  * (no common-subexpression elimination across when/greatest chains).
-  * One byte-scan in [[GraftRuntime.tokenStats]]. */
-case class TokenStats(child: Expression) extends UnaryExpression {
-
-  override def prettyName: String = "graft_token_stats"
-  override def dataType: DataType = TokenStats.schema
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"graft_token_stats requires a string column, got ${child.dataType.simpleString}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.tokenStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.operators.GraftRuntime.tokenStats($a)")
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
+/** The struct and word sets of [[GraftRuntime.tokenStats]]:
+  * `struct(n_tokens, n_chars, stop, en, es, de, fr)` where `stop` counts
+  * [[stopwords]] hits and the language fields count the per-language
+  * marker-word hits used by the language-ID heuristic. */
 object TokenStats {
   val schema: StructType = StructType(Seq(
     StructField("n_tokens", IntegerType, nullable = false),

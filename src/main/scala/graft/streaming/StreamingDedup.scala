@@ -243,25 +243,6 @@ object StreamingDedup {
         })
   }
 
-  /** Streaming SEMANTIC dedup (`foreachBatch`) against an accumulating
-    * kept-corpus parquet store — the streaming face of
-    * [[graft.operators.KMeansOps.incrementalSemDedup]], closing the
-    * streaming loop on the semantic family the way bloom dedup closes it
-    * for exact content.
-    *
-    * Per micro-batch: read the store snapshot (kept vectors only), run
-    * the incremental keep rule (dropped by any same-cluster STORE row or
-    * a smaller-id same-cluster batch mate within `tau`), append verdicts
-    * to `verdictPath` and the batch's kept vectors to `storePath`. The
-    * kept rows are re-read from the just-written verdict parquet before
-    * the store append, so no plan ever reads and writes `storePath` in
-    * the same job. Centroids are the pre-trained model artifact
-    * ([[graft.operators.KMeansOps.fitSampled]] — at 100 TB you train the
-    * quantizer on a bounded sample before the stream starts).
-    *
-    * State is the store itself: kept vectors × (id + vec) — the curated
-    * corpus a production pipeline persists anyway, not engine state; the
-    * streaming query holds nothing between triggers. */
   /** STREAMING ingest curation — [[graft.operators.Pipeline.curateIncremental]]
     * as a foreachBatch sink: every micro-batch is judged against the
     * seed snapshot PLUS everything previously admitted, and ONE
@@ -445,15 +426,28 @@ object StreamingDedup {
     ()
   }
 
-  /** One relation per trigger (the r16 `curateSink` layout): the verdict
+  /** Streaming SEMANTIC dedup (`foreachBatch`) against the kept corpus
+    * accumulated at `path` — the streaming face of
+    * [[graft.operators.KMeansOps.incrementalSemDedup]], closing the
+    * streaming loop on the semantic family the way bloom dedup closes it
+    * for exact content. Per micro-batch a row is dropped by any
+    * same-cluster stored kept row or a smaller-id same-cluster batch
+    * mate within `tau`.
+    *
+    * One relation per trigger (the r16 `curateSink` layout): the verdict
     * rows carry their vectors and a `batch_id`, so a single append is
     * both the audit log (project id/cluster/kept/batch_id) and the
-    * kept-corpus store (filter `kept`, project id + vector) — the
-    * earlier two-path layout paid a second parquet write plus a verdict
-    * re-read every trigger. The verdict is `localCheckpoint`ed BEFORE
-    * the append: its plan reads `path` through the store side, and the
-    * checkpoint materializes it so no job reads and writes the same
-    * files. */
+    * kept-corpus store (filter `kept`, project id + vector). The verdict
+    * is `localCheckpoint`ed BEFORE the append: its plan reads `path`
+    * through the store side, and the checkpoint materializes it so no
+    * job reads and writes the same files.
+    *
+    * Centroids are the pre-trained model artifact
+    * ([[graft.operators.KMeansOps.fitSampled]] — at 100 TB you train the
+    * quantizer on a bounded sample before the stream starts). State is
+    * the store itself: kept vectors × (id + vec) — the curated corpus a
+    * production pipeline persists anyway, not engine state; the
+    * streaming query holds nothing between triggers. */
   def semDedupSink(batches: DataFrame, idCol: String, vecCol: String,
                    centroids: Array[Array[Double]], tau: Double,
                    path: String):

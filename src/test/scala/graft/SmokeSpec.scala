@@ -197,4 +197,12 @@ class SmokeSpec extends SparkTestBase {
       assert(Bench.fixed(12.0, 2) == "12.00" && Bench.fixed(2.0, 1) == "2.0")
     } finally java.util.Locale.setDefault(cat, prior)
   }
+
+  test("bench family subtotals: harness queries form their own family") {
+    // `value` excludes the harness queries, so the operator families must
+    // hold none of them for their subtotals to sum to it
+    SparkEntry.harnessQueries.foreach(n => assert(Bench.family(n) == "harness", n))
+    val others = SparkEntry.queries.map(_._1).filterNot(SparkEntry.harnessQueries)
+    assert(others.nonEmpty && others.forall(n => Bench.family(n) != "harness"))
+  }
 }
