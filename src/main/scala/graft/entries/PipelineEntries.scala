@@ -349,7 +349,7 @@ private[graft] trait PipelineEntries extends EntryInfra {
     // -- REPETITION-TIER rule-gated curation (r20, verdict #4): q163's
     //    lane with the FULL 20-rule Gopher gate — the nine §A1.1
     //    repetition char-fraction signals enabled on top of the 11 core
-    //    rules, still ONE fused RuleGate expression per row (stage 1.8,
+    //    rules, still ONE fused graft_rule_gate call per row (stage 1.8,
     //    before every pairwise stage). q163/q167 stay tier-off, so this
     //    pins the tier's pipeline composition independently. The corpus
     //    text never trips the tier (natural prose), so the entry injects

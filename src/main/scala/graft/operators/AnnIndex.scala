@@ -237,7 +237,7 @@ object AnnIndex {
   }
 
   /** Top-k query against a [[buildKMeans]] index: each query probes its
-    * `nProbe` nearest cells ([[NearestCentroids]]), the probe list joins
+    * `nProbe` nearest cells ([[KMeansOps.nearestCentroids]]), the probe list joins
     * the index on the PARTITION column so scans prune to the probed
     * cells' files, and exact cosine re-ranks the candidates. */
   def queryKMeans(spark: SparkSession, path: String, queries: DataFrame,

@@ -1,11 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.GraftShims.{column, toExpression}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Deterministic byte-pair-encoding tokenizer — the token-TRUE
@@ -270,6 +266,8 @@ object Bpe {
         syms
       }
     }
+
+    override def toString: String = s"bpe[merges=${merges.length}]"
   }
 
   private val compiledCache =
@@ -279,46 +277,12 @@ object Bpe {
     compiledCache.computeIfAbsent(model.key,
       _ => new Compiled(model.merges.toArray))
 
-  // ------------------------------------------------------- expressions
+  // --------------------------------------------------- kernel bodies
 
   /** Shared scaffolding: whitespace pre-tokenize, per-word encode. */
   private def encodeAll(model: Compiled, text: UTF8String): Iterator[Array[String]] =
     text.toString.trim.split("\\s+").iterator
       .filter(_.nonEmpty).map(model.encodeWord)
-
-  /** `bpe_tokens(text)` → array<string> of subword tokens. */
-  case class BpeTokensExpr(child: Expression, model: BpeModel)
-      extends UnaryExpression {
-    override def prettyName: String = "bpe_tokens"
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    @transient private lazy val c = compiled(model)
-    override protected def nullSafeEval(input: Any): Any =
-      GraftRuntime.bpeTokens(input.asInstanceOf[UTF8String], c)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bpeModel", compiled(model),
-        classOf[Compiled].getName)
-      defineCodeGen(ctx, ev, a => s"graft.operators.GraftRuntime.bpeTokens($a, $ref)")
-    }
-    override protected def withNewChildInternal(c0: Expression): Expression =
-      copy(child = c0)
-  }
-
-  /** `bpe_token_count(text)` → BIGINT, fused (no token array built). */
-  case class BpeTokenCountExpr(child: Expression, model: BpeModel)
-      extends UnaryExpression {
-    override def prettyName: String = "bpe_token_count"
-    override def dataType: DataType = LongType
-    @transient private lazy val c = compiled(model)
-    override protected def nullSafeEval(input: Any): Any =
-      GraftRuntime.bpeTokenCount(input.asInstanceOf[UTF8String], c)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bpeModel", compiled(model),
-        classOf[Compiled].getName)
-      defineCodeGen(ctx, ev, a => s"graft.operators.GraftRuntime.bpeTokenCount($a, $ref)")
-    }
-    override protected def withNewChildInternal(c0: Expression): Expression =
-      copy(child = c0)
-  }
 
   private[operators] def runtimeTokens(text: UTF8String, m: Compiled):
       org.apache.spark.sql.catalyst.util.GenericArrayData = {
@@ -333,11 +297,13 @@ object Bpe {
     n
   }
 
+  /** `bpe_tokens(text)` → array<string> of subword tokens. */
   def tokens(text: Column, model: BpeModel): Column =
-    column(BpeTokensExpr(toExpression(text.cast("string")), model))
+    Kernel.bpeTokens(text.cast("string"), Kernel.model(compiled(model)))
 
+  /** `bpe_token_count(text)` → BIGINT, fused (no token array built). */
   def tokenCount(text: Column, model: BpeModel): Column =
-    column(BpeTokenCountExpr(toExpression(text.cast("string")), model))
+    Kernel.bpeTokenCount(text.cast("string"), Kernel.model(compiled(model)))
 
   // ---------------------------------------------------------- artifacts
 

@@ -752,10 +752,16 @@ object GraftRuntime {
     UTF8String.fromBytes(b)
   }
 
-  // ---- NearestCentroid ----------------------------------------------------
+  // ---- nearest centroid ---------------------------------------------------
 
-  /** Index of the centroid minimizing squared Euclidean distance to `v`.
+  /** Index of the centroid minimizing squared Euclidean distance to `v` —
+    * the inner loop of Lloyd's k-means and of IVF-style coarse
+    * quantization.
     *
+    * The centroid matrix is a model argument ([[Kernel.model]]) because it
+    * is data-dependent, unlike [[lshSignature]]'s derivable plane matrix;
+    * the per-row cost is one fused k·dim multiply-accumulate pass with no
+    * per-row allocation, and whole-stage codegen spans stay unbroken.
     * `flat` is the row-major k×dim centroid matrix, `cc` the per-centroid
     * self-inner-products (left-to-right fold, the same order DuckDB's
     * `list_inner_product(cv, cv)` uses). Distance is compared through
@@ -764,8 +770,9 @@ object GraftRuntime {
     * exact tie (mirroring the oracle's `ORDER BY dist, cl`). Null vector
     * elements contribute 0.0 (the [[lshSignature]] sparse-null
     * convention); a vector shorter than dim treats missing dims as 0. */
-  def nearestCentroid(v: ArrayData, flat: Array[Double], cc: Array[Double],
-                      dim: Int): Int = {
+  def nearestCentroid(v: ArrayData, c: KMeansOps.Centroids, dim: Int): Int = {
+    val flat = c.flat
+    val cc = c.cc
     val k = cc.length
     val n = math.min(dim, v.numElements())
     var best = 0
@@ -791,8 +798,9 @@ object GraftRuntime {
     * — `cc(j) − 2·(v·c_j)`, null elements 0, strict `<` selection so an
     * exact distance tie yields the LOWER index first. `n ≥ k` returns all
     * k, still distance-ordered. */
-  def nearestCentroidsN(v: ArrayData, flat: Array[Double], cc: Array[Double],
-                        dim: Int, n: Int): ArrayData = {
+  def nearestCentroidsN(v: ArrayData, c: KMeansOps.Centroids, dim: Int, n: Int): ArrayData = {
+    val flat = c.flat
+    val cc = c.cc
     val k = cc.length
     val vd = math.min(dim, v.numElements())
     val d = new Array[Double](k)
@@ -836,13 +844,16 @@ object GraftRuntime {
   // Codebook layout: flat(((mi*ksub)+j)*dsub + d) = codebooks[mi][j][d];
   // cc(mi*ksub+j) = |c_mij|² (left-to-right fold). Vectors are float
   // arrays; null elements contribute 0.0 (the sparse-null convention of
-  // nearestCentroid/dot above).
+  // nearestCentroid/dot above). The codebooks are a model argument
+  // ([[Kernel.model]]), as nearestCentroid's centroid matrix is.
 
   /** Encode a vector into m one-byte codes: per subvector mi, the argmin-
     * distance codebook entry via the cc − 2·dot trick (strict `<` keeps
     * the lowest index on ties — the nearestCentroid contract). */
-  def pqEncode(v: ArrayData, flat: Array[Double], cc: Array[Double],
+  def pqEncode(v: ArrayData, model: ProductQuantizer.PqModel,
                m: Int, dsub: Int, ksub: Int): Array[Byte] = {
+    val flat = model.flat
+    val cc = model.cc
     val out = new Array[Byte](m)
     val vn = v.numElements()
     var mi = 0
@@ -873,7 +884,9 @@ object GraftRuntime {
   /** ADC lookup table for one query vector: lut(mi*ksub + j) = q_mi · c_mij.
     * Computed once per query; every candidate's approximate dot is then
     * m table lookups ([[pqAdc]]) instead of a dim-length float loop. */
-  def pqLut(v: ArrayData, flat: Array[Double], m: Int, dsub: Int, ksub: Int): ArrayData = {
+  def pqLut(v: ArrayData, model: ProductQuantizer.PqModel,
+            m: Int, dsub: Int, ksub: Int): ArrayData = {
+    val flat = model.flat
     val out = new Array[Double](m * ksub)
     val vn = v.numElements()
     var mi = 0
@@ -898,7 +911,8 @@ object GraftRuntime {
   }
 
   /** Asymmetric distance computation: approximate q·x from the query's
-    * LUT and the candidate's codes — Σ_mi lut(mi*ksub + code_mi). */
+    * LUT and the candidate's codes — Σ_mi lut(mi*ksub + code_mi), m table
+    * lookups per candidate: the PQ scan inner loop. */
   def pqAdc(lut: ArrayData, codes: Array[Byte], ksub: Int): Double = {
     var s = 0.0
     var mi = 0
@@ -928,9 +942,9 @@ object GraftRuntime {
   }
 
   /** BPE encode of a whitespace-pretokenized text: flat subword array /
-    * fused count. The compiled model (merge table + per-word memo)
-    * rides into generated code via `addReferenceObj`; bodies live in
-    * [[Bpe]] next to the training loop they must mirror. */
+    * fused count (no token array built). The compiled model (merge table
+    * + per-word memo) is a model argument ([[Kernel.model]]); bodies live
+    * in [[Bpe]] next to the training loop they must mirror. */
   def bpeTokens(text: org.apache.spark.unsafe.types.UTF8String,
                 m: Bpe.Compiled): org.apache.spark.sql.catalyst.util.GenericArrayData =
     Bpe.runtimeTokens(text, m)
@@ -940,7 +954,20 @@ object GraftRuntime {
     Bpe.runtimeTokenCount(text, m)
 
   /** Fused NB document score: (n_feat, nb_score_u) as one struct row —
-    * the whole explode→join→agg scoring plan per document. */
+    * the whole `explode(wordFeatures) → md5 bucket → broadcast-join lr
+    * table → groupBy(doc) integer sum` plan collapsed to ONE per-row call.
+    *
+    * Bit-identical to the composed formulation (parity-pinned in the
+    * spec: same normalization (trim → `\s+`→' ' → UTF8String lowercase),
+    * same uni+bigram features, same md5-prefix bucket, same µ-quantized
+    * integer sum) — but the composed plan materialized ~2·tokens rows per
+    * document through explode, probed a broadcast HashedRelation per
+    * feature, and paid a hash aggregate to reassemble per-doc sums. At
+    * scoring scale that row machinery dominated the actual work (the
+    * q119 sf0.1 watch: 1.5 s for ~5M feature rows); here the model is a
+    * `buckets`-sized long array passed as a model argument
+    * ([[Kernel.model]]), the lookup is an array index, and the scoring
+    * pass has ZERO exchanges. */
   def nbDocScore(text: org.apache.spark.unsafe.types.UTF8String,
                  m: NbDocScore.Compiled): org.apache.spark.sql.catalyst.InternalRow = {
     val (n, s) = m.score(text)

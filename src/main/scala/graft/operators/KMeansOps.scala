@@ -1,132 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftShims}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
-/** Native nearest-centroid assignment of a float vector against a fixed
-  * k×dim centroid matrix — the inner loop of Lloyd's k-means and of
-  * IVF-style coarse quantization.
-  *
-  * The matrix rides into generated code as a reference object (it is
-  * data-dependent, unlike [[GraftRuntime.lshSignature]]'s derivable plane matrix), so
-  * the per-row cost is one fused k·dim multiply-accumulate pass with no
-  * per-row allocation; whole-stage codegen spans stay unbroken. The
-  * argmin compares `‖c_j‖² − 2·v·c_j` (the shared `‖v‖²` term cannot move
-  * the argmin) with lowest-index tie-break — exactly the oracle's
-  * `ORDER BY dist, cluster` contract. */
-case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
-    extends UnaryExpression {
-
-  require(centroids.nonEmpty, "nearest_centroid requires at least one centroid")
-  require(centroids.forall(_.length == centroids(0).length),
-    "nearest_centroid requires equal-dimension centroids")
-
-  private val dim = centroids(0).length
-
-  /** Row-major flattened matrix (recomputed per deserialized copy). */
-  @transient private lazy val flat: Array[Double] = {
-    val f = new Array[Double](centroids.length * dim)
-    var j = 0
-    while (j < centroids.length) {
-      System.arraycopy(centroids(j), 0, f, j * dim, dim)
-      j += 1
-    }
-    f
-  }
-
-  /** Per-centroid self-inner-products, left-to-right fold (the order
-    * DuckDB's `list_inner_product(cv, cv)` evaluates in). */
-  @transient private lazy val cc: Array[Double] = centroids.map { c =>
-    var s = 0.0
-    var i = 0
-    while (i < c.length) { s += c(i) * c(i); i += 1 }
-    s
-  }
-
-  override def prettyName: String = "nearest_centroid"
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"nearest_centroid requires array<float>, got ${other.simpleString}")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.nearestCentroid(input.asInstanceOf[ArrayData], flat, cc, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val flatRef = ctx.addReferenceObj("kmeansFlat", flat, "double[]")
-    val ccRef = ctx.addReferenceObj("kmeansCc", cc, "double[]")
-    defineCodeGen(ctx, ev, a =>
-      s"graft.operators.GraftRuntime.nearestCentroid($a, $flatRef, $ccRef, $dim)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** The `n` nearest centroids of a float vector, ascending by distance —
-  * the IVF multi-probe list ([[NearestCentroids]] with n=1 ≡
-  * `array(`[[NearestCentroid]]`)`, pinned by a property test). Same
-  * distance/tie contract; same reference-object codegen. */
-case class NearestCentroids(child: Expression, centroids: Array[Array[Double]],
-                            n: Int) extends UnaryExpression {
-
-  require(centroids.nonEmpty, "nearest_centroids requires at least one centroid")
-  require(centroids.forall(_.length == centroids(0).length),
-    "nearest_centroids requires equal-dimension centroids")
-  require(n >= 1, s"n must be >= 1, got $n")
-
-  private val dim = centroids(0).length
-
-  @transient private lazy val flat: Array[Double] = {
-    val f = new Array[Double](centroids.length * dim)
-    var j = 0
-    while (j < centroids.length) {
-      System.arraycopy(centroids(j), 0, f, j * dim, dim)
-      j += 1
-    }
-    f
-  }
-
-  @transient private lazy val cc: Array[Double] = centroids.map { c =>
-    var s = 0.0
-    var i = 0
-    while (i < c.length) { s += c(i) * c(i); i += 1 }
-    s
-  }
-
-  override def prettyName: String = "nearest_centroids"
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"nearest_centroids requires array<float>, got ${other.simpleString}")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.nearestCentroidsN(input.asInstanceOf[ArrayData], flat, cc, dim, n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val flatRef = ctx.addReferenceObj("kmeansFlat", flat, "double[]")
-    val ccRef = ctx.addReferenceObj("kmeansCc", cc, "double[]")
-    defineCodeGen(ctx, ev, a =>
-      s"graft.operators.GraftRuntime.nearestCentroidsN($a, $flatRef, $ccRef, $dim, $n)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
 
 /** Distributed k-means (Lloyd's) and SemDeDup-style semantic dedup over
   * an embedding column.
@@ -134,9 +9,10 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Double]],
   * Spark-first shape (the same one MLlib's KMeans uses, re-expressed on
   * the DataFrame API):
   *  - centroids live on the driver (k·dim doubles — a bounded, documented
-  *    pull; 1000 clusters × 1024 dims = 8 MB) and reach executors inside
-  *    the [[NearestCentroid]] expression, so assignment is one codegen'd
-  *    scan with no join and no shuffle of vectors;
+  *    pull; 1000 clusters × 1024 dims = 8 MB) and reach executors as the
+  *    [[Centroids]] model argument of the [[GraftRuntime.nearestCentroid]]
+  *    kernel, so assignment is one codegen'd scan with no join and no
+  *    shuffle of vectors;
   *  - the update step shuffles only `partitions × k × dim` partially
   *    aggregated (cluster, pos, sum, count) rows — never a vector — and
   *    collects at most k·dim rows back to the driver per iteration.
@@ -152,15 +28,41 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Double]],
   * index — so the whole run is reproducible and oracle-mirrorable in SQL. */
 object KMeansOps {
 
-  /** Nearest-centroid cluster index of `vec` (native [[NearestCentroid]];
+  /** A k×dim centroid matrix in the row-major layout the nearest-centroid
+    * kernels read: `flat` holds the rows back to back, `cc` each row's
+    * self-inner-product (left-to-right fold, the order DuckDB's
+    * `list_inner_product(cv, cv)` evaluates in). Built once on the driver
+    * per Column; plans print it as `centroids[k=…,dim=…]`. */
+  final class Centroids(centroids: Array[Array[Double]]) extends Serializable {
+    require(centroids.nonEmpty, "nearest_centroid requires at least one centroid")
+    require(centroids.forall(_.length == centroids(0).length),
+      "nearest_centroid requires equal-dimension centroids")
+    val dim: Int = centroids(0).length
+    val flat: Array[Double] = centroids.flatten
+    val cc: Array[Double] = centroids.map { c =>
+      var s = 0.0
+      var i = 0
+      while (i < c.length) { s += c(i) * c(i); i += 1 }
+      s
+    }
+    override def toString: String = s"centroids[k=${cc.length},dim=$dim]"
+  }
+
+  /** Nearest-centroid cluster index of `vec` ([[GraftRuntime.nearestCentroid]];
     * bit-identical to [[nearestCentroidRef]], pinned by a property test). */
-  def nearestCentroid(vec: Column, centroids: Array[Array[Double]]): Column =
-    GraftShims.column(NearestCentroid(GraftShims.expression(vec), centroids))
+  def nearestCentroid(vec: Column, centroids: Array[Array[Double]]): Column = {
+    val c = new Centroids(centroids)
+    Kernel.nearestCentroid(vec, Kernel.model(c), lit(c.dim))
+  }
 
   /** The `n` nearest centroid indices, ascending by distance (the IVF
-    * multi-probe list; native [[NearestCentroids]]). */
-  def nearestCentroids(vec: Column, centroids: Array[Array[Double]], n: Int): Column =
-    GraftShims.column(NearestCentroids(GraftShims.expression(vec), centroids, n))
+    * multi-probe list; [[GraftRuntime.nearestCentroidsN]] — with n=1 it
+    * equals `array(`[[nearestCentroid]]`)`, pinned by a property test). */
+  def nearestCentroids(vec: Column, centroids: Array[Array[Double]], n: Int): Column = {
+    require(n >= 1, s"n must be >= 1, got $n")
+    val c = new Centroids(centroids)
+    Kernel.nearestCentroids(vec, Kernel.model(c), lit(c.dim), lit(n))
+  }
 
   /** Reference formulation of [[nearestCentroid]] (property-test pin): one
     * interpreted `zip_with`/`aggregate` inner-product fold per centroid,

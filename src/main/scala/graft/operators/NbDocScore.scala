@@ -1,51 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftShims.{column, toExpression}
 import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native fused NB-document scorer: the whole
-  * `explode(wordFeatures) → md5 bucket → broadcast-join lr table →
-  * groupBy(doc) integer sum` plan collapsed to ONE per-row expression.
-  *
-  * Bit-identical to the composed formulation (parity-pinned in the
-  * spec: same normalization (trim → `\s+`→' ' → UTF8String lowercase),
-  * same uni+bigram features, same md5-prefix bucket, same µ-quantized
-  * integer sum) — but the composed plan materialized ~2·tokens rows per
-  * document through explode, probed a broadcast HashedRelation per
-  * feature, and paid a hash aggregate to reassemble per-doc sums. At
-  * scoring scale that row machinery dominated the actual work (the
-  * q119 sf0.1 watch: 1.5 s for ~5M feature rows); here the model is a
-  * `buckets`-sized long array riding into generated code via
-  * `addReferenceObj`, the lookup is an array index, and the scoring
-  * pass has ZERO exchanges. Generates a static call so whole-stage
-  * codegen spans stay unbroken. */
-case class NbDocScore(child: Expression, model: TextOps.NbModel)
-    extends UnaryExpression {
-
-  override def prettyName: String = "nb_doc_score"
-  override def dataType: DataType = NbDocScore.outType
-
-  @transient private lazy val compiled = NbDocScore.compile(model)
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.nbDocScore(input.asInstanceOf[UTF8String], compiled)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("nbModel", NbDocScore.compile(model),
-      classOf[NbDocScore.Compiled].getName)
-    defineCodeGen(ctx, ev, a => s"graft.operators.GraftRuntime.nbDocScore($a, $ref)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
+/** The fused NB-document scorer's model form and Column helpers; the
+  * scorer itself is the [[GraftRuntime.nbDocScore]] kernel. */
 object NbDocScore {
 
   val outType: StructType = StructType(Seq(
@@ -100,16 +61,18 @@ object NbDocScore {
         (n, sum)
       }
     }
+
+    override def toString: String = s"nb[buckets=$buckets]"
   }
 
-  private[operators] def compile(m: TextOps.NbModel): Compiled = {
+  private[graft] def compile(m: TextOps.NbModel): Compiled = {
     val table = Array.fill(m.buckets)(m.defaultU)
     m.lrU.foreach { case (b, v) => table(b.toInt) = v }
     new Compiled(m.buckets, m.priorU, table)
   }
 
   def scoreCol(text: Column, model: TextOps.NbModel): Column =
-    column(NbDocScore(toExpression(text.cast("string")), model))
+    Kernel.nbDocScore(text.cast("string"), Kernel.model(compile(model)))
 
   def featBucketsCol(text: Column, buckets: Int): Column =
     Kernel.nbFeatBuckets(text.cast("string"), lit(buckets))

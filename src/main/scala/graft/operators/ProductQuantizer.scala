@@ -1,11 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Product quantization — the compression step past scalar int8
   * ([[Quantize]]): split each dim-D vector into `m` subvectors of
@@ -31,7 +27,8 @@ object ProductQuantizer {
 
   /** Trained PQ model: codebooks(mi)(j) is the dsub-dim centroid j of
     * subvector position mi. `flat`/`cc` are the precomputed layouts the
-    * codegen'd expressions use. */
+    * PQ kernels read; the model is their model argument ([[Kernel.model]]),
+    * which plans print as `pq[m=…,ksub=…,dsub=…]`. */
   final case class PqModel(m: Int, dsub: Int, ksub: Int,
                            codebooks: Array[Array[Array[Double]]]) {
     require(codebooks.length == m, s"expected $m codebooks, got ${codebooks.length}")
@@ -68,6 +65,8 @@ object ProductQuantizer {
     }
     /** Flattened (m·ksub) × dsub row list for [[SnapshotStore]] persistence. */
     def toRows: Array[Array[Double]] = codebooks.flatten
+
+    override def toString: String = s"pq[m=$m,ksub=$ksub,dsub=$dsub]"
   }
 
   /** Rebuild a model from [[PqModel.toRows]] (the SnapshotStore shape). */
@@ -182,93 +181,15 @@ object ProductQuantizer {
     cent
   }
 
-  def encode(vec: Column, model: PqModel): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(PqEncode(GraftShims.expression(vec), model))
-  }
+  /** `pq_encode(vec)` → BINARY of m one-byte codes ([[GraftRuntime.pqEncode]]). */
+  def encode(vec: Column, model: PqModel): Column =
+    Kernel.pqEncode(vec, Kernel.model(model), lit(model.m), lit(model.dsub), lit(model.ksub))
 
-  def lut(vec: Column, model: PqModel): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(PqLut(GraftShims.expression(vec), model))
-  }
+  /** `pq_lut(vec)` → ARRAY<DOUBLE> of m·ksub subvector-centroid dots (one
+    * per query; the ADC table, [[GraftRuntime.pqLut]]). */
+  def lut(vec: Column, model: PqModel): Column =
+    Kernel.pqLut(vec, Kernel.model(model), lit(model.m), lit(model.dsub), lit(model.ksub))
 
-  def adc(lut: Column, codes: Column, ksub: Int): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(PqAdc(GraftShims.expression(lut), GraftShims.expression(codes), ksub))
-  }
-}
-
-/** `pq_encode(vec)` → BINARY of m one-byte codes (codegen'd static call,
-  * codebooks shipped as reference objects — the [[NearestCentroid]]
-  * pattern). */
-case class PqEncode(child: Expression, model: ProductQuantizer.PqModel)
-    extends UnaryExpression {
-  override def prettyName: String = "pq_encode"
-  override def dataType: DataType = BinaryType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pq_encode requires array<float>, got ${other.simpleString}")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.pqEncode(input.asInstanceOf[ArrayData], model.flat, model.cc,
-      model.m, model.dsub, model.ksub)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val flatRef = ctx.addReferenceObj("pqFlat", model.flat, "double[]")
-    val ccRef = ctx.addReferenceObj("pqCc", model.cc, "double[]")
-    defineCodeGen(ctx, ev, a =>
-      s"graft.operators.GraftRuntime.pqEncode($a, $flatRef, $ccRef, ${model.m}, ${model.dsub}, ${model.ksub})")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** `pq_lut(vec)` → ARRAY<DOUBLE> of m·ksub subvector-centroid dots (one
-  * per query; the ADC table). */
-case class PqLut(child: Expression, model: ProductQuantizer.PqModel)
-    extends UnaryExpression {
-  override def prettyName: String = "pq_lut"
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pq_lut requires array<float>, got ${other.simpleString}")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.pqLut(input.asInstanceOf[ArrayData], model.flat,
-      model.m, model.dsub, model.ksub)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val flatRef = ctx.addReferenceObj("pqFlat", model.flat, "double[]")
-    defineCodeGen(ctx, ev, a =>
-      s"graft.operators.GraftRuntime.pqLut($a, $flatRef, ${model.m}, ${model.dsub}, ${model.ksub})")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** `pq_adc(lut, codes)` → DOUBLE approximate inner product: m table
-  * lookups per candidate — the PQ scan inner loop. */
-case class PqAdc(left: Expression, right: Expression, ksub: Int)
-    extends BinaryExpression {
-  override def prettyName: String = "pq_adc"
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), BinaryType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pq_adc requires (array<double>, binary), got ${l.simpleString}, ${r.simpleString}")
-    }
-  override protected def nullSafeEval(lut: Any, codes: Any): Any =
-    GraftRuntime.pqAdc(lut.asInstanceOf[ArrayData], codes.asInstanceOf[Array[Byte]], ksub)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (l, c) =>
-      s"graft.operators.GraftRuntime.pqAdc($l, $c, $ksub)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
+  /** `pq_adc(lut, codes)` → DOUBLE approximate inner product ([[GraftRuntime.pqAdc]]). */
+  def adc(lut: Column, codes: Column, ksub: Int): Column = Kernel.pqAdc(lut, codes, lit(ksub))
 }

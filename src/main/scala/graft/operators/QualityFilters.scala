@@ -1,11 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -241,7 +238,7 @@ object QualityFilters {
       (5 to 10).map(n => s"r_dup${n}_chars")
     // the repetition columns are always REPORTED (the audit's value is
     // seeing every signal); they join the rule_pass conjunction only
-    // when the params enable the tier — matching RuleGate exactly
+    // when the params enable the tier — matching rulePass exactly
     val pass = (ruleCols.map(r => col("__rv").getField(r)) ++
       (if (params.checkRepetition) repCols.map(r => col("__rpv").getField(r))
        else Nil)).reduce(_ && _)
@@ -255,7 +252,8 @@ object QualityFilters {
     withStats.select(out: _*)
   }
 
-  /** The gate verdict as ONE boolean expression ([[RuleGate]]): the
+  /** The gate verdict as ONE boolean expression (the `graft_rule_gate`
+    * call of [[GraftRuntime.rulePass]], `params` its model argument): the
     * conjunction of [[ruleVerdicts]] computed INSIDE the native scan.
     *
     * Why not `ruleReport(...).filter(!col("rule_pass"))` on the pipeline
@@ -267,10 +265,8 @@ object QualityFilters {
     * verdict keeps the filter to ONE evaluation per row, pushed all the
     * way to the scan. Parity with the composed conjunction is
     * spec-pinned; the threshold arithmetic is the same IEEE ops. */
-  def rulePass(text: Column, params: RuleParams = RuleParams()): Column = {
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(RuleGate(GraftShims.expression(text), params))
-  }
+  def rulePass(text: Column, params: RuleParams = RuleParams()): Column =
+    Kernel.ruleGate(text, Kernel.model(params))
 
   /** Gopher §A1.1 repetition fractions as a 9-double struct (native
     * [[GraftRuntime.repFractions]]): top n-gram
@@ -295,7 +291,7 @@ object QualityFilters {
     (rep.getField("dup10_frac") <= p.maxDup10GramCharRatio).as("r_dup10_chars"))
 
   /** [[repVerdicts]]' conjunction over a pre-computed fractions row —
-    * shared by the [[RuleGate]] runtime. */
+    * shared by the [[GraftRuntime.rulePass]] kernel. */
   private[operators] def repPasses(r: org.apache.spark.sql.catalyst.InternalRow,
                                    p: RuleParams): Boolean =
     r.getDouble(0) <= p.maxTop2GramCharRatio &&
@@ -351,27 +347,6 @@ object RepFractions {
     (Seq("top2_frac", "top3_frac", "top4_frac") ++
       (5 to 10).map(n => s"dup${n}_frac"))
       .map(StructField(_, DoubleType, nullable = false)))
-}
-
-/** Native single-boolean Gopher/C4 gate verdict — see
-  * [[QualityFilters.rulePass]]. Thresholds ride into generated code via
-  * `addReferenceObj` (the Bpe-encode pattern). */
-case class RuleGate(child: Expression, params: QualityFilters.RuleParams)
-    extends UnaryExpression {
-  override def prettyName: String = "graft_rule_gate"
-  override def dataType: DataType = BooleanType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_rule_gate requires a string column, got ${child.dataType.simpleString}")
-  override protected def nullSafeEval(input: Any): Any =
-    GraftRuntime.rulePass(input.asInstanceOf[UTF8String], params)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ruleParams", params,
-      classOf[QualityFilters.RuleParams].getName)
-    defineCodeGen(ctx, ev, a => s"graft.operators.GraftRuntime.rulePass($a, $ref)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** The rule-counter struct of [[GraftRuntime.ruleStats]]. */

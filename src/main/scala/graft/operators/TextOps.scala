@@ -406,7 +406,7 @@ object TextOps {
 
   /** The pre-r17 composed scoring plan (explode → md5 bucket →
     * broadcast-join the lr table → per-doc integer sum) — kept as the
-    * parity oracle for [[NbDocScore]]: the fused expression must
+    * parity oracle for [[NbDocScore.scoreCol]]: the fused kernel must
     * reproduce it row-for-row (spec-pinned). The composed shape paid
     * ~2·tokens exploded rows, a join probe per feature, and a hash
     * aggregate per scoring pass; the fused expression is one map. */

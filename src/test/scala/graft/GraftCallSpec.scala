@@ -11,12 +11,12 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import operators.{GraftCall, Kernel}
+import operators.{Bpe, GraftCall, Kernel, KMeansOps, NbDocScore, ProductQuantizer, QualityFilters, TextOps}
 
 /** The native text/vector kernels called through [[GraftCall]]: generated
-  * code and interpreted evaluation agree on edge inputs, the calls stay
-  * inside whole-stage codegen, and analysis keeps rejecting wrong input
-  * types. */
+  * code and interpreted evaluation agree on edge inputs (model arguments
+  * included), the calls stay inside whole-stage codegen, and analysis
+  * keeps rejecting wrong input types. */
 class GraftCallSpec extends SparkTestBase {
 
   private def utf8(s: String): UTF8String = UTF8String.fromString(s)
@@ -43,6 +43,24 @@ class GraftCallSpec extends SparkTestBase {
   private val bytes: Seq[Any] = Seq(Array.emptyByteArray, Array[Byte](1, -2, 127), null)
 
   private def ref(i: Int, t: DataType) = BoundReference(i, t, nullable = true)
+
+  /** A model argument, as [[Kernel.model]] builds it for a Column. */
+  private def model(v: AnyRef) = Literal(v, ObjectType(v.getClass))
+
+  private val nb = model(NbDocScore.compile(
+    TextOps.NbModel(1024, 5L, -1L, Seq(3L -> 7L, 100L -> -4L, 1023L -> 2L))))
+  private val bpe = model(Bpe.compiled(Bpe.SeedModel))
+  private val pq = ProductQuantizer.PqModel(m = 2, dsub = 2, ksub = 3, Array(
+    Array(Array(1.0, 0.0), Array(0.0, 1.0), Array(-1.0, 0.5)),
+    Array(Array(0.5, 0.5), Array(-2.0, 0.0), Array(0.0, -1.0))))
+  private val pqArgs = Seq(model(pq), Literal(pq.m), Literal(pq.dsub), Literal(pq.ksub))
+  private val centroids = model(new KMeansOps.Centroids(
+    Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, -1.0), Array(1.0, -2.0, 0.5))))
+
+  /** m·ksub-entry LUTs and in-range codes, as `pq_lut`/`pq_encode` make them. */
+  private val luts: Seq[Any] = Seq(
+    new GenericArrayData(Array[Any](0.5, 1.0, 2.0, -1.0, 3.0, 4.0)), null)
+  private val codes: Seq[Any] = Seq(Array.emptyByteArray, Array[Byte](0, 2), Array[Byte](2, 1), null)
 
   /** (call, rows): each row binds the call's non-constant arguments. */
   private def cases: Seq[(Expression, Seq[InternalRow])] = {
@@ -74,12 +92,27 @@ class GraftCallSpec extends SparkTestBase {
       Kernel.int8Pack.call(ref(0, ArrayType(FloatType)), ref(1, DoubleType)) ->
         (for (v <- vectors; s <- Seq[Any](0.0, 0.01, null)) yield InternalRow(v, s)),
       Kernel.int8Dot.call(ref(0, BinaryType), ref(1, BinaryType)) ->
-        (for (a <- bytes; b <- bytes) yield InternalRow(a, b)))
+        (for (a <- bytes; b <- bytes) yield InternalRow(a, b)),
+      Kernel.nbDocScore.call(text, nb) -> texts.map(InternalRow(_)),
+      Kernel.ruleGate.call(text, model(QualityFilters.RuleParams(minWords = 2))) ->
+        texts.map(InternalRow(_)),
+      Kernel.bpeTokens.call(text, bpe) -> texts.map(InternalRow(_)),
+      Kernel.bpeTokenCount.call(text, bpe) -> texts.map(InternalRow(_)),
+      Kernel.pqEncode.call(ref(0, ArrayType(FloatType)) +: pqArgs: _*) ->
+        vectors.map(InternalRow(_)),
+      Kernel.pqLut.call(ref(0, ArrayType(FloatType)) +: pqArgs: _*) ->
+        vectors.map(InternalRow(_)),
+      Kernel.pqAdc.call(ref(0, ArrayType(DoubleType)), ref(1, BinaryType), Literal(pq.ksub)) ->
+        (for (l <- luts; c <- codes) yield InternalRow(l, c)),
+      Kernel.nearestCentroid.call(ref(0, ArrayType(FloatType)), centroids, Literal(3)) ->
+        vectors.map(InternalRow(_)),
+      Kernel.nearestCentroids.call(ref(0, ArrayType(FloatType)), centroids, Literal(3),
+        Literal(2)) -> vectors.map(InternalRow(_)))
   }
 
   test("every kernel: generated code equals interpreted eval on edge inputs") {
     val all = cases
-    assert(all.map(_._1.prettyName).distinct.size == 20)
+    assert(all.map(_._1.prettyName).distinct.size == 29)
     for ((call, rows) <- all) {
       val replaced = call.asInstanceOf[GraftCall].replacement
       val compiled = GenerateUnsafeProjection.generate(Seq(replaced))

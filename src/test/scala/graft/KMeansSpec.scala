@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import operators._
 
 /** Distributed k-means ([[KMeansOps]]) and SemDeDup-style semantic dedup:
-  * native [[NearestCentroid]] vs the composed reference formulation,
+  * native [[KMeansOps.nearestCentroid]] vs the composed reference formulation,
   * Lloyd's iteration semantics, and the keep rule. */
 class KMeansSpec extends SparkTestBase {
 

@@ -118,7 +118,7 @@ class PlanSpec extends SparkTestBase {
       d.filter(col("lang") === "en" && col("doc_id") % 4 === 0),
       d.filter(col("doc_id") % 4 === 1))
     val plan = planOf(operators.TextOps.nbScore(model, d))
-    assert(plan.contains("nb_doc_score"), plan)
+    assert(plan.contains("GraftRuntime.nbDocScore("), plan)
     assert(!plan.contains("Exchange"), s"fused NB scoring must be shuffle-free:\n$plan")
     assert(!plan.contains("Join"), s"fused NB scoring must join nothing:\n$plan")
     assert(!plan.contains("Generate"), s"fused NB scoring must not explode:\n$plan")
@@ -133,11 +133,34 @@ class PlanSpec extends SparkTestBase {
     // the consumer's own aggregation.
     val plan = planOf(docs.select(col("doc_id"),
       operators.Bpe.tokenCount(col("text"), operators.Bpe.SeedModel)))
-    assert(plan.contains("bpe_token_count"), plan)
+    assert(plan.contains("GraftRuntime.bpeTokenCount("), plan)
     assert(!plan.contains("Exchange") && !plan.contains("Join") &&
       !plan.contains("Generate"), s"BPE counting must be a pure map:\n$plan")
     assert(plan.contains("*(1)"),
       s"the counting projection must stay inside whole-stage codegen:\n$plan")
+  }
+
+  test("model arguments print as short tags, not as the whole model") {
+    // A kernel's model argument is an object literal, printed by its
+    // toString in every plan string, SQL execution description and
+    // explain; a toString that dumped the model (4096 NB buckets, 1,000
+    // BPE merges) would put KBs into each of them.
+    val d = docs
+    val nb = operators.TextOps.seedCrawlNbFit(
+      d.filter(col("lang") === "en" && col("doc_id") % 4 === 0),
+      d.filter(col("doc_id") % 4 === 1))
+    val nbPlan = planOf(operators.TextOps.nbScore(nb, d))
+    assert(nbPlan.contains(s"nb[buckets=${nb.buckets}]"), nbPlan)
+    assert(nbPlan.length < 4096, s"NB scoring plan is ${nbPlan.length} chars:\n$nbPlan")
+    // the corpus vocabulary runs out of pairs below 400 merges; seeded
+    // random words do not
+    val r = new scala.util.Random(400)
+    val words = Seq.fill(2000)(Seq.fill(4 + r.nextInt(9))(('a' + r.nextInt(26)).toChar).mkString)
+    val bpe = operators.Bpe.fitOnText(words.mkString(" "), numMerges = 1000)
+    assert(bpe.merges.size == 1000)
+    val bpePlan = planOf(d.select(col("doc_id"), operators.Bpe.tokenCount(col("text"), bpe)))
+    assert(bpePlan.contains(s"bpe[merges=${bpe.merges.size}]"), bpePlan)
+    assert(bpePlan.length < 4096, s"BPE counting plan is ${bpePlan.length} chars:\n$bpePlan")
   }
 
   test("sketch scalar projection stays one whole-stage-codegen stage") {

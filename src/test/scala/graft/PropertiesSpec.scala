@@ -323,8 +323,8 @@ class PropertiesSpec extends SparkTestBase {
       val x = Array.fill(dim)(rnd.nextFloat())
       val q = Array.fill(dim)(rnd.nextFloat())
       import org.apache.spark.sql.catalyst.util.GenericArrayData
-      val codes = GraftRuntime.pqEncode(new GenericArrayData(x), model.flat, model.cc, m, dsub, ksub)
-      val lut = GraftRuntime.pqLut(new GenericArrayData(q), model.flat, m, dsub, ksub)
+      val codes = GraftRuntime.pqEncode(new GenericArrayData(x), model, m, dsub, ksub)
+      val lut = GraftRuntime.pqLut(new GenericArrayData(q), model, m, dsub, ksub)
       val adc = GraftRuntime.pqAdc(lut, codes, ksub)
       // reference: per-sub brute-force argmin + dot of q_sub with the chosen centroid
       var expect = 0.0
@@ -531,13 +531,13 @@ class PropertiesSpec extends SparkTestBase {
     // UnsafeProjection compiles the Java source directly: a Janino error
     // surfaces as an exception here instead of a fallback.
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{Alias, BoundReference}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, BoundReference, Literal}
     import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
-    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.sql.types.{ObjectType, StringType}
     import org.apache.spark.unsafe.types.UTF8String
     val params = operators.QualityFilters.RuleParams(checkRepetition = true)
-    val gate = operators.RuleGate(
-      BoundReference(0, StringType, nullable = true), params)
+    val gate = operators.Kernel.ruleGate.call(BoundReference(0, StringType, nullable = true),
+      Literal(params, ObjectType(params.getClass))).replacement
     val proj = GenerateUnsafeProjection.generate(Seq(Alias(gate, "ok")()))
     val texts = Seq(
       "the words be to of and that have with " + ("alpha beta " * 40),
