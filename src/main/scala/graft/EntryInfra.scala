@@ -40,6 +40,24 @@ private[graft] trait EntryInfra {
     f.delete()
   }
 
+  /** `body`'s result materialized (an eager localCheckpoint), then
+    * `cleanup` run, also when `body` throws: for an entry whose rows are
+    * read from a store the cleanup removes (a temp dir, a memory-sink
+    * view, a running stream), so the returned rows outlive it. */
+  protected def materializedThen(body: => DataFrame)(cleanup: => Unit): DataFrame =
+    try body.localCheckpoint(eager = true) finally cleanup
+
+  /** `start` run with `spark.sql.shuffle.partitions` set to `parts`, the
+    * previous value restored afterwards, also when `start` throws. A
+    * stateful stream fixes its state-store partition count when it
+    * starts, so this sizes a replay's state geometry without leaking the
+    * setting into the session. */
+  protected def withShufflePartitions[T](spark: SparkSession, parts: Int)(start: => T): T = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    try start finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   /** Newest mtime under a parquet path (file or directory of part files). */
   protected def srcMtime(f: java.io.File): Long =
     Option(f.listFiles()).getOrElse(Array.empty[java.io.File])

@@ -159,7 +159,7 @@ private[graft] trait SimilarityEntries extends EntryInfra {
       val truth = operators.SimilarityOps.cosineTopK(q, emb, "vec_id", "embedding", k = 3)
         .select("query_id", "neighbor_id")
       val path = java.nio.file.Files.createTempDirectory("graft_ivf_").toString
-      try {
+      materializedThen {
         operators.AnnIndex.build(emb, "vec_id", "embedding", path, planes = 4)
         val ann = operators.AnnIndex.query(spark, path, q, "vec_id", "embedding",
             k = 3, planes = 4, probeDepth = 2)
@@ -169,13 +169,8 @@ private[graft] trait SimilarityEntries extends EntryInfra {
           .crossJoin(truth.agg(count(lit(1)).as("n")))
           .select(lit("ivf_probe2_recall_ge_0.7").as("metric"),
             (col("hits") >= col("n") * 0.7).as("ok"))
-          // materialize before the temp index dir is deleted below
-          .localCheckpoint(true)
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(path))
+      } {
+        deleteRec(new java.io.File(path))
       }
     },
 
@@ -192,7 +187,7 @@ private[graft] trait SimilarityEntries extends EntryInfra {
       val truth = operators.SimilarityOps.cosineTopK(q, emb, "vec_id", "embedding", k = 3)
         .select("query_id", "neighbor_id")
       val path = java.nio.file.Files.createTempDirectory("graft_ivfq_").toString
-      try {
+      materializedThen {
         operators.AnnIndex.buildQuantized(emb, "vec_id", "embedding", path, planes = 4)
         val ann = operators.AnnIndex.queryQuantized(spark, path, q, "vec_id", "embedding",
             k = 3, planes = 4, probeDepth = 2)
@@ -202,12 +197,8 @@ private[graft] trait SimilarityEntries extends EntryInfra {
           .crossJoin(truth.agg(count(lit(1)).as("n")))
           .select(lit("ivf_quantized_probe2_recall_ge_0.7").as("metric"),
             (col("hits") >= col("n") * 0.7).as("ok"))
-          .localCheckpoint(true)
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(path))
+      } {
+        deleteRec(new java.io.File(path))
       }
     },
 
@@ -233,7 +224,7 @@ private[graft] trait SimilarityEntries extends EntryInfra {
       val truth = operators.SimilarityOps.cosineTopK(q, emb, "vec_id", "embedding", k = 3)
         .select("query_id", "neighbor_id")
       val path = java.nio.file.Files.createTempDirectory("graft_kivf_").toString
-      try {
+      materializedThen {
         val cent = operators.AnnIndex.buildKMeans(emb, "vec_id", "embedding",
           path, k = 8, iters = 2)
         val ann = operators.AnnIndex.queryKMeans(spark, path, q, "vec_id",
@@ -244,13 +235,8 @@ private[graft] trait SimilarityEntries extends EntryInfra {
           .crossJoin(truth.agg(count(lit(1)).as("n")))
           .select(lit("kmeans_ivf_probe2_recall_ge_0.7").as("metric"),
             (col("hits") >= col("n") * 0.7).as("ok"))
-          // materialize before the temp index dir is deleted below
-          .localCheckpoint(true)
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(path))
+      } {
+        deleteRec(new java.io.File(path))
       }
     },
 
@@ -324,7 +310,7 @@ private[graft] trait SimilarityEntries extends EntryInfra {
       val truth = operators.SimilarityOps.cosineTopK(q, emb, "vec_id", "embedding", k = 3)
         .select("query_id", "neighbor_id")
       val path = java.nio.file.Files.createTempDirectory("graft_pq_").toString
-      try {
+      materializedThen {
         val model = operators.AnnIndex.buildPq(emb, "vec_id", "embedding", path,
           planes = 4, m = 16, ksub = 64)
         val ann = operators.AnnIndex.queryPq(spark, path, q, emb, "vec_id", "embedding",
@@ -339,12 +325,8 @@ private[graft] trait SimilarityEntries extends EntryInfra {
           .select(lit("pq_rerank_probe2_recall_ge_0.7").as("metric"),
             (col("hits") >= col("n") * 0.7).as("ok"),
             col("bytes_per_vector").cast("long").as("bytes_per_vector"))
-          .localCheckpoint(true)
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(path))
+      } {
+        deleteRec(new java.io.File(path))
       }
     },
   )

@@ -10,6 +10,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * by [[SparkEntry.queries]] / [[SparkEntry.oracleSql]]. */
 private[graft] trait StreamingEntries extends EntryInfra {
 
+  /** State-store tasks per micro-batch = shuffle partitions at stream
+    * start; the replayed slices hold a handful of keys per trigger, so 4
+    * halves the fixed per-batch dispatch vs 8 (measured −10..15% on the
+    * replay floors; q70 stays at 8 = its bloom shard count so no task
+    * serializes two shard filters). */
+  private val replayStateParts = 4
+
   protected def streamingQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- streaming surface, oracle-checked: replay a corpus slice through
     //    the LIFETIME bloom dedup (3 micro-batches), then replay it AGAIN —
@@ -38,12 +45,10 @@ private[graft] trait StreamingEntries extends EntryInfra {
       // session's 32 shuffle partitions — pin the stream's state geometry
       // down for the replay harness (a real deployment sizes it to its
       // executor count)
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      val query =
-        try admitted.writeStream.format("memory").queryName(sink)
+      val query = withShufflePartitions(spark, 8) {
+        admitted.writeStream.format("memory").queryName(sink)
           .outputMode("append").start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       try {
         val half = math.max(1, (slice.length + 1) / 2)
         slice.grouped(half).foreach { batch =>
@@ -88,18 +93,11 @@ private[graft] trait StreamingEntries extends EntryInfra {
       val sessions = streaming.StreamingDedup.sessionize(
         mem.toDF().toDF("ts", "user_id", "event_type"), gapMinutes = gapMin)
       val sink = s"q74_sessions_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      // state-store tasks per micro-batch = shuffle partitions at stream
-      // start; the replayed slices hold a handful of keys per trigger, so
-      // 4 halves the fixed per-batch dispatch vs 8 (measured −10..15% on
-      // the replay floors; q70 stays at 8 = its bloom shard count so no
-      // task serializes two shard filters)
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      val query =
-        try sessions.writeStream.format("memory").queryName(sink)
+      val query = withShufflePartitions(spark, replayStateParts) {
+        sessions.writeStream.format("memory").queryName(sink)
           .outputMode("append").start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try {
+      }
+      materializedThen {
         val third = math.max(1, (slice.length + 2) / 3)
         slice.grouped(third).foreach { batch =>
           mem.addData(batch.toSeq); query.processAllAvailable()
@@ -126,11 +124,7 @@ private[graft] trait StreamingEntries extends EntryInfra {
             col("session_end").cast("long").as("session_end_s"),
             col("events"), col("approx_distinct_types"))
           .orderBy("user_id", "session_start_s")
-          // the memory sink outlives query.stop() only via this
-          // materialized copy; localCheckpoint pins the rows before the
-          // temp view is dropped below
-          .localCheckpoint(true)
-      } finally {
+      } {
         query.stop()
         spark.catalog.dropTempView(sink)
       }
@@ -168,18 +162,11 @@ private[graft] trait StreamingEntries extends EntryInfra {
       val prof = streaming.StreamingSketches.windowedProfile(
         mem.toDF().toDF("ts", "user_id", "event_type", "value"))
       val sink = s"q79_windows_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      // state-store tasks per micro-batch = shuffle partitions at stream
-      // start; the replayed slices hold a handful of keys per trigger, so
-      // 4 halves the fixed per-batch dispatch vs 8 (measured −10..15% on
-      // the replay floors; q70 stays at 8 = its bloom shard count so no
-      // task serializes two shard filters)
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      val query =
-        try prof.writeStream.format("memory").queryName(sink)
+      val query = withShufflePartitions(spark, replayStateParts) {
+        prof.writeStream.format("memory").queryName(sink)
           .outputMode("append").start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try {
+      }
+      materializedThen {
         val third = math.max(1, (slice.length + 2) / 3)
         slice.grouped(third).foreach { batch =>
           mem.addData(batch.toSeq); query.processAllAvailable()
@@ -197,8 +184,7 @@ private[graft] trait StreamingEntries extends EntryInfra {
             col("approx_users"), col("median_value"))
           .filter(col("window_start_s") <= maxTs / 1000L)
           .orderBy("window_start_s")
-          .localCheckpoint(true)
-      } finally {
+      } {
         query.stop()
         spark.catalog.dropTempView(sink)
       }
@@ -226,19 +212,12 @@ private[graft] trait StreamingEntries extends EntryInfra {
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(java.sql.Timestamp, Long, String, Double)]
       val dir = java.nio.file.Files.createTempDirectory("graft_q81").toString
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      // state-store tasks per micro-batch = shuffle partitions at stream
-      // start; the replayed slices hold a handful of keys per trigger, so
-      // 4 halves the fixed per-batch dispatch vs 8 (measured −10..15% on
-      // the replay floors; q70 stays at 8 = its bloom shard count so no
-      // task serializes two shard filters)
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      val query =
-        try streaming.StreamingSketches.sinkToSketchTable(
+      val query = withShufflePartitions(spark, replayStateParts) {
+        streaming.StreamingSketches.sinkToSketchTable(
           mem.toDF().toDF("ts", "user_id", "event_type", "value"), dir,
           window = "1 hour", watermark = "2 hours")
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try {
+      }
+      materializedThen {
         val third = math.max(1, (slice.length + 2) / 3)
         slice.grouped(third).foreach { batch =>
           mem.addData(batch.toSeq); query.processAllAvailable()
@@ -250,10 +229,9 @@ private[graft] trait StreamingEntries extends EntryInfra {
             round(call_function("datasketch_theta_estimate", col("merged")))
               .cast("long").as("approx_users"))
           .orderBy("window_start_s")
-          .localCheckpoint(true)
-      } finally {
+      } {
         query.stop()
-        scala.reflect.io.Path(new java.io.File(dir)).deleteRecursively()
+        deleteRec(new java.io.File(dir))
       }
     },
 
@@ -276,14 +254,12 @@ private[graft] trait StreamingEntries extends EntryInfra {
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(java.sql.Timestamp, Long, String, Double)]
       val dir = java.nio.file.Files.createTempDirectory("graft_q98").toString
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      val query =
-        try streaming.StreamingSketches.sinkToSketchTable(
+      val query = withShufflePartitions(spark, replayStateParts) {
+        streaming.StreamingSketches.sinkToSketchTable(
           mem.toDF().toDF("ts", "user_id", "event_type", "value"), dir,
           window = "1 hour", watermark = "2 hours")
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try {
+      }
+      materializedThen {
         val third = math.max(1, (slice.length + 2) / 3)
         slice.grouped(third).foreach { batch =>
           mem.addData(batch.toSeq); query.processAllAvailable()
@@ -299,11 +275,9 @@ private[graft] trait StreamingEntries extends EntryInfra {
             floor(col("ks_exact") * 1e6).cast("long").as("ks_exact_u"),
             (abs(col("ks_stream") - col("ks_exact")) <= col("eps")).as("ok"))
           .orderBy("window_start_s")
-          .localCheckpoint(true)
-      } finally {
+      } {
         query.stop()
-        scala.reflect.io.Path(new java.io.File(dir)).deleteRecursively()
-        ()
+        deleteRec(new java.io.File(dir))
       }
     },
 
@@ -325,7 +299,7 @@ private[graft] trait StreamingEntries extends EntryInfra {
       val query = streaming.StreamingDedup.semDedupSink(
         mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
         cent, tau = 0.35, store)
-      try {
+      materializedThen {
         (0 until 4).foreach { b =>
           mem.addData(slice.filter(_._1 % 4 == b).sortBy(_._1).toSeq)
           query.processAllAvailable()
@@ -334,14 +308,9 @@ private[graft] trait StreamingEntries extends EntryInfra {
           .select(col("id").as("vec_id"), col("batch_id").cast("long").as("batch"),
             col("cluster").cast("long").as("cluster"), col("kept"))
           .orderBy("vec_id")
-          // materialize before the temp dirs are deleted below
-          .localCheckpoint(true)
-      } finally {
+      } {
         query.stop()
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(store))
+        deleteRec(new java.io.File(store))
       }
     },
 
@@ -371,7 +340,7 @@ private[graft] trait StreamingEntries extends EntryInfra {
       val query = streaming.StreamingDedup.curateSink(
         mem.toDF().toDF("doc_id", "text"), seed, emb, "doc_id", "text",
         cent, store)
-      try {
+      materializedThen {
         Seq(1, 3).foreach { b =>
           mem.addData(slice.filter(_._1 % 4 == b).sortBy(_._1).toSeq)
           query.processAllAvailable()
@@ -381,13 +350,9 @@ private[graft] trait StreamingEntries extends EntryInfra {
             col("decision"), col("removed_tokens"), col("n_tokens"),
             col("final_md5"))
           .orderBy("doc_id")
-          .localCheckpoint(true)
-      } finally {
+      } {
         query.stop()
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(store))
+        deleteRec(new java.io.File(store))
       }
     },
   )

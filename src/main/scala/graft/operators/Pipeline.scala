@@ -23,16 +23,15 @@ object Pipeline {
   /** Evaluate independent stage computations CONCURRENTLY (guide §2.6:
     * Spark's scheduler runs several jobs at once inside one application;
     * actions are only sequential because driver code calls them
-    * sequentially). Every thunk here materializes an eager
-    * localCheckpoint of a drop relation that depends only on an
-    * already-materialized upstream leaf — the three media-integrity
-    * arms, the three perceptual-dup arms, the history/batch embedding
-    * slices — so running them from a small thread pool lets each job's
-    * tail back-fill the executors the others free, instead of paying
-    * three full job latencies end to end (measured on q132: the three
-    * decode arms were 5.3 s of an 11.9 s run, sequential by construction
-    * only). Results (the checkpointed DataFrames) are identical — only
-    * the submission order changes. Exceptions propagate unwrapped. */
+    * sequentially). The thunks here are the arms of one [[armStage]] and
+    * the history/batch embedding slices of the incremental `sem_dup`
+    * stage; each depends only on an already-materialized upstream leaf.
+    * An arm's own internal leaves (the image arm's hashes and pairs, the
+    * batch hash and frame leaves) run their jobs while it builds, so
+    * running the thunks from a small thread pool lets each job's tail
+    * back-fill the executors the others free, instead of paying the
+    * arms' job latencies end to end. Results are identical — only the
+    * submission order changes. Exceptions propagate unwrapped. */
   private def parEval[T](thunks: Seq[() => T]): Seq[T] =
     if (thunks.lengthCompare(2) < 0) thunks.map(_())
     else {
@@ -53,14 +52,14 @@ object Pipeline {
     }
 
   /** One curation stage: the decision its drops carry, and its DROP
-    * relation — one id column, O(duplicates) rows, eagerly checkpointed
-    * by the body — computed from the stage's input survivors. A stage
-    * whose option is off is `None` in its core's list and adds no
-    * relation at all.
+    * relation — one id column, O(duplicates) rows, built lazily by the
+    * body from the stage's input survivors and materialized by
+    * [[runStages]]. A stage whose option is off is `None` in its core's
+    * list and adds no relation at all.
     *
-    * Why every drop relation is an eager localCheckpoint (the Components
-    * precedent): each stage both feeds the next stage AND the final
-    * assembly, and several stages iterate (k-means) or self-join
+    * Why the runner makes every drop relation an eager localCheckpoint
+    * (the Components precedent): each stage both feeds the next stage AND
+    * the final assembly, and several stages iterate (k-means) or self-join
     * (near-dup) over the previous one, so an unbroken lineage makes the
     * final plan tree grow EXPONENTIALLY in stage count (measured: the
     * composed query spent ~18 s in Catalyst analysis/optimization alone
@@ -96,11 +95,20 @@ object Pipeline {
     *
     * Stage inputs: each stage reads `base` minus the cumulative union of
     * the drops before it ([[minusDrops]]); the first stage reads `base`
-    * itself. `spanRemoval` maps the gate survivors to the CLEANED leaf
-    * (`idCol`, kept_tokens, removed_tokens, cleaned_text — eagerly
-    * checkpointed by the caller); its non-empty rows are the new base of
-    * the pairwise stages, whose drop union starts over (a doc cleaned
-    * down to nothing is `empty`, never judged by a pairwise stage).
+    * itself. `spanRemoval` maps the gate survivors to the CLEANED
+    * relation (`idCol`, kept_tokens, removed_tokens, cleaned_text); its
+    * non-empty rows are the new base of the pairwise stages, whose drop
+    * union starts over (a doc cleaned down to nothing is `empty`, never
+    * judged by a pairwise stage).
+    *
+    * Materialization is the runner's: it makes each stage's drop
+    * relation and the cleaned relation an eager localCheckpoint, once
+    * each ([[Stage]] says why). A stage body builds a lazy relation and
+    * keeps a leaf of its own only where two consumers inside it read the
+    * same input. Loss: a leaf's blocks are held only by the executors
+    * that computed them, so when one is lost, the query's next job that
+    * reads it fails, with no recompute, because localCheckpoint truncated
+    * the lineage that could rebuild it.
     *
     * Assembly: ONE drop-verdict join (r21) — each drop leaf is tagged
     * with its stage's PRIORITY, its position in `gates ++ pairwise`; the
@@ -121,9 +129,10 @@ object Pipeline {
     def survivors(from: DataFrame, drops: Seq[DataFrame]): DataFrame =
       if (drops.isEmpty) from else minusDrops(from, id, drops.map(dropCol).reduce(_ union _))
     def run(from: DataFrame, stages: Seq[Stage]): Seq[DataFrame] =
-      stages.foldLeft(Vector.empty[DataFrame])((done, s) => done :+ s.drops(survivors(from, done)))
+      stages.foldLeft(Vector.empty[DataFrame])((done, s) =>
+        done :+ s.drops(survivors(from, done)).localCheckpoint(eager = true))
     val gateDrops = run(base, gates)
-    val cleaned = spanRemoval(survivors(base, gateDrops))
+    val cleaned = spanRemoval(survivors(base, gateDrops)).localCheckpoint(eager = true)
     val drops = gateDrops ++ run(cleaned.filter(col("kept_tokens") > 0), pairwise)
     val verdict = drops.zipWithIndex.map { case (d, p) =>
         d.select(col(d.columns.head).as("__d_id"), lit(p).as("__d_p"))
@@ -165,10 +174,11 @@ object Pipeline {
 
   /** A stage made of independent modality ARMS, each an optional drop
     * relation over the same input survivors. Modalities are independent
-    * evidence, so the present arms' decode/pair jobs run concurrently
-    * ([[parEval]]) and their drops union DISTINCT (a doc may fail in
-    * several); a single arm keeps its exchange-free drop relation. All
-    * arms off → no stage. */
+    * evidence, so the present arms are built concurrently ([[parEval]]:
+    * the jobs of their internal leaves overlap) and their drops union
+    * DISTINCT (a doc may fail in several) into the stage's one output,
+    * which the runner materializes once; a single arm keeps its
+    * exchange-free drop relation. All arms off → no stage. */
   private def armStage(decision: String,
                        arms: Seq[Option[DataFrame => DataFrame]]): Option[Stage] = {
     val present = arms.flatten
@@ -181,8 +191,7 @@ object Pipeline {
 
   /** `bad_media` — the media-integrity gate's three modality arms, each
     * one partition-parallel decode pass over its in-play assets, failures
-    * kept as status rows (no second scan of the binary column), its own
-    * checkpointed leaf:
+    * kept as status rows (no second scan of the binary column):
     *  - image ([[MediaOps.decodeStatus]]): decode-fail / out-of-band
     *    mean luminance / uniform raster,
     *  - video ([[VideoOps.decodeStatus]]): demux-fail / zero decodable
@@ -205,19 +214,19 @@ object Pipeline {
       val mean = col("checksum").cast("double") / (col("width") * col("height"))
       MediaOps.decodeStatus(inPlay(m, in, idCol), mediaCodec, mediaGrid).toDF()
         .filter(!col("ok") || mean < minMeanLum || mean > maxMeanLum || col("uniform"))
-        .select(col("doc_id")).localCheckpoint(eager = true)
+        .select(col("doc_id"))
     },
     video.map { v => (in: DataFrame) =>
       val vMean = col("pix_sum").cast("double") / col("pix_cnt")
       VideoOps.decodeStatus(inPlay(v, in, idCol), videoContainer, mediaCodec, videoEvery).toDF()
         .filter(!col("ok") || col("n_decoded") === 0 ||
           vMean < minMeanLum || vMean > maxMeanLum || col("uniform"))
-        .select(col("doc_id")).localCheckpoint(eager = true)
+        .select(col("doc_id"))
     },
     audio.map { a => (in: DataFrame) =>
       MediaOps.audioStatus(inPlay(a, in, idCol), audioCodec).toDF()
         .filter(!col("ok") || col("n_samples") === 0 || col("silent"))
-        .select(col("doc_id")).localCheckpoint(eager = true)
+        .select(col("doc_id"))
     }))
 
   /** `wrong_lang` — the trained LANGUAGE gate, the CCNet discipline:
@@ -237,7 +246,7 @@ object Pipeline {
     Stage("wrong_lang", in =>
       TextOps.langNbPredict(lm, in.select(col(idCol), col(textCol)), idCol, textCol)
         .filter(!col("pred_lang").isin(allow: _*))
-        .select(col(idCol)).localCheckpoint(eager = true))
+        .select(col(idCol)))
   }
 
   /** `rule_filtered` — the Gopher/C4 heuristic RULE gate
@@ -258,7 +267,7 @@ object Pipeline {
     Stage("rule_filtered", in =>
       in.select(col(idCol), col(textCol))
         .filter(!QualityFilters.rulePass(col(textCol), rp))
-        .select(col(idCol)).localCheckpoint(eager = true))
+        .select(col(idCol)))
   }
 
   /** `contaminated` — eval-suite decontamination: survivors sharing a
@@ -299,7 +308,7 @@ object Pipeline {
         .groupBy("doc").agg(max(col("__cos")).as("__mc"))
         .filter(col("__mc") >= cosTau)
         .select(col("doc"))
-      ng.union(sem).distinct().localCheckpoint(eager = true)
+      ng.union(sem).distinct()
     }) }
 
   /** The relation re-spread to cluster parallelism when its materialized
@@ -441,11 +450,11 @@ object Pipeline {
         domainBlocklist.map { bl => Stage("blocked_domain", in =>
           withDomain(in).join(broadcast(bl.select(col("domain").as("__domain"))),
               Seq("__domain"), "left_semi")
-            .select(id).localCheckpoint(eager = true)) },
+            .select(id)) },
         Option.when(domainTokenBudget > 0)(Stage("over_domain_quota", in =>
           QuotaSample.tokenQuota(withDomain(in), "__domain", idCol, textCol,
               domainTokenBudget)
-            .filter(!col("kept")).select(id).localCheckpoint(eager = true)))).flatten
+            .filter(!col("kept")).select(id)))).flatten
     }
     leadingStages.set(domainStages)
     try curateFull(extracted, embeddings, idCol, textCol, sourceCol,
@@ -542,7 +551,7 @@ object Pipeline {
     val id = col(idCol)
     val gates = leadingStages.get ++ Seq(
       Some(Stage("exact_dup", in => DedupOps.dupIds(in, idCol, textCol)
-        .select(col("__dup_id")).localCheckpoint(eager = true))),
+        .select(col("__dup_id")))),
       mediaGate(idCol, media, mediaCodec, mediaGrid, minMeanLum, maxMeanLum,
         video, videoContainer, videoEvery, audio, audioCodec),
       armStage("media_dup", Seq(
@@ -557,16 +566,16 @@ object Pipeline {
           DedupOps.qualityKeepClusters(assets.select(col("doc_id")), pairs,
               hx.select(col("doc_id"), col("checksum")), "doc_id", scoreCol = "checksum")
             .filter(!col("kept"))
-            .select(col("doc_id")).localCheckpoint(eager = true)
+            .select(col("doc_id"))
         },
         audioDup.map { ad => (in: DataFrame) =>
           MediaOps.audioDupPairs(inPlay(ad, in, idCol), audioCodec, audioDupMaxDist)
-            .select(col("doc_b")).distinct().localCheckpoint(eager = true)
+            .select(col("doc_b")).distinct()
         },
         videoDup.map { vd => (in: DataFrame) =>
           VideoOps.videoDupSegments(inPlay(vd, in, idCol), videoContainer, mediaCodec,
               videoDupMinFrames)
-            .select(col("doc_b")).distinct().localCheckpoint(eager = true)
+            .select(col("doc_b")).distinct()
         })),
       langGate(langModel, langAllow, idCol, textCol),
       ruleGate(ruleParams, idCol, textCol),
@@ -594,18 +603,16 @@ object Pipeline {
             widenIfNarrow(in.select(id, col("cleaned_text").as(textCol))),
             idCol, textCol, nbBuckets)
           .select(id, col("nb_score_u")).localCheckpoint(eager = true)
-        val drops =
-          if (lowQualityFraction > 0.0) {
-            val k = math.floor(lowQualityFraction * scored.count()).toLong
-            if (k <= 0L) scored.limit(0).select(id)
-            else TextOps.rankByScore(scored, col("nb_score_u"), id)
-              .filter(col("__grk") <= k).select(id)
-          } else scored.filter(col("nb_score_u") < minNbScoreU).select(id)
-        drops.localCheckpoint(eager = true)
+        if (lowQualityFraction > 0.0) {
+          val k = math.floor(lowQualityFraction * scored.count()).toLong
+          if (k <= 0L) scored.limit(0).select(id)
+          else TextOps.rankByScore(scored, col("nb_score_u"), id)
+            .filter(col("__grk") <= k).select(id)
+        } else scored.filter(col("nb_score_u") < minNbScoreU).select(id)
       }) },
       Some(Stage("near_dup", in => DedupOps.jaccardPairs(in, idCol, "cleaned_text",
           shingleK, nearDupThreshold, maxShingleDF)
-        .select(col("doc_b")).distinct().localCheckpoint(eager = true))),
+        .select(col("doc_b")).distinct())),
       Some(Stage("sem_dup", in => {
         // centroids fit on the survivor slice — the corpus the stage
         // actually sees. Checkpointed: fit's init + per-iteration passes
@@ -622,21 +629,20 @@ object Pipeline {
         // metadata read on the checkpointed leaf; min() is the identity
         // whenever survivors >= semK (every pinned oracle).
         val n = emb.count()
-        (if (n == 0L) emb.select(col(vecIdCol).as("id"))
-          else KMeansOps.semDedup(emb, vecIdCol, vecCol,
-              KMeansOps.fit(emb, vecIdCol, vecCol, math.min(semK.toLong, n).toInt, semIters),
-              semTau)
-            .filter(!col("kept")).select(col("id")))
-          .localCheckpoint(eager = true)
+        if (n == 0L) emb.select(col(vecIdCol).as("id"))
+        else KMeansOps.semDedup(emb, vecIdCol, vecCol,
+            KMeansOps.fit(emb, vecIdCol, vecCol, math.min(semK.toLong, n).toInt, semIters),
+            semTau)
+          .filter(!col("kept")).select(col("id"))
       })),
       Some(Stage("over_quota", in =>
         QuotaSample.tokenQuota(in.join(docs.select(id, col(sourceCol)), Seq(idCol)),
             sourceCol, idCol, "cleaned_text", tokenBudget)
-          .filter(!col("kept")).select(id).localCheckpoint(eager = true)))).flatten
+          .filter(!col("kept")).select(id)))).flatten
 
     runStages(docs.select(id, col(sourceCol)), docs, idCol, gates,
         in => SpanDedup.removeDuplicatedSpans(in, idCol, textCol,
-          spanK, minSpan, maxGramOccurrences).localCheckpoint(eager = true),
+          spanK, minSpan, maxGramOccurrences),
         pairwise)
       .select(Seq(id, col(sourceCol), col("decision")) ++ releasedCols(piiRedactOutput): _*)
   }
@@ -665,7 +671,7 @@ object Pipeline {
     val hh = sigs(history.select(col(idCol).as("doc_id"), col("content")))
     val cross = DedupOps.simhashCrossPairsFromSigs(hb, hh, maxDist).select(col("doc_a"))
     val mates = DedupOps.simhashPairsFromSigs(hb, maxDist).select(col("doc_b").as("doc_a"))
-    cross.union(mates).distinct().localCheckpoint(eager = true)
+    cross.union(mates).distinct()
   }
 
   /** INCREMENTAL curation — [[curateFull]]'s ingest-time twin: a new
@@ -722,8 +728,9 @@ object Pipeline {
     * `centroids` (the q101/q103 lifecycle) are per-snapshot builds a
     * deployment loads from [[SnapshotStore]]; None builds them inline.
     * Per-batch cost = batch passes + equi-joins into history relations —
-    * never batch × history. Stage outputs are eagerly checkpointed (the
-    * [[Stage]] plan-growth rationale). */
+    * never batch × history. [[runStages]] materializes each stage's
+    * output and the cleaned batch once (the [[Stage]] plan-growth
+    * rationale). */
   def curateIncremental(history: DataFrame, batch: DataFrame,
                         embeddings: DataFrame,
                         idCol: String, textCol: String,
@@ -812,7 +819,7 @@ object Pipeline {
             val mates = SpanDedup.duplicatedSpansFromGrams(bg, k = 1,
                 minSpan = videoDupMinFrames, maxGramOccurrences = 1000)
               .select(col("doc_b").as("doc_a"))
-            cross.union(mates).distinct().localCheckpoint(eager = true)
+            cross.union(mates).distinct()
         })),
       langGate(langModel, langAllow, idCol, textCol),
       ruleGate(ruleParams, idCol, textCol),
@@ -831,14 +838,14 @@ object Pipeline {
         TextOps.nbScore(m, widenIfNarrow(in.select(id, col("cleaned_text").as(textCol))),
             idCol, textCol)
           .filter(col("nb_score_u") < minNbScoreU)
-          .select(id).localCheckpoint(eager = true)) },
+          .select(id)) },
       // history's raw text vs the batch's CLEANED text (both sides under
       // crossMinhashPairs' shared union hot list)
       Some(Stage("near_dup", in => DedupOps.crossMinhashPairs(
           history.select(id, col(textCol)),
           in.select(id, col("cleaned_text").as(textCol)),
           idCol, textCol, shingleK, nearDupThreshold, maxShingleDF = maxShingleDF)
-        .select(col("doc_b")).distinct().localCheckpoint(eager = true))),
+        .select(col("doc_b")).distinct())),
       Some(Stage("sem_dup", in => {
         // two independent embedding slices — materialize concurrently
         val Seq(embHist, embBatch) = parEval(Seq(
@@ -860,11 +867,10 @@ object Pipeline {
         }
         // empty history (no centroids, nothing admitted yet) => nothing
         // to dup against: the drop set is EMPTY
-        (if (cent.isEmpty) embBatch.limit(0).select(col(vecIdCol).as("id"))
-          else KMeansOps.incrementalSemDedup(embHist, embBatch,
-              vecIdCol, vecCol, cent, semTau)
-            .filter(!col("kept")).select(col("id")))
-          .localCheckpoint(eager = true)
+        if (cent.isEmpty) embBatch.limit(0).select(col(vecIdCol).as("id"))
+        else KMeansOps.incrementalSemDedup(embHist, embBatch,
+            vecIdCol, vecCol, cent, semTau)
+          .filter(!col("kept")).select(col("id"))
       }))).flatten
 
     // `keepCleanedText` adds the survivor text itself (kept rows only) —
@@ -876,7 +882,7 @@ object Pipeline {
         batch.select(id).join(s1.select(id.as("__adm")), id === col("__adm"), "left"),
         s1, idCol, gates,
         in => SpanDedup.removeCrossSpans(history, in, idCol, textCol,
-          spanK, minSpan, maxGramOccurrences).localCheckpoint(eager = true),
+          spanK, minSpan, maxGramOccurrences),
         pairwise)
       .withColumn("decision", when(col("__adm").isNull, "exact_dup").otherwise(col("decision")))
     val baseCols = Seq(id, col("decision")) ++ releasedCols(piiRedactOutput)

@@ -1897,12 +1897,18 @@ class OperatorsSpec extends SparkTestBase {
     assert(out(0L) == "kept" && out(1L) == "kept", s"$out")
     // a doc flagged by TWO arms must still yield exactly one output row
     val badBoth = Seq((3L, Array[Byte](9, 9, 9))).toDF("doc_id", "content")
-    val rows = Pipeline.curateFull(corpus, embs, "doc_id", "text", "source",
+    val both = Pipeline.curateFull(corpus, embs, "doc_id", "text", "source",
         vecIdCol = "vec_id", vecCol = "emb", semK = 2, tokenBudget = 1000L,
         media = Some(badBoth), audio = Some(clips))
-      .collect()
+    val rows = both.collect()
     assert(rows.length == 5, s"fan-out: ${rows.length} rows")
     assert(rows.count(r => r.getLong(0) == 3L) == 1)
+    // the runner materializes each stage once, the two-arm bad_media stage
+    // included: one leaf per stage (exact_dup, bad_media, near_dup,
+    // sem_dup, over_quota) plus the cleaned leaf
+    val leaves = both.queryExecution.optimizedPlan.collectLeaves()
+      .count(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+    assert(leaves == 5 + 1, s"LogicalRDD leaves: $leaves")
   }
 
   test("incremental media gate: batch assets judged before text stages; hook off unchanged") {
