@@ -259,23 +259,11 @@ object Registration {
       val lgK = checkRange(fname, foldInt(args.head, fname), 4, hi, "lg_k")
       val child = args(1)
       if (union) checkFamilyTag(fname, family, child)
-      (family, union) match {
-        case ("hll", false) =>
-          if (child.dataType == BinaryType)
-            bindErr(s"$fname: sketch input requires datasketch_hll_union")
-          HllBuildAgg(lgK, child)
-        case ("hll", true) =>
-          if (child.dataType != BinaryType) bindErr(s"$fname: input must be a sketch BLOB")
-          HllUnionAgg(lgK, child)
-        case ("cpc", false) =>
-          if (child.dataType == BinaryType)
-            bindErr(s"$fname: sketch input requires datasketch_cpc_union")
-          CpcBuildAgg(lgK, child)
-        case ("cpc", true) =>
-          if (child.dataType != BinaryType) bindErr(s"$fname: input must be a sketch BLOB")
-          CpcUnionAgg(lgK, child)
-        case other => throw new IllegalStateException(s"unexpected counting family $other")
-      }
+      if (union && child.dataType != BinaryType) bindErr(s"$fname: input must be a sketch BLOB")
+      if (!union && child.dataType == BinaryType)
+        bindErr(s"$fname: sketch input requires datasketch_${family}_union")
+      if (family == "hll") HllBuildAgg(lgK, child, isMerge = union)
+      else CpcBuildAgg(lgK, child, isMerge = union)
     }
   }
 
@@ -781,8 +769,8 @@ object SketchMetadataRule
           Registration.inputTagFor(q.child)))
         case _: ReqAgg        => Some(Kit.sketchMetadataTags("req", None))
         case _: TDigestAgg    => Some(Kit.sketchMetadataTags("tdigest", None))
-        case _: HllBuildAgg | _: HllUnionAgg => Some(Kit.sketchMetadataTags("hll", None))
-        case _: CpcBuildAgg | _: CpcUnionAgg => Some(Kit.sketchMetadataTags("cpc", None))
+        case _: HllBuildAgg   => Some(Kit.sketchMetadataTags("hll", None))
+        case _: CpcBuildAgg   => Some(Kit.sketchMetadataTags("cpc", None))
         case _: ThetaAgg      => Some(Kit.sketchMetadataTags("theta", None))
         case _: FreqItemsAgg  => Some(Kit.sketchMetadataTags("frequent_items", None))
         case _: AodBuildAgg | _: AodUnionAgg => Some(Kit.sketchMetadataTags("aod", None))

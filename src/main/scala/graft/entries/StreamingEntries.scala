@@ -17,6 +17,40 @@ private[graft] trait StreamingEntries extends EntryInfra {
     * serializes two shard filters). */
   private val replayStateParts = 4
 
+  /** The `user_id % 7` events slice replayed in thirds through
+    * [[streaming.StreamingSketches.sinkToSketchTable]] (1-hour windows,
+    * 2-hour watermark) into a temp dir; `read` of that dir is the result,
+    * materialized before the stream stops and the dir is deleted. */
+  private def replayIntoSketchTable(spark: SparkSession)(read: String => DataFrame): DataFrame = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val slice = spark.table("events")
+      .filter(col("user_id") % 7 === 0)
+      .select(col("ts"), col("user_id").cast("long"), col("event_type"),
+        col("value").cast("double"))
+      .as[(java.sql.Timestamp, Long, String, Double)]
+      .collect().sortBy(_._1.getTime)
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(java.sql.Timestamp, Long, String, Double)]
+    val dir = java.nio.file.Files.createTempDirectory("graft_sketch_sink").toString
+    val query = withShufflePartitions(spark, replayStateParts) {
+      streaming.StreamingSketches.sinkToSketchTable(
+        mem.toDF().toDF("ts", "user_id", "event_type", "value"), dir,
+        window = "1 hour", watermark = "2 hours")
+    }
+    materializedThen {
+      val third = math.max(1, (slice.length + 2) / 3)
+      slice.grouped(third).foreach { batch =>
+        mem.addData(batch.toSeq); query.processAllAvailable()
+      }
+      read(dir)
+    } {
+      query.stop()
+      deleteRec(new java.io.File(dir))
+    }
+  }
+
   protected def streamingQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- streaming surface, oracle-checked: replay a corpus slice through
     //    the LIFETIME bloom dedup (3 micro-batches), then replay it AGAIN —
@@ -200,28 +234,8 @@ private[graft] trait StreamingEntries extends EntryInfra {
     //    orders of magnitude below theta's 4096 retained). Update mode emits every touched window each batch,
     //    so no watermark sentinels are needed. -------------------------
     "q81_streaming_sketch_sink" -> qd { spark =>
-      import spark.implicits._
       import org.apache.spark.sql.functions._
-      val slice = spark.table("events")
-        .filter(col("user_id") % 7 === 0)
-        .select(col("ts"), col("user_id").cast("long"), col("event_type"),
-          col("value").cast("double"))
-        .as[(java.sql.Timestamp, Long, String, Double)]
-        .collect().sortBy(_._1.getTime)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, Long, String, Double)]
-      val dir = java.nio.file.Files.createTempDirectory("graft_q81").toString
-      val query = withShufflePartitions(spark, replayStateParts) {
-        streaming.StreamingSketches.sinkToSketchTable(
-          mem.toDF().toDF("ts", "user_id", "event_type", "value"), dir,
-          window = "1 hour", watermark = "2 hours")
-      }
-      materializedThen {
-        val third = math.max(1, (slice.length + 2) / 3)
-        slice.grouped(third).foreach { batch =>
-          mem.addData(batch.toSeq); query.processAllAvailable()
-        }
+      replayIntoSketchTable(spark) { dir =>
         spark.read.parquet(dir)
           .groupBy(col("window_start"))
           .agg(call_function("datasketch_theta", col("users_sketch")).as("merged"))
@@ -229,9 +243,6 @@ private[graft] trait StreamingEntries extends EntryInfra {
             round(call_function("datasketch_theta_estimate", col("merged")))
               .cast("long").as("approx_users"))
           .orderBy("window_start_s")
-      } {
-        query.stop()
-        deleteRec(new java.io.File(dir))
       }
     },
 
@@ -242,28 +253,8 @@ private[graft] trait StreamingEntries extends EntryInfra {
     //    cross-window state). Exact per-pair KS from the batch twin is
     //    hash-checked; the streaming sketch KS is band-checked --------
     "q98_streaming_drift" -> qd { spark =>
-      import spark.implicits._
       import org.apache.spark.sql.functions._
-      val slice = spark.table("events")
-        .filter(col("user_id") % 7 === 0)
-        .select(col("ts"), col("user_id").cast("long"), col("event_type"),
-          col("value").cast("double"))
-        .as[(java.sql.Timestamp, Long, String, Double)]
-        .collect().sortBy(_._1.getTime)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, Long, String, Double)]
-      val dir = java.nio.file.Files.createTempDirectory("graft_q98").toString
-      val query = withShufflePartitions(spark, replayStateParts) {
-        streaming.StreamingSketches.sinkToSketchTable(
-          mem.toDF().toDF("ts", "user_id", "event_type", "value"), dir,
-          window = "1 hour", watermark = "2 hours")
-      }
-      materializedThen {
-        val third = math.max(1, (slice.length + 2) / 3)
-        slice.grouped(third).foreach { batch =>
-          mem.addData(batch.toSeq); query.processAllAvailable()
-        }
+      replayIntoSketchTable(spark) { dir =>
         val stream = streaming.StreamingSketches.driftFromSketchTable(spark, dir)
           .select(col("window_start").cast("long").as("ws"),
             col("ks").as("ks_stream"), col("eps"))
@@ -275,9 +266,6 @@ private[graft] trait StreamingEntries extends EntryInfra {
             floor(col("ks_exact") * 1e6).cast("long").as("ks_exact_u"),
             (abs(col("ks_stream") - col("ks_exact")) <= col("eps")).as("ok"))
           .orderBy("window_start_s")
-      } {
-        query.stop()
-        deleteRec(new java.io.File(dir))
       }
     },
 

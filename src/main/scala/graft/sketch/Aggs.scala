@@ -14,7 +14,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import Kit._
 
@@ -38,21 +37,6 @@ abstract class SketchAggBase[T] extends TypedImperativeAggregate[T] {
   override def children: Seq[Expression] = child :: Nil
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
-
-  /** Feed one non-null raw value into a sketch via the per-type callbacks. */
-  protected final def dispatch(v: Any)(
-      onLong: Long => Unit, onDouble: Double => Unit,
-      onString: String => Unit, onBytes: Array[Byte] => Unit): Unit = v match {
-    case l: Long                => onLong(l)
-    case i: Int                 => onLong(i.toLong)
-    case s: Short               => onLong(s.toLong)
-    case b: Byte                => onLong(b.toLong)
-    case d: Double              => onDouble(d)
-    case f: Float               => onDouble(f.toDouble)
-    case s: UTF8String          => onString(s.toString)
-    case b: Array[Byte]         => onBytes(b)
-    case other                  => unsupported(other)
-  }
 
   protected final def unsupported(v: Any): Nothing = throw new IllegalArgumentException(
     s"$prettyName: unsupported input value type ${v.getClass.getName}")
@@ -184,24 +168,35 @@ abstract class PartialBuildAgg[S <: AnyRef] extends SketchAggBase[Partial[S]] {
 // HLL (reference src/generated.cpp:866-1002; SURVEY §2.2)
 // ---------------------------------------------------------------------------
 
-/** `datasketch_hll(lg_k, v)` — build an HLL sketch. The sketch is an
+/** `datasketch_hll(lg_k, v)` — build an HLL sketch; with `isMerge`,
+  * `datasketch_hll_union(lg_k, sketch)` — merge HLL sketch blobs
+  * (reference `src/generated.cpp:931-1002`). The sketch is an
   * [[hll.Union]] so cross-partition partial merges (the reference's thread
   * `Combine`, here the shuffle) go through hll union semantics with HLL_4
   * result, mirroring `codegen/generated.cpp.j2:399-405`. Empty input → NULL.
   * Finalize uses the updatable serialization (`serialize_updatable`,
-  * reference `src/generated.cpp:913-926`).
+  * reference `src/generated.cpp:913-926`). The mode is set by the bind
+  * layer, not by the child type: a BINARY child of the build is raw bytes
+  * to hash.
   */
 case class HllBuildAgg(
     lgK: Int,
     child: Expression,
+    isMerge: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0) extends PartialBuildAgg[hll.Union] {
 
-  override def prettyName: String = "datasketch_hll"
+  override def prettyName: String = if (isMerge) "datasketch_hll_union" else "datasketch_hll"
+  override protected def laneOf(dt: DataType): Int = if (isMerge) Partial.NoLane else Partial.laneOf(dt)
   override protected def newSketch(): hll.Union = new hll.Union(lgK)
   override protected def putLong(s: hll.Union, l: Long): Unit = s.update(l)
   override protected def putDouble(s: hll.Union, d: Double): Unit = s.update(d)
   override protected def putBytes(s: hll.Union, b: Array[Byte]): Unit = s.update(b)
+  override protected def putOther(s: hll.Union, v: Any): Unit =
+    if (isMerge) {
+      val b = v.asInstanceOf[Array[Byte]]
+      s.update(deser("HLL", b)(hll.HllSketch.heapify(mem(b))))
+    } else unsupported(v)
   override protected def mergeSketch(s: hll.Union, o: hll.Union): hll.Union = {
     s.update(o.getResult(hll.TgtHllType.HLL_8)); s
   }
@@ -221,67 +216,40 @@ case class HllBuildAgg(
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(child = c.head)
 }
 
-/** `datasketch_hll_union(lg_k, sketch)` — merge HLL sketch blobs
-  * (reference `src/generated.cpp:931-1002`). */
-case class HllUnionAgg(
-    lgK: Int,
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0) extends SketchAggBase[hll.Union] {
-
-  override def prettyName: String = "datasketch_hll_union"
-  override def createAggregationBuffer(): hll.Union = new hll.Union(lgK)
-
-  override def update(buf: hll.Union, input: InternalRow): hll.Union = {
-    val v = child.eval(input)
-    if (v != null) {
-      val b = v.asInstanceOf[Array[Byte]]
-      buf.update(deser("HLL", b)(hll.HllSketch.heapify(mem(b))))
-    }
-    buf
-  }
-  override def merge(buf: hll.Union, other: hll.Union): hll.Union = {
-    buf.update(other.getResult(hll.TgtHllType.HLL_8)); buf
-  }
-  override def eval(buf: hll.Union): Any = {
-    val r = buf.getResult(hll.TgtHllType.HLL_4)
-    if (r.isEmpty) null else r.toUpdatableByteArray
-  }
-  override def serialize(buf: hll.Union): Array[Byte] =
-    buf.getResult(hll.TgtHllType.HLL_8).toUpdatableByteArray
-  override def deserialize(bytes: Array[Byte]): hll.Union = {
-    val u = new hll.Union(lgK)
-    u.update(hll.HllSketch.heapify(mem(bytes)))
-    u
-  }
-  override def withNewMutableAggBufferOffset(o: Int): HllUnionAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllUnionAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(child = c.head)
-}
-
 // ---------------------------------------------------------------------------
 // CPC (reference src/generated.cpp:1004-1146)
 // ---------------------------------------------------------------------------
 
 /** CPC sketch state: raw updates land in `sk`. Once merging starts, one
   * [[CpcUnion]] keyed on the target's lg_k (reference
-  * `src/generated.cpp:1046`) absorbs every merged sketch, as
-  * [[CpcUnionAgg]]'s buffer does, so a group's merge cost stays linear in
-  * its partials; `sk` is folded into it before a merge and at the result. */
+  * `src/generated.cpp:1046`, the per-state `cpc_union` of
+  * `src/generated.cpp:1004-1071`) absorbs every merged sketch, so a group's
+  * merge cost stays linear in its partials; `sk` is folded into it before a
+  * merge and at the result. */
 final class CpcBuf(var sk: CpcSketch, var u: CpcUnion)
 
-/** `datasketch_cpc(lg_k, v)` — build a CPC sketch. Empty input → NULL. */
+/** `datasketch_cpc(lg_k, v)` — build a CPC sketch; with `isMerge`,
+  * `datasketch_cpc_union(lg_k, sketch)` — merge CPC sketch blobs into the
+  * state's one union, materialized only at combine/finalize. Empty input →
+  * NULL. The mode is set by the bind layer, as for [[HllBuildAgg]]. */
 case class CpcBuildAgg(
     lgK: Int,
     child: Expression,
+    isMerge: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0) extends PartialBuildAgg[CpcBuf] {
 
-  override def prettyName: String = "datasketch_cpc"
+  override def prettyName: String = if (isMerge) "datasketch_cpc_union" else "datasketch_cpc"
+  override protected def laneOf(dt: DataType): Int = if (isMerge) Partial.NoLane else Partial.laneOf(dt)
   override protected def newSketch(): CpcBuf = new CpcBuf(new CpcSketch(lgK), null)
   override protected def putLong(s: CpcBuf, l: Long): Unit = s.sk.update(l)
   override protected def putDouble(s: CpcBuf, d: Double): Unit = s.sk.update(d)
   override protected def putBytes(s: CpcBuf, b: Array[Byte]): Unit = s.sk.update(b)
+  override protected def putOther(s: CpcBuf, v: Any): Unit =
+    if (isMerge) {
+      val b = v.asInstanceOf[Array[Byte]]
+      fold(s); s.u.update(deser("CPC", b)(CpcSketch.heapify(mem(b))))
+    } else unsupported(v)
 
   private def fold(s: CpcBuf): Unit = {
     if (s.u == null) s.u = new CpcUnion(lgK)
@@ -302,45 +270,6 @@ case class CpcBuildAgg(
     new CpcBuf(CpcSketch.heapify(mem(bytes)), null)
   override def withNewMutableAggBufferOffset(o: Int): CpcBuildAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): CpcBuildAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(child = c.head)
-}
-
-/** `datasketch_cpc_union(lg_k, sketch)` — merge CPC sketch blobs.
-  * Buffer is a persistent [[CpcUnion]] (one per group, like the reference's
-  * per-state `cpc_union`, `src/generated.cpp:1004-1071`); the union is only
-  * materialized at combine/finalize, never per input row. */
-case class CpcUnionAgg(
-    lgK: Int,
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0) extends SketchAggBase[CpcUnion] {
-
-  override def prettyName: String = "datasketch_cpc_union"
-  override def createAggregationBuffer(): CpcUnion = new CpcUnion(lgK)
-
-  override def update(buf: CpcUnion, input: InternalRow): CpcUnion = {
-    val v = child.eval(input)
-    if (v != null) {
-      val b = v.asInstanceOf[Array[Byte]]
-      buf.update(deser("CPC", b)(CpcSketch.heapify(mem(b))))
-    }
-    buf
-  }
-  override def merge(buf: CpcUnion, other: CpcUnion): CpcUnion = {
-    buf.update(other.getResult); buf
-  }
-  override def eval(buf: CpcUnion): Any = {
-    val r = buf.getResult
-    if (r.isEmpty) null else r.toByteArray
-  }
-  override def serialize(buf: CpcUnion): Array[Byte] = buf.getResult.toByteArray
-  override def deserialize(bytes: Array[Byte]): CpcUnion = {
-    val u = new CpcUnion(lgK)
-    u.update(CpcSketch.heapify(mem(bytes)))
-    u
-  }
-  override def withNewMutableAggBufferOffset(o: Int): CpcUnionAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CpcUnionAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(child = c.head)
 }
 

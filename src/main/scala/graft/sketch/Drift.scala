@@ -1,9 +1,6 @@
 package graft.sketch
 
-import org.apache.datasketches.kll.{KllDoublesSketch, KllFloatsSketch}
-import org.apache.datasketches.quantiles.DoublesSketch
-import org.apache.datasketches.quantilescommon.{KolmogorovSmirnov, QuantilesAPI}
-import org.apache.datasketches.req.ReqSketch
+import org.apache.datasketches.quantilescommon.{KolmogorovSmirnov, QuantilesAPI, QuantilesDoublesAPI, QuantilesFloatsAPI}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
@@ -44,48 +41,24 @@ case class KsScalar(family: String, fn: String, elem: ElemType, children: Seq[Ex
     case other   => throw new IllegalArgumentException(s"unknown ks fn '$other'")
   }
 
-  private def kllD(bytes: Array[Byte]): KllDoublesSketch =
-    memoDeser("ks/kll/double", bytes)(
-      deser("KLL", bytes)(KllDoublesSketch.heapify(mem(bytes))))
-  private def kllF(bytes: Array[Byte]): KllFloatsSketch =
-    memoDeser("ks/kll/float", bytes)(
-      deser("KLL", bytes)(KllFloatsSketch.heapify(mem(bytes))))
-  private def classicD(bytes: Array[Byte]): DoublesSketch =
-    memoDeser("ks/quantiles/double", bytes)(
-      deser("Quantiles", bytes)(DoublesSketch.heapify(mem(bytes))))
-  private def req(bytes: Array[Byte]): ReqSketch =
-    memoDeser("ks/req", bytes)(
-      deser("REQ", bytes)(ReqSketch.heapify(mem(bytes))))
+  /** The library sketch behind a blob's [[QuantWrap]] view: a KS probe
+    * and the quantile probes over one blob share one memo entry. */
+  private def sketch(a: Any): QuantilesAPI =
+    QuantWrap.of(family, elem, a.asInstanceOf[Array[Byte]]).asInstanceOf[QuantWrap.Lib].sketch
 
   override def compute(args: Array[Any]): Any = {
-    val ba = args(0).asInstanceOf[Array[Byte]]
-    val bb = args(1).asInstanceOf[Array[Byte]]
-    (family, elem) match {
-      case ("kll", ElemType.Flt) =>
-        val (s1, s2) = (kllF(ba), kllF(bb))
-        finish(s1, s2, KolmogorovSmirnov.computeKSDelta(s1, s2), args)
-      case ("kll", _) =>
-        val (s1, s2) = (kllD(ba), kllD(bb))
-        finish(s1, s2, KolmogorovSmirnov.computeKSDelta(s1, s2), args)
-      case ("req", _) =>
-        val (s1, s2) = (req(ba), req(bb))
-        finish(s1, s2, KolmogorovSmirnov.computeKSDelta(s1, s2), args)
-      case _ =>
-        val (s1, s2) = (classicD(ba), classicD(bb))
-        finish(s1, s2, KolmogorovSmirnov.computeKSDelta(s1, s2), args)
-    }
-  }
-
-  /** delta is by-name: never forced when either side is empty (the
-    * library's sorted-view accessors throw on an empty sketch). */
-  private def finish(s1: QuantilesAPI, s2: QuantilesAPI, delta: => Double,
-                     args: Array[Any]): Any =
+    val (s1, s2) = (sketch(args(0)), sketch(args(1)))
+    // the library's sorted-view accessors throw on an empty sketch
     if (s1.isEmpty || s2.isEmpty) null
     else fn match {
-      case "delta" => delta
+      case "delta" => (s1, s2) match {
+        case (a: QuantilesFloatsAPI, b: QuantilesFloatsAPI) => KolmogorovSmirnov.computeKSDelta(a, b)
+        case (a: QuantilesDoublesAPI, b: QuantilesDoublesAPI) => KolmogorovSmirnov.computeKSDelta(a, b)
+      }
       case "test" =>
         KolmogorovSmirnov.kolmogorovSmirnovTest(s1, s2, args(2).asInstanceOf[Double])
     }
+  }
 
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
     copy(children = c)

@@ -1,11 +1,14 @@
 package graft.sketch
 
+import scala.reflect.ClassTag
+
 import org.apache.datasketches.cpc.CpcSketch
 import org.apache.datasketches.frequencies
 import org.apache.datasketches.frequencies.ErrorType
 import org.apache.datasketches.hll.HllSketch
-import org.apache.datasketches.kll.{KllDoublesSketch, KllFloatsSketch, KllItemsSketch, KllLongsSketch}
+import org.apache.datasketches.kll.{KllDoublesSketch, KllFloatsSketch, KllItemsSketch, KllLongsSketch, KllSketch}
 import org.apache.datasketches.quantiles.{DoublesSketch, ItemsSketch => ClassicItemsSketch}
+import org.apache.datasketches.quantilescommon.{QuantilesAPI, QuantilesDoublesAPI, QuantilesFloatsAPI, QuantilesGenericAPI, QuantilesLongsAPI}
 import org.apache.datasketches.req.ReqSketch
 import org.apache.datasketches.tdigest.TDigestDouble
 import org.apache.datasketches.theta
@@ -111,7 +114,9 @@ abstract class SketchScalar extends Expression {
 // ---------------------------------------------------------------------------
 
 /** Uniform view over the per-family, per-element-type Java quantile sketches
-  * (the reference's template instantiations, `codegen/generated.cpp.j2`). */
+  * (the reference's template instantiations, `codegen/generated.cpp.j2`):
+  * one view per item type of the library's `quantilescommon` interfaces,
+  * plus TDigest's. */
 sealed trait QuantWrap {
   def quantile(r: Double, incl: Boolean): Any
   def rank(item: Double, incl: Boolean): Double
@@ -130,119 +135,77 @@ sealed trait QuantWrap {
 }
 
 object QuantWrap {
-  private def jl(d: Double): java.lang.Long = java.lang.Long.valueOf(d.toLong)
+  /** A library sketch: what every item type shares through [[QuantilesAPI]].
+    * `describe` is the family's own text, `toString(a, b)` for classic
+    * quantiles and KLL and `toString` for REQ. */
+  sealed abstract class Lib(val sketch: QuantilesAPI) extends QuantWrap {
+    def k: Int = sketch.getK
+    def isEmpty: Boolean = sketch.isEmpty
+    def n: Long = sketch.getN
+    def isEstimationMode: Boolean = sketch.isEstimationMode
+    def numRetained: Long = sketch.getNumRetained
+    def nre(isPmf: Boolean): Double = sketch.getNormalizedRankError(isPmf)
+    def describe(a: Boolean, b: Boolean): String = sketch match {
+      case s: KllSketch             => s.toString(a, b)
+      case s: DoublesSketch         => s.toString(a, b)
+      case s: ClassicItemsSketch[_] => s.toString(a, b)
+      case s                        => s.toString
+    }
+  }
 
-  final class QDbl(s: DoublesSketch) extends QuantWrap {
+  /** Classic quantiles and KLL over doubles. */
+  final class Doubles(s: QuantilesDoublesAPI) extends Lib(s) {
     def quantile(r: Double, incl: Boolean): Any = s.getQuantile(r, criteria(incl))
     def rank(item: Double, incl: Boolean): Double = s.getRank(item, criteria(incl))
     def cdf(sp: Array[Double], incl: Boolean): Array[Double] = s.getCDF(sp, criteria(incl))
     def pmf(sp: Array[Double], incl: Boolean): Array[Double] = s.getPMF(sp, criteria(incl))
-    def k: Int = s.getK; def isEmpty: Boolean = s.isEmpty; def n: Long = s.getN
-    def isEstimationMode: Boolean = s.isEstimationMode; def numRetained: Long = s.getNumRetained
-    def minItem: Any = s.getMinItem; def maxItem: Any = s.getMaxItem
-    def nre(isPmf: Boolean): Double = s.getNormalizedRankError(isPmf)
-    def describe(a: Boolean, b: Boolean): String = s.toString(a, b)
+    def minItem: Any = s.getMinItem
+    def maxItem: Any = s.getMaxItem
   }
-  final class QLng(s: ClassicItemsSketch[java.lang.Long]) extends QuantWrap {
-    def quantile(r: Double, incl: Boolean): Any = s.getQuantile(r, criteria(incl)).longValue()
-    def rank(item: Double, incl: Boolean): Double = s.getRank(jl(item), criteria(incl))
-    def cdf(sp: Array[Double], incl: Boolean): Array[Double] = s.getCDF(sp.map(jl), criteria(incl))
-    def pmf(sp: Array[Double], incl: Boolean): Array[Double] = s.getPMF(sp.map(jl), criteria(incl))
-    def k: Int = s.getK; def isEmpty: Boolean = s.isEmpty; def n: Long = s.getN
-    def isEstimationMode: Boolean = s.isEstimationMode; def numRetained: Long = s.getNumRetained
-    def minItem: Any = s.getMinItem.longValue(); def maxItem: Any = s.getMaxItem.longValue()
-    def nre(isPmf: Boolean): Double = s.getNormalizedRankError(isPmf)
-    def describe(a: Boolean, b: Boolean): String = s.toString(a, b)
-  }
-  final class QFlt(s: ClassicItemsSketch[java.lang.Float]) extends QuantWrap {
-    private def jf(d: Double): java.lang.Float = java.lang.Float.valueOf(d.toFloat)
-    def quantile(r: Double, incl: Boolean): Any = s.getQuantile(r, criteria(incl)).floatValue()
-    def rank(item: Double, incl: Boolean): Double = s.getRank(jf(item), criteria(incl))
-    def cdf(sp: Array[Double], incl: Boolean): Array[Double] = s.getCDF(sp.map(jf), criteria(incl))
-    def pmf(sp: Array[Double], incl: Boolean): Array[Double] = s.getPMF(sp.map(jf), criteria(incl))
-    def k: Int = s.getK; def isEmpty: Boolean = s.isEmpty; def n: Long = s.getN
-    def isEstimationMode: Boolean = s.isEstimationMode; def numRetained: Long = s.getNumRetained
-    def minItem: Any = s.getMinItem.floatValue(); def maxItem: Any = s.getMaxItem.floatValue()
-    def nre(isPmf: Boolean): Double = s.getNormalizedRankError(isPmf)
-    def describe(a: Boolean, b: Boolean): String = s.toString(a, b)
-  }
-  final class KDbl(s: KllDoublesSketch) extends QuantWrap {
-    def quantile(r: Double, incl: Boolean): Any = s.getQuantile(r, criteria(incl))
-    def rank(item: Double, incl: Boolean): Double = s.getRank(item, criteria(incl))
-    def cdf(sp: Array[Double], incl: Boolean): Array[Double] = s.getCDF(sp, criteria(incl))
-    def pmf(sp: Array[Double], incl: Boolean): Array[Double] = s.getPMF(sp, criteria(incl))
-    def k: Int = s.getK; def isEmpty: Boolean = s.isEmpty; def n: Long = s.getN
-    def isEstimationMode: Boolean = s.isEstimationMode; def numRetained: Long = s.getNumRetained
-    def minItem: Any = s.getMinItem; def maxItem: Any = s.getMaxItem
-    def nre(isPmf: Boolean): Double = s.getNormalizedRankError(isPmf)
-    def describe(a: Boolean, b: Boolean): String = s.toString(a, b)
-  }
-  final class KFlt(s: KllFloatsSketch) extends QuantWrap {
+
+  /** KLL over floats, and REQ. */
+  final class Floats(s: QuantilesFloatsAPI) extends Lib(s) {
     def quantile(r: Double, incl: Boolean): Any = s.getQuantile(r, criteria(incl))
     def rank(item: Double, incl: Boolean): Double = s.getRank(item.toFloat, criteria(incl))
     def cdf(sp: Array[Double], incl: Boolean): Array[Double] = s.getCDF(sp.map(_.toFloat), criteria(incl))
     def pmf(sp: Array[Double], incl: Boolean): Array[Double] = s.getPMF(sp.map(_.toFloat), criteria(incl))
-    def k: Int = s.getK; def isEmpty: Boolean = s.isEmpty; def n: Long = s.getN
-    def isEstimationMode: Boolean = s.isEstimationMode; def numRetained: Long = s.getNumRetained
-    def minItem: Any = s.getMinItem; def maxItem: Any = s.getMaxItem
-    def nre(isPmf: Boolean): Double = s.getNormalizedRankError(isPmf)
-    def describe(a: Boolean, b: Boolean): String = s.toString(a, b)
+    def minItem: Any = s.getMinItem
+    def maxItem: Any = s.getMaxItem
   }
-  final class KLng(s: KllLongsSketch) extends QuantWrap {
+
+  /** KLL over longs. */
+  final class Longs(s: QuantilesLongsAPI) extends Lib(s) {
     def quantile(r: Double, incl: Boolean): Any = s.getQuantile(r, criteria(incl))
     def rank(item: Double, incl: Boolean): Double = s.getRank(item.toLong, criteria(incl))
     def cdf(sp: Array[Double], incl: Boolean): Array[Double] = s.getCDF(sp.map(_.toLong), criteria(incl))
     def pmf(sp: Array[Double], incl: Boolean): Array[Double] = s.getPMF(sp.map(_.toLong), criteria(incl))
-    def k: Int = s.getK; def isEmpty: Boolean = s.isEmpty; def n: Long = s.getN
-    def isEstimationMode: Boolean = s.isEstimationMode; def numRetained: Long = s.getNumRetained
-    def minItem: Any = s.getMinItem; def maxItem: Any = s.getMaxItem
-    def nre(isPmf: Boolean): Double = s.getNormalizedRankError(isPmf)
-    def describe(a: Boolean, b: Boolean): String = s.toString(a, b)
+    def minItem: Any = s.getMinItem
+    def maxItem: Any = s.getMaxItem
   }
-  /** Classic quantiles, UBIGINT lane: items are raw uint64 bit patterns
-    * under the unsigned comparator; element-typed results surface as
-    * Spark Decimal(20,0); double-cast probe args map through
-    * [[Kit.ulongBitsOfDouble]] (precision caveat shared with the signed
-    * long lane's probe pathway). */
-  final class QULng(s: ClassicItemsSketch[java.lang.Long]) extends QuantWrap {
-    private def ju(d: Double): java.lang.Long = java.lang.Long.valueOf(ulongBitsOfDouble(d))
-    def quantile(r: Double, incl: Boolean): Any = ulongDecimal(s.getQuantile(r, criteria(incl)).longValue())
-    def rank(item: Double, incl: Boolean): Double = s.getRank(ju(item), criteria(incl))
-    def cdf(sp: Array[Double], incl: Boolean): Array[Double] = s.getCDF(sp.map(ju), criteria(incl))
-    def pmf(sp: Array[Double], incl: Boolean): Array[Double] = s.getPMF(sp.map(ju), criteria(incl))
-    def k: Int = s.getK; def isEmpty: Boolean = s.isEmpty; def n: Long = s.getN
-    def isEstimationMode: Boolean = s.isEstimationMode; def numRetained: Long = s.getNumRetained
-    def minItem: Any = ulongDecimal(s.getMinItem.longValue())
-    def maxItem: Any = ulongDecimal(s.getMaxItem.longValue())
-    def nre(isPmf: Boolean): Double = s.getNormalizedRankError(isPmf)
-    def describe(a: Boolean, b: Boolean): String = s.toString(a, b)
+
+  /** Items sketches: classic quantiles over longs, floats and ulongs, and
+    * KLL over ulongs. `toItem` maps a double probe to an item, `out` an
+    * item to its Spark value. */
+  final class Items[T <: AnyRef: ClassTag](s: QuantilesGenericAPI[T], toItem: Double => T,
+                                           out: T => Any) extends Lib(s) {
+    def quantile(r: Double, incl: Boolean): Any = out(s.getQuantile(r, criteria(incl)))
+    def rank(item: Double, incl: Boolean): Double = s.getRank(toItem(item), criteria(incl))
+    def cdf(sp: Array[Double], incl: Boolean): Array[Double] = s.getCDF(sp.map(toItem), criteria(incl))
+    def pmf(sp: Array[Double], incl: Boolean): Array[Double] = s.getPMF(sp.map(toItem), criteria(incl))
+    def minItem: Any = out(s.getMinItem)
+    def maxItem: Any = out(s.getMaxItem)
   }
-  /** KLL, UBIGINT lane (same conventions as [[QULng]]). */
-  final class KULng(s: KllItemsSketch[java.lang.Long]) extends QuantWrap {
-    private def ju(d: Double): java.lang.Long = java.lang.Long.valueOf(ulongBitsOfDouble(d))
-    def quantile(r: Double, incl: Boolean): Any = ulongDecimal(s.getQuantile(r, criteria(incl)).longValue())
-    def rank(item: Double, incl: Boolean): Double = s.getRank(ju(item), criteria(incl))
-    def cdf(sp: Array[Double], incl: Boolean): Array[Double] = s.getCDF(sp.map(ju), criteria(incl))
-    def pmf(sp: Array[Double], incl: Boolean): Array[Double] = s.getPMF(sp.map(ju), criteria(incl))
-    def k: Int = s.getK; def isEmpty: Boolean = s.isEmpty; def n: Long = s.getN
-    def isEstimationMode: Boolean = s.isEstimationMode; def numRetained: Long = s.getNumRetained
-    def minItem: Any = ulongDecimal(s.getMinItem.longValue())
-    def maxItem: Any = ulongDecimal(s.getMaxItem.longValue())
-    def nre(isPmf: Boolean): Double = s.getNormalizedRankError(isPmf)
-    def describe(a: Boolean, b: Boolean): String = s.toString(a, b)
-  }
-  final class QReq(s: ReqSketch) extends QuantWrap {
-    def quantile(r: Double, incl: Boolean): Any = s.getQuantile(r, criteria(incl))
-    def rank(item: Double, incl: Boolean): Double = s.getRank(item.toFloat, criteria(incl))
-    def cdf(sp: Array[Double], incl: Boolean): Array[Double] = s.getCDF(sp.map(_.toFloat), criteria(incl))
-    def pmf(sp: Array[Double], incl: Boolean): Array[Double] = s.getPMF(sp.map(_.toFloat), criteria(incl))
-    def k: Int = s.getK; def isEmpty: Boolean = s.isEmpty; def n: Long = s.getN
-    def isEstimationMode: Boolean = s.isEstimationMode; def numRetained: Long = s.getNumRetained
-    def minItem: Any = s.getMinItem; def maxItem: Any = s.getMaxItem
-    def nre(isPmf: Boolean): Double =
-      throw new UnsupportedOperationException("normalized_rank_error is not defined for REQ")
-    def describe(a: Boolean, b: Boolean): String = s.toString
-  }
+
+  private def jl(d: Double): java.lang.Long = java.lang.Long.valueOf(d.toLong)
+  private def jf(d: Double): java.lang.Float = java.lang.Float.valueOf(d.toFloat)
+  /** UBIGINT lane: items are raw uint64 bit patterns under the unsigned
+    * comparator; a double probe maps through [[Kit.ulongBitsOfDouble]]
+    * (precision caveat shared with the signed long lane's probes), and an
+    * item surfaces as Spark Decimal(20,0). */
+  private def ju(d: Double): java.lang.Long = java.lang.Long.valueOf(ulongBitsOfDouble(d))
+  private def ulongOut(l: java.lang.Long): Any = ulongDecimal(l.longValue())
+  private def boxed[T](t: T): Any = t
+
   final class QTd(s: TDigestDouble) extends QuantWrap {
     def quantile(r: Double, incl: Boolean): Any = s.getQuantile(r)
     def rank(item: Double, incl: Boolean): Double = s.getRank(item)
@@ -269,18 +232,18 @@ object QuantWrap {
 
   private def ofUncached(family: String, elem: ElemType, bytes: Array[Byte]): QuantWrap = family match {
     case "quantiles" => deser("Quantiles", bytes)(elem match {
-      case ElemType.Lng  => new QLng(ClassicItemsSketch.getInstance(classOf[java.lang.Long], mem(bytes), longCmp, longsSerDe))
-      case ElemType.ULng => new QULng(ClassicItemsSketch.getInstance(classOf[java.lang.Long], mem(bytes), ulongCmp, longsSerDe))
-      case ElemType.Flt  => new QFlt(ClassicItemsSketch.getInstance(classOf[java.lang.Float], mem(bytes), floatCmp, floatsSerDe))
-      case _             => new QDbl(DoublesSketch.heapify(mem(bytes)))
+      case ElemType.Lng  => new Items(ClassicItemsSketch.getInstance(classOf[java.lang.Long], mem(bytes), longCmp, longsSerDe), jl, boxed)
+      case ElemType.ULng => new Items(ClassicItemsSketch.getInstance(classOf[java.lang.Long], mem(bytes), ulongCmp, longsSerDe), ju, ulongOut)
+      case ElemType.Flt  => new Items(ClassicItemsSketch.getInstance(classOf[java.lang.Float], mem(bytes), floatCmp, floatsSerDe), jf, boxed)
+      case _             => new Doubles(DoublesSketch.heapify(mem(bytes)))
     })
     case "kll" => deser("KLL", bytes)(elem match {
-      case ElemType.Dbl  => new KDbl(KllDoublesSketch.heapify(mem(bytes)))
-      case ElemType.Flt  => new KFlt(KllFloatsSketch.heapify(mem(bytes)))
-      case ElemType.Lng  => new KLng(KllLongsSketch.heapify(mem(bytes)))
-      case ElemType.ULng => new KULng(KllItemsSketch.heapify(mem(bytes), ulongCmp, longsSerDe))
+      case ElemType.Dbl  => new Doubles(KllDoublesSketch.heapify(mem(bytes)))
+      case ElemType.Flt  => new Floats(KllFloatsSketch.heapify(mem(bytes)))
+      case ElemType.Lng  => new Longs(KllLongsSketch.heapify(mem(bytes)))
+      case ElemType.ULng => new Items(KllItemsSketch.heapify(mem(bytes), ulongCmp, longsSerDe), ju, ulongOut)
     })
-    case "req"     => deser("REQ", bytes)(new QReq(ReqSketch.heapify(mem(bytes))))
+    case "req"     => deser("REQ", bytes)(new Floats(ReqSketch.heapify(mem(bytes))))
     case "tdigest" =>
       // reference float-lane blobs widen to the double wire format first
       val wb = Kit.tdigestWiden(bytes)

@@ -1,5 +1,7 @@
 package graft.sketch
 
+import scala.annotation.switch
+
 import org.apache.datasketches.tuple.arrayofdoubles._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -64,6 +66,14 @@ case class AodBuildAgg(
   override def prettyName: String = "datasketch_aod"
   override def createAggregationBuffer(): Buf = new Buf(null, null)
 
+  /** The key's lane, chosen once from its type. A string key goes to the
+    * library's String overload, which hashes the UTF-8 of the decoded
+    * string (an invalid byte sequence decodes to U+FFFD first). */
+  @transient private lazy val lane: Int = Partial.laneOf(child.dataType) match {
+    case Partial.BytesLane if child.dataType.isInstanceOf[StringType] => AodBuildAgg.StringLane
+    case l => l
+  }
+
   /** Collapse the two buffer halves into one sketch (null = no input). */
   private def result(buf: Buf): ArrayOfDoublesSketch =
     if (buf.merged == null) buf.upd
@@ -90,9 +100,13 @@ case class AodBuildAgg(
       buf.upd = new ArrayOfDoublesUpdatableSketchBuilder()
         .setNominalEntries(1 << lgK).setNumberOfValues(numValues).build()
     val sk = buf.upd
-    dispatch(key)(
-      l => sk.update(l, vals), d => sk.update(d, vals),
-      s => sk.update(s, vals), b => sk.update(b, vals))
+    (lane: @switch) match {
+      case Partial.LongLane   => sk.update(Partial.longOf(key), vals)
+      case Partial.DoubleLane => sk.update(Partial.doubleOf(key), vals)
+      case AodBuildAgg.StringLane => sk.update(key.toString, vals)
+      case Partial.BytesLane  => sk.update(key.asInstanceOf[Array[Byte]], vals)
+      case _                  => unsupported(key)
+    }
     buf
   }
 
@@ -130,6 +144,9 @@ case class AodBuildAgg(
 
 object AodBuildAgg {
   final class Buf(var upd: ArrayOfDoublesUpdatableSketch, var merged: ArrayOfDoublesSketch)
+
+  /** The string keys' lane, next to [[Partial]]'s long, double and bytes lanes. */
+  final val StringLane = 4
 }
 
 /** `datasketch_aod_union(lg_k, sk)` — merge tuple sketch BLOBs (two-level

@@ -253,10 +253,16 @@ object StreamingDedup {
     * batch N+1's exact/span/near/semantic stages see batch N's
     * admissions as history with no separate store write (r15 verdict #4:
     * the earlier two-artifact layout paid a second parquet write plus a
-    * re-read every trigger for the same information). Safe by
-    * construction: every stage of `curateIncremental` is eagerly
-    * checkpointed, so the append job's plan reads only checkpoint
-    * leaves — never `path` itself.
+    * re-read every trigger for the same information). Every stage of
+    * `curateIncremental` is eagerly checkpointed, so the stages' history
+    * reads of `path` finish before the append job starts. The append job
+    * itself reads `path` only when [[replaySuspected]] fires: the batch is
+    * then anti-joined against the store's ids, and that batch is the
+    * assembly's base relation, so the append scans `path` while writing
+    * to it. The append is still correct: the scan lists the store's files
+    * when the batch relation is built, before the job writes its new part
+    * files, and the anti-join only drops ids that are already stored, so
+    * no appended row depends on a row the same job writes.
     *
     * Centroids — and the optional NB quality model (`nbModel`, the
     * [[graft.operators.TextOps.seedCrawlNbFit]] artifact) — are FIXED

@@ -27,8 +27,8 @@ import graft.sketch.Kit.{ElemType, mem, stringsSerDe}
   * stays the library's own format. Pins merge-order invariance around the
   * capacity, byte parity with a direct library build, the library-format
   * partials of earlier state, copying of reused input values, the
-  * NULL-versus-empty-blob results, the window path, and CPC's one-union
-  * merge. */
+  * NULL-versus-empty-blob results, the window path, CPC's one-union
+  * merge, and the HLL and CPC union aggregates over stored blobs. */
 class PartialBufferSpec extends SparkTestBase {
 
   private val Cap = Partial.Capacity
@@ -369,5 +369,52 @@ class PartialBufferSpec extends SparkTestBase {
         assert(merged.getUpperBound(kappa) == acc.getUpperBound(kappa), s"$parts partials, ub $kappa")
       }
     }
+  }
+
+  test("hll and cpc union aggregates over stored blobs from 1, 2 and 8 partitions match a library union") {
+    val root = java.nio.file.Files.createTempDirectory("pb_union")
+    try {
+      val dir = root.resolve("blobs").toString
+      // 20 blobs; neighbours share values, 10,000 distinct in all (estimation mode)
+      sql("SELECT datasketch_hll(12, id DIV 2) AS h, datasketch_cpc(11, id DIV 2) AS c " +
+        "FROM range(0, 20000) GROUP BY id % 20").write.parquet(dir)
+      spark.read.parquet(dir).createOrReplaceTempView("pb_union_blobs")
+      sql("SELECT 1 AS g, h, c FROM pb_union_blobs " +
+        "UNION ALL SELECT 1, CAST(NULL AS BINARY), CAST(NULL AS BINARY) FROM range(7) " +
+        "UNION ALL SELECT 2, CAST(NULL AS BINARY), CAST(NULL AS BINARY) FROM range(3)")
+        .createOrReplaceTempView("pb_union_in")
+      val stored = sql("SELECT h, c FROM pb_union_blobs").collect()
+      val hu = new hll.Union(12)
+      val cu = new CpcUnion(11)
+      stored.foreach { r =>
+        hu.update(hll.HllSketch.heapify(mem(r.getAs[Array[Byte]](0))))
+        cu.update(CpcSketch.heapify(mem(r.getAs[Array[Byte]](1))))
+      }
+      val hWant = hu.getResult(hll.TgtHllType.HLL_4)
+      val cWant = cu.getResult
+      Seq(1, 2, 8).foreach { parts =>
+        val input = sql(s"SELECT /*+ REPARTITION($parts) */ * FROM pb_union_in")
+        assert(input.rdd.getNumPartitions == parts)
+        input.createOrReplaceTempView("pb_union_parts")
+        val rows = sql("SELECT g, datasketch_hll_union(12, h), datasketch_cpc_union(11, c) " +
+          "FROM pb_union_parts GROUP BY g ORDER BY g").collect()
+        assert(rows.map(_.getInt(0)).toSeq == Seq(1, 2))
+        val h = hll.HllSketch.heapify(mem(rows(0).getAs[Array[Byte]](1)))
+        val c = CpcSketch.heapify(mem(rows(0).getAs[Array[Byte]](2)))
+        assert(h.getEstimate == hWant.getEstimate, s"hll, $parts partitions")
+        assert(c.getEstimate == cWant.getEstimate, s"cpc, $parts partitions")
+        (1 to 3).foreach { kappa =>
+          assert(h.getLowerBound(kappa) == hWant.getLowerBound(kappa), s"hll lb $kappa, $parts partitions")
+          assert(h.getUpperBound(kappa) == hWant.getUpperBound(kappa), s"hll ub $kappa, $parts partitions")
+          assert(c.getLowerBound(kappa) == cWant.getLowerBound(kappa), s"cpc lb $kappa, $parts partitions")
+          assert(c.getUpperBound(kappa) == cWant.getUpperBound(kappa), s"cpc ub $kappa, $parts partitions")
+        }
+        // the all-NULL group, and a global aggregate over no rows
+        assert(rows(1).isNullAt(1) && rows(1).isNullAt(2), s"all-NULL group, $parts partitions")
+        val empty = sql("SELECT datasketch_hll_union(12, h), datasketch_cpc_union(11, c) " +
+          "FROM pb_union_parts WHERE g > 2").collect()
+        assert(empty.length == 1 && empty(0).isNullAt(0) && empty(0).isNullAt(1), s"empty, $parts partitions")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 }
