@@ -41,14 +41,20 @@ object IncrementalDedup {
     * persisted in the metadata store, `datasketch_bloom_union`-merged as
     * batches are admitted, and READ BACK per batch — not recomputed.
     * Callers with that lifecycle pass it to [[dedupAgainstHistory]] via
-    * `historyBlob`. The empty filter when history is empty. */
+    * `historyBlob`. `maxDistinct` left at -1 sizes the filter from
+    * history's row count ([[callCapacity]], one count job, 1024 keys at
+    * least). The empty filter when history is empty. */
   def buildHistoryFilter(history: DataFrame, textCol: String,
-                         maxDistinct: Long = 1 << 20,
-                         fpp: Double = 0.01): Array[Byte] =
+                         maxDistinct: Long = -1L,
+                         fpp: Double = 0.01): Array[Byte] = {
+    val cap =
+      if (maxDistinct > 0) maxDistinct
+      else callCapacity(math.max(1L, history.count()))
     history.agg(
-        call_function("datasketch_bloom", lit(maxDistinct), lit(fpp),
+        call_function("datasketch_bloom", lit(cap), lit(fpp),
           TextOps.fingerprint(col(textCol))).as("f"))
       .head().getAs[Array[Byte]](0)
+  }
 
   /** Filter capacity for an expected key count, with the shared
     * [[graft.streaming.StreamingDedup.CapacityHeadroom]] policy (the

@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   * touches them), metadata is queryable without decoding.
   *
   * Image decode is REAL: [[ImageIoCodec]] decodes PNG/JPEG/GIF/BMP with
-  * the JDK's `javax.imageio` (no external codecs needed), behind the
-  * [[ImageCodec]] interface so a deployment can swap in a JNI/TurboJPEG
-  * or video codec without touching the Spark plumbing. The decode runs
+  * the JDK's `javax.imageio` (no external codecs needed). The decode runs
   * partition-parallel inside `mapPartitions` — the legitimate use: an
   * external-library call per binary value, no shuffle, content column
   * pruned away unless the query actually decodes.
@@ -26,20 +24,14 @@ object MediaOps {
     * denominator every downstream feature step here consumes. */
   final case class DecodedImage(width: Int, height: Int, gray: Array[Int])
 
-  /** Pluggable image decoder. Implementations must be Serializable (the
-    * codec ships to executors inside the decode closure) and return None
-    * on undecodable bytes — corrupt assets are dropped, not fatal. */
-  trait ImageCodec extends Serializable {
-    def decode(content: Array[Byte]): Option[DecodedImage]
-  }
-
   /** JDK `javax.imageio` codec: PNG/JPEG/GIF/BMP without any external
     * native library. Multi-band images collapse to integer ITU-R 601
     * luminance; single-band (grayscale) rasters pass through exactly, so
     * decoded pixels of a lossless grayscale PNG are bit-exact — which is
-    * what lets q42's oracle predict the pixel checksum in closed form. */
-  object ImageIoCodec extends ImageCodec {
-    override def decode(content: Array[Byte]): Option[DecodedImage] = {
+    * what lets q42's oracle predict the pixel checksum in closed form.
+    * None on undecodable bytes — corrupt assets are dropped, not fatal. */
+  object ImageIoCodec {
+    def decode(content: Array[Byte]): Option[DecodedImage] = {
       // Lock-free fast path for fully-standard 8-bit PNGs ([[PngCodec]]):
       // ImageIO.read synchronizes on the global IIORegistry per call, so
       // a 32-task decode stage is serialized onto ~1.5 cores (measured).
@@ -142,22 +134,19 @@ object MediaOps {
                           checksum: Long, features: Array[Float])
 
   /** REAL decode: binary content in, decoded dimensions + pixel checksum +
-    * a grid×grid mean-luminance feature vector out. Partition-parallel, no
-    * shuffle, undecodable rows dropped (`flatMap` over the codec's Option).
-    * The codec is a parameter: swap [[ImageIoCodec]] for a JNI decoder and
-    * the plan shape — and this method — stay identical. */
-  def decodeImages(media: DataFrame, codec: ImageCodec = ImageIoCodec,
-                   grid: Int = 2): Dataset[MediaDecoded] = {
+    * a 2×2 mean-luminance feature vector out. Partition-parallel, no
+    * shuffle, undecodable rows dropped (`flatMap` over the decode Option). */
+  def decodeImages(media: DataFrame): Dataset[MediaDecoded] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("doc_id"), col("content")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.flatMap { case (id, bytes) =>
-          codec.decode(bytes).map { d =>
+          ImageIoCodec.decode(bytes).map { d =>
             var sum = 0L
             var i = 0
             while (i < d.gray.length) { sum += d.gray(i); i += 1 }
-            MediaDecoded(id, d.width, d.height, sum, gridFeatures(d, grid))
+            MediaDecoded(id, d.width, d.height, sum, gridFeatures(d))
           }
         }
       }
@@ -179,14 +168,13 @@ object MediaOps {
     * definition as `VideoOps.decodeStatus`. (The former grid-mean
     * equality proxy silently flagged any balanced raster — e.g. a
     * checkerboard — whose cell means happen to coincide.) */
-  def decodeStatus(media: DataFrame, codec: ImageCodec = ImageIoCodec,
-                   grid: Int = 2): Dataset[MediaStatus] = {
+  def decodeStatus(media: DataFrame): Dataset[MediaStatus] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("doc_id"), col("content")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (id, bytes) =>
-          codec.decode(bytes) match {
+          ImageIoCodec.decode(bytes) match {
             case Some(d) =>
               var sum = 0L
               var mn = 255
@@ -200,7 +188,7 @@ object MediaOps {
                 i += 1
               }
               MediaStatus(id, ok = true, d.width, d.height, sum,
-                gridFeatures(d, grid), uniform = d.gray.nonEmpty && mn == mx)
+                gridFeatures(d), uniform = d.gray.nonEmpty && mn == mx)
             case None =>
               MediaStatus(id, ok = false, 0, 0, 0L, Array.empty[Float],
                 uniform = false)
@@ -297,14 +285,13 @@ object MediaOps {
   /** One decode pass → 64-bit perceptual signatures per image (decode
     * failures kept as ok = false, the gate convention). Partition-
     * parallel, no shuffle. */
-  def perceptualHashes(media: DataFrame,
-                       codec: ImageCodec = ImageIoCodec): Dataset[PerceptualHashes] = {
+  def perceptualHashes(media: DataFrame): Dataset[PerceptualHashes] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("doc_id"), col("content")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (id, bytes) =>
-          codec.decode(bytes) match {
+          ImageIoCodec.decode(bytes) match {
             case Some(d) => PerceptualHashes(id, ok = true, aHash64(d), dHash64(d))
             case None => PerceptualHashes(id, ok = false, 0L, 0L)
           }
@@ -323,14 +310,13 @@ object MediaOps {
     * passes were the stage). The checksum here is bit-identical to
     * [[decodeImages]]' (same gray-sum loop); ok = false rows mirror the
     * decode failures [[decodeImages]] drops. */
-  def perceptualChecksums(media: DataFrame,
-                          codec: ImageCodec = ImageIoCodec): Dataset[PerceptualWithChecksum] = {
+  def perceptualChecksums(media: DataFrame): Dataset[PerceptualWithChecksum] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("doc_id"), col("content")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (id, bytes) =>
-          codec.decode(bytes) match {
+          ImageIoCodec.decode(bytes) match {
             case Some(d) =>
               var sum = 0L
               var i = 0
@@ -348,10 +334,9 @@ object MediaOps {
     * never all-pairs). The text near-dup machinery applied to the
     * modality the media gates only integrity-check: a multimodal
     * corpus dedups images too. Returns (doc_a, doc_b, dist). */
-  def perceptualDupPairs(media: DataFrame, codec: ImageCodec = ImageIoCodec,
-                         maxDist: Int = 2): DataFrame =
+  def perceptualDupPairs(media: DataFrame, maxDist: Int = 2): DataFrame =
     DedupOps.simhashPairsFromSigs(
-      perceptualHashes(media, codec).toDF()
+      perceptualHashes(media).toDF()
         .filter(col("ok"))
         .select(col("doc_id").as("doc"), col("ahash").as("sig")),
       maxDist)
@@ -391,14 +376,13 @@ object MediaOps {
   final case class AudioHash(doc_id: Long, ok: Boolean, ahash: Long)
 
   /** One decode pass → envelope signatures (failures kept ok=false). */
-  def audioHashes(clips: DataFrame,
-                  codec: AudioCodec = JavaSoundCodec): Dataset[AudioHash] = {
+  def audioHashes(clips: DataFrame): Dataset[AudioHash] = {
     val spark = clips.sparkSession
     import spark.implicits._
     clips.select(col("doc_id"), col("content")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (id, bytes) =>
-          codec.decode(bytes) match {
+          JavaSoundCodec.decode(bytes) match {
             case Some(d) => AudioHash(id, ok = true, audioHash64(d))
             case None => AudioHash(id, ok = false, 0L)
           }
@@ -409,10 +393,9 @@ object MediaOps {
   /** Perceptual AUDIO near-dup pairs via the simhash band core — same
     * contract as [[perceptualDupPairs]]: exact recall at `maxDist` by
     * pigeonhole, never all-pairs. */
-  def audioDupPairs(clips: DataFrame, codec: AudioCodec = JavaSoundCodec,
-                    maxDist: Int = 2): DataFrame =
+  def audioDupPairs(clips: DataFrame, maxDist: Int = 2): DataFrame =
     DedupOps.simhashPairsFromSigs(
-      audioHashes(clips, codec).toDF()
+      audioHashes(clips).toDF()
         .filter(col("ok"))
         .select(col("doc_id").as("doc"), col("ahash").as("sig")),
       maxDist)
@@ -565,17 +548,12 @@ object MediaOps {
   final case class DecodedAudio(sample_rate: Int, channels: Int,
                                 samples: Array[Int])
 
-  /** Pluggable audio decoder — same contract as [[ImageCodec]]:
-    * Serializable, None on undecodable bytes. */
-  trait AudioCodec extends Serializable {
-    def decode(content: Array[Byte]): Option[DecodedAudio]
-  }
-
   /** JDK `javax.sound.sampled` codec: WAV/AIFF/AU without any external
     * native library. 8-bit PCM passes through exactly (what lets q73's
     * oracle predict the sample checksum in closed form); 16-bit PCM
-    * collapses to unsigned 8-bit by taking the high byte. */
-  object JavaSoundCodec extends AudioCodec {
+    * collapses to unsigned 8-bit by taking the high byte. None on
+    * undecodable bytes. */
+  object JavaSoundCodec {
 
     /** Raw PCM frames → unsigned 8-bit samples, or None for unsupported
       * depths. Package-visible because JavaSound's WAV reader can never
@@ -607,7 +585,7 @@ object MediaOps {
       }
     }
 
-    override def decode(content: Array[Byte]): Option[DecodedAudio] = {
+    def decode(content: Array[Byte]): Option[DecodedAudio] = {
       try {
         val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
           new java.io.ByteArrayInputStream(content))
@@ -686,14 +664,13 @@ object MediaOps {
     * rows — the audio analog of [[decodeStatus]]/`VideoOps.decodeStatus`:
     * partition-parallel mapPartitions, no shuffle, no second scan of the
     * binary column. */
-  def audioStatus(media: DataFrame,
-                  codec: AudioCodec = JavaSoundCodec): Dataset[AudioStatus] = {
+  def audioStatus(media: DataFrame): Dataset[AudioStatus] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("doc_id"), col("content")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (id, bytes) =>
-          codec.decode(bytes) match {
+          JavaSoundCodec.decode(bytes) match {
             case None => AudioStatus(id, ok = false, 0, 0L, silent = false)
             case Some(a) =>
               var sum = 0L
@@ -746,14 +723,13 @@ object MediaOps {
   /** REAL audio decode, partition-parallel — the audio face of
     * [[decodeImages]]: binary in, decoded format facts + sample checksum
     * out, undecodable rows dropped. */
-  def decodeAudio(media: DataFrame,
-                  codec: AudioCodec = JavaSoundCodec): Dataset[AudioDecoded] = {
+  def decodeAudio(media: DataFrame): Dataset[AudioDecoded] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("doc_id"), col("content")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.flatMap { case (id, bytes) =>
-          codec.decode(bytes).map { a =>
+          JavaSoundCodec.decode(bytes).map { a =>
             var sum = 0L
             var i = 0
             while (i < a.samples.length) { sum += a.samples(i); i += 1 }
@@ -799,29 +775,28 @@ object MediaOps {
   /** Decode → area-average downscale, partition-parallel: the resize
     * stage of the media pipeline (the other stages being [[decodeImages]]
     * and [[frameSample]]). Emits the RESIZED raster's dimensions,
-    * checksum, and grid features. */
-  def resizeImages(media: DataFrame, factor: Int,
-                   codec: ImageCodec = ImageIoCodec,
-                   grid: Int = 2): Dataset[MediaDecoded] = {
+    * checksum, and 2×2 grid features. */
+  def resizeImages(media: DataFrame, factor: Int): Dataset[MediaDecoded] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("doc_id"), col("content")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.flatMap { case (id, bytes) =>
-          codec.decode(bytes).map { d =>
+          ImageIoCodec.decode(bytes).map { d =>
             val r = downscale(d, factor)
             var sum = 0L
             var i = 0
             while (i < r.gray.length) { sum += r.gray(i); i += 1 }
-            MediaDecoded(id, r.width, r.height, sum, gridFeatures(r, grid))
+            MediaDecoded(id, r.width, r.height, sum, gridFeatures(r))
           }
         }
       }
   }
 
-  /** grid×grid cell mean luminance — ceil-divided spans, every pixel in
+  /** 2×2 cell mean luminance — ceil-divided spans, every pixel in
     * exactly one cell whatever the dimensions. */
-  private def gridFeatures(d: DecodedImage, grid: Int): Array[Float] = {
+  private def gridFeatures(d: DecodedImage): Array[Float] = {
+    val grid = 2
     val feats = new Array[Float](grid * grid)
     val counts = new Array[Int](grid * grid)
     var y = 0

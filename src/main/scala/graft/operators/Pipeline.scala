@@ -20,6 +20,24 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
+  /** Fixed curation parameters, one value each, shared by [[curate]],
+    * [[curateFull]] and [[curateIncremental]]: near dedup's shingle width
+    * and hot-shingle document-frequency cap; span removal's gram width,
+    * minimum span and hot-gram occurrence cap; the media gate's
+    * mean-luminance band; the perceptual-hash Hamming radius of the image
+    * and audio dup arms; the aligned-frame run that pairs two videos; and
+    * the k-means iterations of `sem_dup`. */
+  private val ShingleK = 3
+  private val MaxShingleDF = 1000
+  private val SpanK = 8
+  private val MinSpan = 20
+  private val MaxGramOccurrences = 1000
+  private val MinMeanLum = 5.0
+  private val MaxMeanLum = 250.0
+  private val MediaDupMaxDist = 2
+  private val VideoDupMinFrames = 6
+  private val SemIters = 2
+
   /** Evaluate independent stage computations CONCURRENTLY (guide §2.6:
     * Spark's scheduler runs several jobs at once inside one application;
     * actions are only sequential because driver code calls them
@@ -204,27 +222,24 @@ object Pipeline {
     * asset row pass untouched. Shared by [[curateFull]] and
     * [[curateIncremental]] (which judges batch docs only; history was
     * gated at its own admission). */
-  private def mediaGate(idCol: String,
-      media: Option[DataFrame], mediaCodec: MediaOps.ImageCodec,
-      mediaGrid: Int, minMeanLum: Double, maxMeanLum: Double,
+  private def mediaGate(idCol: String, media: Option[DataFrame],
       video: Option[DataFrame], videoContainer: VideoOps.VideoContainer,
-      videoEvery: Int, audio: Option[DataFrame],
-      audioCodec: MediaOps.AudioCodec): Option[Stage] = armStage("bad_media", Seq(
+      audio: Option[DataFrame]): Option[Stage] = armStage("bad_media", Seq(
     media.map { m => (in: DataFrame) =>
       val mean = col("checksum").cast("double") / (col("width") * col("height"))
-      MediaOps.decodeStatus(inPlay(m, in, idCol), mediaCodec, mediaGrid).toDF()
-        .filter(!col("ok") || mean < minMeanLum || mean > maxMeanLum || col("uniform"))
+      MediaOps.decodeStatus(inPlay(m, in, idCol)).toDF()
+        .filter(!col("ok") || mean < MinMeanLum || mean > MaxMeanLum || col("uniform"))
         .select(col("doc_id"))
     },
     video.map { v => (in: DataFrame) =>
       val vMean = col("pix_sum").cast("double") / col("pix_cnt")
-      VideoOps.decodeStatus(inPlay(v, in, idCol), videoContainer, mediaCodec, videoEvery).toDF()
+      VideoOps.decodeStatus(inPlay(v, in, idCol), videoContainer).toDF()
         .filter(!col("ok") || col("n_decoded") === 0 ||
-          vMean < minMeanLum || vMean > maxMeanLum || col("uniform"))
+          vMean < MinMeanLum || vMean > MaxMeanLum || col("uniform"))
         .select(col("doc_id"))
     },
     audio.map { a => (in: DataFrame) =>
-      MediaOps.audioStatus(inPlay(a, in, idCol), audioCodec).toDF()
+      MediaOps.audioStatus(inPlay(a, in, idCol)).toDF()
         .filter(!col("ok") || col("n_samples") === 0 || col("silent"))
         .select(col("doc_id"))
     }))
@@ -272,7 +287,7 @@ object Pipeline {
 
   /** `contaminated` — eval-suite decontamination: survivors sharing a
     * k-gram shingle with `benchmark` ([[Decontaminate.contaminatedIds]] —
-    * membership implies every span hit too, a ≥ minSpan verbatim run
+    * membership implies every span hit too, a ≥ 20-token verbatim run
     * shares its k-grams) OR whose embedding reaches `cosTau` cosine
     * against any `benchmarkEmb` vector (the paraphrase grain) drop BEFORE
     * span removal — eval-suite text must not feed gram statistics or
@@ -349,11 +364,10 @@ object Pipeline {
     *        the pair set when a snapshot is admitted, and every consumer
     *        (clustering, removal, curation) reads the persisted evidence
     *        instead of re-mining the corpus. Must come from the same
-    *        (corpus, shingleK, nearDupThreshold) parameters; when None,
+    *        corpus and `nearDupThreshold`, at shingle k 3; when None,
     *        the pairs are mined inline. */
   def curate(docs: DataFrame, idCol: String, textCol: String,
              nearDupThreshold: Double = 0.9, minQuality: Double = 0.2,
-             shingleK: Int = 3, maxShingleDF: Int = 1000,
              knownHot: Option[Array[Long]] = None,
              knownNearDupPairs: Option[DataFrame] = None): DataFrame = {
     val id = col(idCol)
@@ -367,8 +381,8 @@ object Pipeline {
     // 2. near-dup drop set: higher id of every verified pair (hot-shingle
     //    cap threaded through — boilerplate must not go quadratic here)
     val dropNear = knownNearDupPairs
-      .getOrElse(DedupOps.minhashLshPairs(docs, idCol, textCol, shingleK, nearDupThreshold,
-        maxShingleDF = maxShingleDF, knownHot = knownHot))
+      .getOrElse(DedupOps.minhashLshPairs(docs, idCol, textCol, ShingleK, nearDupThreshold,
+        maxShingleDF = MaxShingleDF, knownHot = knownHot))
       .select(col("doc_b").as("__near_drop")).distinct()
 
     // NO forced broadcast on the drop sets: their size is O(duplicates),
@@ -404,9 +418,11 @@ object Pipeline {
     * extraction, so an unmaterialized chain re-parses every page per
     * stage (measured 2× on the q149 floor). A page whose markup yields no
     * content text flows through as an empty doc (its fingerprint groups
-    * with other empties — the exact stage's documented behavior).
-    * Passthrough knobs stay at [[curateFull]] defaults; deployments
-    * needing the full surface call `extract` + `curateFull` directly.
+    * with other empties — the exact stage's documented behavior). The
+    * extraction runs at [[HtmlExtract]]'s default thresholds into a
+    * `text` column. Passthrough knobs stay at [[curateFull]] defaults;
+    * deployments needing the full surface call `extract` + `curateFull`
+    * directly.
     *
     * Per-DOMAIN curation (optional, r19) — when `urlCol` names the pages'
     * raw-URL column, each page's canonical domain ([[UrlOps.canonicalize]]
@@ -424,9 +440,6 @@ object Pipeline {
     * curateFull's output over the extraction. */
   def curateFromHtml(pages: DataFrame, embeddings: DataFrame,
                      idCol: String, htmlCol: String, sourceCol: String,
-                     minWords: Int = HtmlExtract.DefaultMinWords,
-                     maxLinkDensity: Double = HtmlExtract.DefaultMaxLinkDensity,
-                     textCol: String = "text",
                      urlCol: Option[String] = None,
                      domainBlocklist: Option[DataFrame] = None,
                      domainTokenBudget: Long = 0L,
@@ -435,8 +448,8 @@ object Pipeline {
                      ruleParams: Option[QualityFilters.RuleParams] = None,
                      piiRedactOutput: Boolean = false): DataFrame = {
     val id = col(idCol)
-    val extracted = HtmlExtract.extract(pages, idCol, htmlCol,
-        minWords, maxLinkDensity)
+    val textCol = "text"
+    val extracted = HtmlExtract.extract(pages, idCol, htmlCol)
       .select(col(idCol), col("extracted_text").as(textCol))
       .join(pages.select(col(idCol), col(sourceCol)), Seq(idCol))
       .localCheckpoint(eager = true)
@@ -485,8 +498,7 @@ object Pipeline {
     *         ([[MediaOps.audioDupPairs]]); the higher id of a pair drops,
     *       - video: per-frame perceptual hashes through the
     *         exact-substring core ([[VideoOps.videoDupSegments]]); clips
-    *         sharing ≥ `videoDupMinFrames` aligned frames pair, higher id
-    *         drops;
+    *         sharing ≥ 6 aligned frames pair, higher id drops;
     *   4. `wrong_lang` (optional, `langModel`) — [[langGate]];
     *   5. `rule_filtered` (optional, `ruleParams`) — [[ruleGate]];
     *   6. `contaminated` (optional, `benchmark`) — [[decontaminate]];
@@ -498,7 +510,7 @@ object Pipeline {
     *   9. `near_dup` — near dedup (exact n-gram Jaccard ≥
     *      `nearDupThreshold`; higher id of each pair drops);
     *  10. `sem_dup` — semantic dedup over the survivors' embeddings
-    *      (k-means bucketed, SemDeDup keep rule at cosine `semTau`);
+    *      (k-means bucketed, SemDeDup keep rule at cosine 0.35);
     *  11. `over_quota` — per-source token quota over cleaned token counts;
     *
     * and `kept` for the survivors. One row out per input document: (id,
@@ -517,30 +529,19 @@ object Pipeline {
   def curateFull(docs: DataFrame, embeddings: DataFrame,
                  idCol: String, textCol: String, sourceCol: String,
                  vecIdCol: String = "vec_id", vecCol: String = "embedding",
-                 nearDupThreshold: Double = 0.9, shingleK: Int = 3,
-                 maxShingleDF: Int = 1000,
-                 spanK: Int = 8, minSpan: Int = 20, maxGramOccurrences: Int = 1000,
-                 semK: Int = 8, semIters: Int = 2, semTau: Double = 0.35,
+                 nearDupThreshold: Double = 0.9, semK: Int = 8,
                  tokenBudget: Long = 700L,
                  seedFilter: Option[Column] = None,
                  crawlFilter: Option[Column] = None,
-                 nbBuckets: Int = 4096, minNbScoreU: Long = 0L,
+                 minNbScoreU: Long = 0L,
                  lowQualityFraction: Double = 0.0,
                  media: Option[DataFrame] = None,
-                 mediaCodec: MediaOps.ImageCodec = MediaOps.ImageIoCodec,
-                 mediaGrid: Int = 2,
-                 minMeanLum: Double = 5.0, maxMeanLum: Double = 250.0,
                  mediaDup: Option[DataFrame] = None,
-                 mediaDupMaxDist: Int = 2,
                  audioDup: Option[DataFrame] = None,
-                 audioDupMaxDist: Int = 2,
                  videoDup: Option[DataFrame] = None,
-                 videoDupMinFrames: Int = 6,
                  video: Option[DataFrame] = None,
                  videoContainer: VideoOps.VideoContainer = VideoOps.GvidContainer,
-                 videoEvery: Int = 1,
                  audio: Option[DataFrame] = None,
-                 audioCodec: MediaOps.AudioCodec = MediaOps.JavaSoundCodec,
                  benchmark: Option[DataFrame] = None,
                  benchmarkEmb: Option[DataFrame] = None,
                  contamNgramK: Int = 3, contamCosTau: Double = 0.3,
@@ -552,16 +553,15 @@ object Pipeline {
     val gates = leadingStages.get ++ Seq(
       Some(Stage("exact_dup", in => DedupOps.dupIds(in, idCol, textCol)
         .select(col("__dup_id")))),
-      mediaGate(idCol, media, mediaCodec, mediaGrid, minMeanLum, maxMeanLum,
-        video, videoContainer, videoEvery, audio, audioCodec),
+      mediaGate(idCol, media, video, videoContainer, audio),
       armStage("media_dup", Seq(
         mediaDup.map { md => (in: DataFrame) =>
           val assets = inPlay(md, in, idCol)
-          val hx = MediaOps.perceptualChecksums(assets, mediaCodec).toDF()
+          val hx = MediaOps.perceptualChecksums(assets).toDF()
             .filter(col("ok")).localCheckpoint(eager = true)
           val pairs = DedupOps.simhashPairsFromSigs(
               hx.select(col("doc_id").as("doc"), col("ahash").as("sig")),
-              mediaDupMaxDist)
+              MediaDupMaxDist)
             .localCheckpoint(eager = true)
           DedupOps.qualityKeepClusters(assets.select(col("doc_id")), pairs,
               hx.select(col("doc_id"), col("checksum")), "doc_id", scoreCol = "checksum")
@@ -569,12 +569,12 @@ object Pipeline {
             .select(col("doc_id"))
         },
         audioDup.map { ad => (in: DataFrame) =>
-          MediaOps.audioDupPairs(inPlay(ad, in, idCol), audioCodec, audioDupMaxDist)
+          MediaOps.audioDupPairs(inPlay(ad, in, idCol), MediaDupMaxDist)
             .select(col("doc_b")).distinct()
         },
         videoDup.map { vd => (in: DataFrame) =>
-          VideoOps.videoDupSegments(inPlay(vd, in, idCol), videoContainer, mediaCodec,
-              videoDupMinFrames)
+          VideoOps.videoDupSegments(inPlay(vd, in, idCol), videoContainer,
+              minFrames = VideoDupMinFrames)
             .select(col("doc_b")).distinct()
         })),
       langGate(langModel, langAllow, idCol, textCol),
@@ -601,7 +601,7 @@ object Pipeline {
         val scored = TextOps.seedCrawlNbScores(docs.filter(sf),
             docs.filter(crawlFilter.getOrElse(!sf)),
             widenIfNarrow(in.select(id, col("cleaned_text").as(textCol))),
-            idCol, textCol, nbBuckets)
+            idCol, textCol, buckets = 4096)
           .select(id, col("nb_score_u")).localCheckpoint(eager = true)
         if (lowQualityFraction > 0.0) {
           val k = math.floor(lowQualityFraction * scored.count()).toLong
@@ -611,7 +611,7 @@ object Pipeline {
         } else scored.filter(col("nb_score_u") < minNbScoreU).select(id)
       }) },
       Some(Stage("near_dup", in => DedupOps.jaccardPairs(in, idCol, "cleaned_text",
-          shingleK, nearDupThreshold, maxShingleDF)
+          ShingleK, nearDupThreshold, MaxShingleDF)
         .select(col("doc_b")).distinct())),
       Some(Stage("sem_dup", in => {
         // centroids fit on the survivor slice — the corpus the stage
@@ -631,8 +631,8 @@ object Pipeline {
         val n = emb.count()
         if (n == 0L) emb.select(col(vecIdCol).as("id"))
         else KMeansOps.semDedup(emb, vecIdCol, vecCol,
-            KMeansOps.fit(emb, vecIdCol, vecCol, math.min(semK.toLong, n).toInt, semIters),
-            semTau)
+            KMeansOps.fit(emb, vecIdCol, vecCol, math.min(semK.toLong, n).toInt, SemIters),
+            tau = 0.35)
           .filter(!col("kept")).select(col("id"))
       })),
       Some(Stage("over_quota", in =>
@@ -642,7 +642,7 @@ object Pipeline {
 
     runStages(docs.select(id, col(sourceCol)), docs, idCol, gates,
         in => SpanDedup.removeDuplicatedSpans(in, idCol, textCol,
-          spanK, minSpan, maxGramOccurrences),
+          SpanK, MinSpan, MaxGramOccurrences),
         pairwise)
       .select(Seq(id, col(sourceCol), col("decision")) ++ releasedCols(piiRedactOutput): _*)
   }
@@ -659,18 +659,21 @@ object Pipeline {
 
   /** An incremental perceptual-hash arm (image aHash or audio envelope
     * hash, by `hash`): a batch doc drops when its hash sits within
-    * `maxDist` of ANY history hash ([[DedupOps.simhashCrossPairsFromSigs]]
-    * — the history band relation is snapshot-persistable, so per-batch
-    * cost is the batch's bands only) or of a SMALLER-id batch mate's. The
-    * batch hashes are materialized once; they feed both joins. */
-  private def hashDupArm(history: DataFrame, batchAssets: DataFrame, idCol: String,
-                         maxDist: Int)(hash: DataFrame => DataFrame): DataFrame = {
+    * Hamming distance 2 of ANY history hash
+    * ([[DedupOps.simhashCrossPairsFromSigs]] — the history band relation
+    * is snapshot-persistable, so per-batch cost is the batch's bands
+    * only) or of a SMALLER-id batch mate's. The batch hashes are
+    * materialized once; they feed both joins. */
+  private def hashDupArm(history: DataFrame, batchAssets: DataFrame,
+                         idCol: String)(hash: DataFrame => DataFrame): DataFrame = {
     def sigs(assets: DataFrame) = hash(assets).filter(col("ok"))
       .select(col("doc_id").as("doc"), col("ahash").as("sig"))
     val hb = sigs(batchAssets).localCheckpoint(eager = true)
     val hh = sigs(history.select(col(idCol).as("doc_id"), col("content")))
-    val cross = DedupOps.simhashCrossPairsFromSigs(hb, hh, maxDist).select(col("doc_a"))
-    val mates = DedupOps.simhashPairsFromSigs(hb, maxDist).select(col("doc_b").as("doc_a"))
+    val cross = DedupOps.simhashCrossPairsFromSigs(hb, hh, MediaDupMaxDist)
+      .select(col("doc_a"))
+    val mates = DedupOps.simhashPairsFromSigs(hb, MediaDupMaxDist)
+      .select(col("doc_b").as("doc_a"))
     cross.union(mates).distinct()
   }
 
@@ -697,8 +700,7 @@ object Pipeline {
     *       - video: per-frame hashes through the exact-substring core's
     *         cross twin ([[SpanDedup.crossSpansFromGrams]], k = 1) for
     *         history segments and its self form for batch mates —
-    *         ≥ `videoDupMinFrames` aligned shared frames drop the batch
-    *         copy;
+    *         ≥ 6 aligned shared frames drop the batch copy;
     *   4. `wrong_lang` (optional, `langModel`) — [[langGate]] with the
     *      per-snapshot model;
     *   5. `rule_filtered` (optional, `ruleParams`) — [[ruleGate]];
@@ -706,7 +708,7 @@ object Pipeline {
     *      against the SAME fixed eval suite (history contamination is
     *      stage 7's job);
     *   7. `empty` — cross-span CONTAMINATION removal
-    *      ([[SpanDedup.removeCrossSpans]]: batch copies of ≥ minSpan
+    *      ([[SpanDedup.removeCrossSpans]]: batch copies of ≥ 20-token
     *      verbatim history runs are cut; a batch doc cleaned to nothing
     *      is `empty`);
     *   8. `low_quality` (optional, `nbModel`) — the trained quality gate
@@ -735,11 +737,8 @@ object Pipeline {
                         embeddings: DataFrame,
                         idCol: String, textCol: String,
                         vecIdCol: String = "vec_id", vecCol: String = "embedding",
-                        nearDupThreshold: Double = 0.9, shingleK: Int = 3,
-                        maxShingleDF: Int = 1000,
-                        spanK: Int = 8, minSpan: Int = 20,
-                        maxGramOccurrences: Int = 1000,
-                        semK: Int = 8, semIters: Int = 2, semTau: Double = 0.35,
+                        nearDupThreshold: Double = 0.9,
+                        semK: Int = 8, semTau: Double = 0.35,
                         historyBloom: Option[Array[Byte]] = None,
                         centroids: Option[Array[Array[Double]]] = None,
                         keepCleanedText: Boolean = false,
@@ -750,23 +749,15 @@ object Pipeline {
                         contamNgramK: Int = 13,
                         contamCosTau: Double = 0.4,
                         media: Option[DataFrame] = None,
-                        mediaCodec: MediaOps.ImageCodec = MediaOps.ImageIoCodec,
-                        mediaGrid: Int = 2,
-                        minMeanLum: Double = 5.0, maxMeanLum: Double = 250.0,
                         mediaDupHistory: Option[DataFrame] = None,
                         mediaDupBatch: Option[DataFrame] = None,
-                        mediaDupMaxDist: Int = 2,
                         audioDupHistory: Option[DataFrame] = None,
                         audioDupBatch: Option[DataFrame] = None,
-                        audioDupMaxDist: Int = 2,
                         videoDupHistory: Option[DataFrame] = None,
                         videoDupBatch: Option[DataFrame] = None,
-                        videoDupMinFrames: Int = 6,
                         video: Option[DataFrame] = None,
                         videoContainer: VideoOps.VideoContainer = VideoOps.GvidContainer,
-                        videoEvery: Int = 1,
                         audio: Option[DataFrame] = None,
-                        audioCodec: MediaOps.AudioCodec = MediaOps.JavaSoundCodec,
                         langModel: Option[TextOps.LangNbModel] = None,
                         langAllow: Seq[String] = Seq("en"),
                         ruleParams: Option[QualityFilters.RuleParams] = None,
@@ -793,31 +784,30 @@ object Pipeline {
     // both-or-neither arm validation runs here, on the calling thread,
     // before any stage job
     val gates = Seq(
-      mediaGate(idCol, media, mediaCodec, mediaGrid, minMeanLum, maxMeanLum,
-        video, videoContainer, videoEvery, audio, audioCodec),
+      mediaGate(idCol, media, video, videoContainer, audio),
       armStage("media_dup", Seq(
         bothSides("media", mediaDupHistory, mediaDupBatch).map { case (h, b) =>
-          (in: DataFrame) => hashDupArm(h, inPlay(b, in, idCol), idCol, mediaDupMaxDist)(
-            MediaOps.perceptualHashes(_, mediaCodec).toDF())
+          (in: DataFrame) => hashDupArm(h, inPlay(b, in, idCol), idCol)(
+            MediaOps.perceptualHashes(_).toDF())
         },
         bothSides("audio", audioDupHistory, audioDupBatch).map { case (h, b) =>
-          (in: DataFrame) => hashDupArm(h, inPlay(b, in, idCol), idCol, audioDupMaxDist)(
-            MediaOps.audioHashes(_, audioCodec).toDF())
+          (in: DataFrame) => hashDupArm(h, inPlay(b, in, idCol), idCol)(
+            MediaOps.audioHashes(_).toDF())
         },
         bothSides("video", videoDupHistory, videoDupBatch).map { case (h, b) =>
           (in: DataFrame) =>
             // batch frames hashed ONCE (they feed both the cross and the
             // mate join); history as its own relation — a snapshot-
             // persistable artifact, like the image band relation
-            val bg = VideoOps.frameHashes(inPlay(b, in, idCol), videoContainer,
-              mediaCodec).localCheckpoint(eager = true)
+            val bg = VideoOps.frameHashes(inPlay(b, in, idCol), videoContainer)
+              .localCheckpoint(eager = true)
             val hg = VideoOps.frameHashes(h.select(col(idCol).as("doc_id"), col("content")),
-              videoContainer, mediaCodec)
+              videoContainer)
             val cross = SpanDedup.crossSpansFromGrams(hg, bg, k = 1,
-                minSpan = videoDupMinFrames, maxGramOccurrences = 1000)
+                minSpan = VideoDupMinFrames, maxGramOccurrences = 1000)
               .select(col("right_id").as("doc_a"))
             val mates = SpanDedup.duplicatedSpansFromGrams(bg, k = 1,
-                minSpan = videoDupMinFrames, maxGramOccurrences = 1000)
+                minSpan = VideoDupMinFrames, maxGramOccurrences = 1000)
               .select(col("doc_b").as("doc_a"))
             cross.union(mates).distinct()
         })),
@@ -844,7 +834,7 @@ object Pipeline {
       Some(Stage("near_dup", in => DedupOps.crossMinhashPairs(
           history.select(id, col(textCol)),
           in.select(id, col("cleaned_text").as(textCol)),
-          idCol, textCol, shingleK, nearDupThreshold, maxShingleDF = maxShingleDF)
+          idCol, textCol, ShingleK, nearDupThreshold, maxShingleDF = MaxShingleDF)
         .select(col("doc_b")).distinct())),
       Some(Stage("sem_dup", in => {
         // two independent embedding slices — materialize concurrently
@@ -863,7 +853,7 @@ object Pipeline {
           val nHist = embHist.count()
           if (nHist == 0L) Array.empty[Array[Double]]
           else KMeansOps.fit(embHist, vecIdCol, vecCol,
-            math.min(semK.toLong, nHist).toInt, semIters)
+            math.min(semK.toLong, nHist).toInt, SemIters)
         }
         // empty history (no centroids, nothing admitted yet) => nothing
         // to dup against: the drop set is EMPTY
@@ -882,7 +872,7 @@ object Pipeline {
         batch.select(id).join(s1.select(id.as("__adm")), id === col("__adm"), "left"),
         s1, idCol, gates,
         in => SpanDedup.removeCrossSpans(history, in, idCol, textCol,
-          spanK, minSpan, maxGramOccurrences),
+          SpanK, MinSpan, MaxGramOccurrences),
         pairwise)
       .withColumn("decision", when(col("__adm").isNull, "exact_dup").otherwise(col("decision")))
     val baseCols = Seq(id, col("decision")) ++ releasedCols(piiRedactOutput)

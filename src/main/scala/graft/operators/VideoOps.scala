@@ -6,22 +6,21 @@ import org.apache.spark.sql.functions._
 /** Video as a first-class binary modality — the third leg of the
   * image/audio/video triple.
   *
-  * The JDK ships no video codec, so the CODEC seam follows the brief's
-  * multimodal contract: the Spark-side plumbing (schema, partitioning,
-  * per-frame decode fan-out, frame sampling) is REAL and tested, while
-  * the container is a deterministic in-repo format ([[GvidContainer]]:
-  * magic + fps + length-prefixed PNG frames) whose per-frame payloads
-  * decode through the SAME pluggable [[MediaOps.ImageCodec]] the image
-  * path uses (`javax.imageio`, a genuine codec). All three REAL
-  * container formats instantiate the seam (r16): [[AviContainer]]
+  * The JDK ships no video codec, so the CONTAINER is the seam: the
+  * Spark-side plumbing (schema, partitioning, per-frame decode fan-out,
+  * frame sampling) is REAL and tested, while the container is a
+  * deterministic in-repo format ([[GvidContainer]]: magic + fps +
+  * length-prefixed PNG frames) whose per-frame payloads decode through
+  * the SAME [[MediaOps.ImageIoCodec]] the image path uses
+  * (`javax.imageio`, a genuine codec). All three REAL container
+  * formats instantiate the seam (r16): [[AviContainer]]
   * (RIFF/AVI), [[Mp4Container]] (ISO BMFF, QuickTime motion-JPEG
   * layout), and [[MkvContainer]] (EBML/Matroska, V_MJPEG) — each a
   * spec-correct muxer+demuxer with no external deps — plus
   * [[AutoContainer]], which sniffs the magic per row so one pass
   * demuxes a mixed-format corpus. The plan shape, the per-frame decode
   * loop, and the feature steps are container-agnostic; what remains
-  * external is only a true inter-frame video DECODER (H.264 et al.),
-  * which would plug in as another [[MediaOps.ImageCodec]]-like seam.
+  * external is only a true inter-frame video DECODER (H.264 et al.).
   *
   * Scale shape: decode is partition-parallel `mapPartitions` over the
   * binary column (the [[MediaOps.decodeImages]] precedent) — no shuffle;
@@ -156,15 +155,10 @@ object VideoOps {
     * — the video analog of [[MediaOps.decodeStatus]]: demux failures and
     * all-frames-undecodable containers are KEPT as ok=false /
     * n_decoded=0 rows (no second scan of the binary column to find
-    * them). Partition-parallel mapPartitions, no shuffle; `every`
-    * samples the integrity check the same way [[decodeFrames]] samples
-    * decode work — at 100 TB a gate does not need every frame of a
-    * 30 fps stream to call a video blank. */
+    * them). Partition-parallel mapPartitions, no shuffle; every frame
+    * is decoded. */
   def decodeStatus(media: DataFrame,
-                   container: VideoContainer = GvidContainer,
-                   codec: MediaOps.ImageCodec = MediaOps.ImageIoCodec,
-                   every: Int = 1): Dataset[VideoStatus] = {
-    require(every >= 1, s"every must be >= 1, got $every")
+                   container: VideoContainer = GvidContainer): Dataset[VideoStatus] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("doc_id"), col("content")).as[(Long, Array[Byte])]
@@ -177,24 +171,22 @@ object VideoOps {
               var pixSum = 0L
               var pixCnt = 0L
               var allUniform = true
-              vs.frames.iterator.zipWithIndex
-                .filter(_._2 % every == 0)
-                .foreach { case (payload, _) =>
-                  codec.decode(payload).foreach { d =>
-                    decoded += 1
-                    var mn = 255; var mx = 0
-                    var i = 0
-                    while (i < d.gray.length) {
-                      val v = d.gray(i)
-                      pixSum += v
-                      if (v < mn) mn = v
-                      if (v > mx) mx = v
-                      i += 1
-                    }
-                    pixCnt += d.gray.length
-                    if (mn != mx) allUniform = false
+              vs.frames.foreach { payload =>
+                MediaOps.ImageIoCodec.decode(payload).foreach { d =>
+                  decoded += 1
+                  var mn = 255; var mx = 0
+                  var i = 0
+                  while (i < d.gray.length) {
+                    val v = d.gray(i)
+                    pixSum += v
+                    if (v < mn) mn = v
+                    if (v > mx) mx = v
+                    i += 1
                   }
+                  pixCnt += d.gray.length
+                  if (mn != mx) allUniform = false
                 }
+              }
               VideoStatus(id, ok = true, vs.frames.length, decoded,
                 pixSum, pixCnt, uniform = decoded > 0 && allUniform)
           }
@@ -246,7 +238,6 @@ object VideoOps {
     * dimension/checksum contract as [[MediaOps.decodeImages]]. */
   def decodeFrames(media: DataFrame,
                    container: VideoContainer = GvidContainer,
-                   codec: MediaOps.ImageCodec = MediaOps.ImageIoCodec,
                    every: Int = 1): DataFrame = {
     require(every >= 1, s"every must be >= 1, got $every")
     val spark = media.sparkSession
@@ -258,7 +249,7 @@ object VideoOps {
             vs.frames.iterator.zipWithIndex
               .filter(_._2 % every == 0)
               .flatMap { case (payload, idx) =>
-                codec.decode(payload).map { d =>
+                MediaOps.ImageIoCodec.decode(payload).map { d =>
                   var sum = 0L
                   var i = 0
                   while (i < d.gray.length) { sum += d.gray(i); i += 1 }
@@ -278,21 +269,17 @@ object VideoOps {
     * relation [[graft.operators.SpanDedup.duplicatedSpansFromGrams]]
     * consumes. */
   def frameHashes(media: DataFrame,
-                  container: VideoContainer = GvidContainer,
-                  codec: MediaOps.ImageCodec = MediaOps.ImageIoCodec,
-                  every: Int = 1): DataFrame = {
-    require(every >= 1, s"every must be >= 1, got $every")
+                  container: VideoContainer = GvidContainer): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("doc_id"), col("content")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.flatMap { case (id, bytes) =>
           container.demux(bytes).iterator.flatMap { vs =>
-            vs.frames.iterator.zipWithIndex
-              .filter(_._2 % every == 0)
-              .flatMap { case (payload, idx) =>
-                codec.decode(payload).map(d => (id, idx.toLong, MediaOps.aHash64(d)))
-              }
+            vs.frames.iterator.zipWithIndex.flatMap { case (payload, idx) =>
+              MediaOps.ImageIoCodec.decode(payload)
+                .map(d => (id, idx.toLong, MediaOps.aHash64(d)))
+            }
           }
         }
       }
@@ -314,11 +301,10 @@ object VideoOps {
     * Returns (doc_a, doc_b, a_start, b_start, shared_frames). */
   def videoDupSegments(media: DataFrame,
                        container: VideoContainer = GvidContainer,
-                       codec: MediaOps.ImageCodec = MediaOps.ImageIoCodec,
                        minFrames: Int = 4,
                        maxFrameOccurrences: Int = 1000): DataFrame =
     SpanDedup.duplicatedSpansFromGrams(
-        frameHashes(media, container, codec), k = 1,
+        frameHashes(media, container), k = 1,
         minSpan = minFrames, maxGramOccurrences = maxFrameOccurrences)
       .withColumnRenamed("span_tokens", "shared_frames")
 
@@ -331,12 +317,11 @@ object VideoOps {
     * Returns (left_id, right_id, left_start, right_start, shared_frames). */
   def videoDupSegmentsCross(left: DataFrame, right: DataFrame,
                             container: VideoContainer = GvidContainer,
-                            codec: MediaOps.ImageCodec = MediaOps.ImageIoCodec,
                             minFrames: Int = 4,
                             maxFrameOccurrences: Int = 1000): DataFrame =
     SpanDedup.crossSpansFromGrams(
-        frameHashes(left, container, codec),
-        frameHashes(right, container, codec), k = 1,
+        frameHashes(left, container),
+        frameHashes(right, container), k = 1,
         minSpan = minFrames, maxGramOccurrences = maxFrameOccurrences)
       .withColumnRenamed("span_tokens", "shared_frames")
 

@@ -269,36 +269,31 @@ object StreamingDedup {
     * snapshot artifacts built before the stream starts (the q103
     * stored-geometry discipline), so cell assignment and admission
     * quality never drift mid-stream. State is the store itself; the
-    * streaming query holds nothing between triggers. */
+    * streaming query holds nothing between triggers. `embeddings` has
+    * `vec_id` and `embedding` columns. */
   def curateSink(batches: DataFrame, seedHistory: DataFrame,
                  embeddings: DataFrame, idCol: String, textCol: String,
                  centroids: Array[Array[Double]],
                  path: String,
-                 vecIdCol: String = "vec_id", vecCol: String = "embedding",
-                 nearDupThreshold: Double = 0.9, semTau: Double = 0.35,
                  nbModel: Option[graft.operators.TextOps.NbModel] = None,
                  minNbScoreU: Long = 0L,
                  benchmark: Option[DataFrame] = None,
                  benchmarkEmb: Option[DataFrame] = None,
                  contamNgramK: Int = 13,
                  contamCosTau: Double = 0.4,
-                 media: Option[DataFrame] = None,
                  video: Option[DataFrame] = None,
                  videoContainer: graft.operators.VideoOps.VideoContainer =
                    graft.operators.VideoOps.GvidContainer,
                  audio: Option[DataFrame] = None,
-                 langModel: Option[graft.operators.TextOps.LangNbModel] = None,
-                 langAllow: Seq[String] = Seq("en"),
                  ruleParams: Option[graft.operators.QualityFilters.RuleParams] = None,
                  piiRedactOutput: Boolean = false):
       org.apache.spark.sql.streaming.StreamingQuery = {
     batches.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         curateBatch(batch.toDF(), id, seedHistory, embeddings, idCol, textCol,
-          centroids, path, vecIdCol, vecCol, nearDupThreshold, semTau,
-          nbModel, minNbScoreU, benchmark, benchmarkEmb, contamNgramK,
-          contamCosTau, media, video, videoContainer, audio,
-          langModel, langAllow, ruleParams, piiRedactOutput)
+          centroids, path, nbModel, minNbScoreU, benchmark, benchmarkEmb,
+          contamNgramK, contamCosTau, video, videoContainer, audio,
+          ruleParams, piiRedactOutput)
       }
       .start()
   }
@@ -367,21 +362,16 @@ object StreamingDedup {
                  seedHistory: DataFrame, embeddings: DataFrame,
                  idCol: String, textCol: String,
                  centroids: Array[Array[Double]], path: String,
-                 vecIdCol: String = "vec_id", vecCol: String = "embedding",
-                 nearDupThreshold: Double = 0.9, semTau: Double = 0.35,
                  nbModel: Option[graft.operators.TextOps.NbModel] = None,
                  minNbScoreU: Long = 0L,
                  benchmark: Option[DataFrame] = None,
                  benchmarkEmb: Option[DataFrame] = None,
                  contamNgramK: Int = 13,
                  contamCosTau: Double = 0.4,
-                 media: Option[DataFrame] = None,
                  video: Option[DataFrame] = None,
                  videoContainer: graft.operators.VideoOps.VideoContainer =
                    graft.operators.VideoOps.GvidContainer,
                  audio: Option[DataFrame] = None,
-                 langModel: Option[graft.operators.TextOps.LangNbModel] = None,
-                 langAllow: Seq[String] = Seq("en"),
                  ruleParams: Option[graft.operators.QualityFilters.RuleParams] = None,
                  piiRedactOutput: Boolean = false): Unit = {
     val spark = batch.sparkSession
@@ -415,14 +405,11 @@ object StreamingDedup {
         else None
       graft.operators.Pipeline.curateIncremental(
           history, b, embeddings, idCol, textCol,
-          vecIdCol = vecIdCol, vecCol = vecCol,
-          nearDupThreshold = nearDupThreshold, semTau = semTau,
           centroids = Some(centroids), keepCleanedText = true,
           nbModel = nbModel, minNbScoreU = minNbScoreU,
           benchmark = benchmark, benchmarkEmb = benchmarkEmb,
           contamNgramK = contamNgramK, contamCosTau = contamCosTau,
-          media = media, video = video, videoContainer = videoContainer,
-          audio = audio, langModel = langModel, langAllow = langAllow,
+          video = video, videoContainer = videoContainer, audio = audio,
           ruleParams = ruleParams, piiRedactOutput = piiRedactOutput,
           historyFps = historyFps)
         .withColumn("batch_id", lit(id))

@@ -202,16 +202,18 @@ class FamiliesSpec extends SparkTestBase {
 
   test("persistence round-trip through parquet (theta.test:474-503, kll.test:56-78)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_rt").toString
-    viewRange("persist_in", 1, 1000)
-    sql("""SELECT 'A' AS name, datasketch_theta(v) AS data,
-          |datasketch_kll(64, v) AS ksk FROM persist_in""".stripMargin)
-      .write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir).createOrReplaceTempView("persisted")
-    val r = sql(
-      """SELECT CAST(datasketch_theta_estimate(data) AS INT),
-        |       datasketch_kll_n(ksk), datasketch_kll_min_item(ksk)
-        |FROM persisted WHERE name = 'A'""".stripMargin).head()
-    assert(r.getInt(0) == 1000 && r.getLong(1) == 1000L && r.getDouble(2) == 1.0)
+    try {
+      viewRange("persist_in", 1, 1000)
+      sql("""SELECT 'A' AS name, datasketch_theta(v) AS data,
+            |datasketch_kll(64, v) AS ksk FROM persist_in""".stripMargin)
+        .write.mode("overwrite").parquet(dir)
+      spark.read.parquet(dir).createOrReplaceTempView("persisted")
+      val r = sql(
+        """SELECT CAST(datasketch_theta_estimate(data) AS INT),
+          |       datasketch_kll_n(ksk), datasketch_kll_min_item(ksk)
+          |FROM persisted WHERE name = 'A'""".stripMargin).head()
+      assert(r.getInt(0) == 1000 && r.getLong(1) == 1000L && r.getDouble(2) == 1.0)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("as_sketch metadata drives element-type dispatch through parquet") {
@@ -220,19 +222,21 @@ class FamiliesSpec extends SparkTestBase {
     // parquet round-trip and binds the LONG probe path without an explicit
     // trailing tag (wrong dispatch would reinterpret long bits as doubles).
     val dir = java.nio.file.Files.createTempDirectory("graft_md").toString
-    spark.range(1, 1001).selectExpr("id AS v").createOrReplaceTempView("md_in")
-    // k=2048 > n keeps the sketch in exact mode: KLL compaction offsets are
-    // randomized, so a compacted sketch's median is only *near* 500.
-    val sk = sql("SELECT datasketch_kll(2048, v) AS raw FROM md_in")
-      .select(graft.functions.as_sketch(
-        org.apache.spark.sql.functions.col("raw"), "sk", "kll", "long"))
-    sk.write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir).createOrReplaceTempView("md_persisted")
-    val r = sql(
-      """SELECT datasketch_kll_quantile(sk, 0.5, true) AS q50,
-        |       datasketch_kll_max_item(sk) AS mx
-        |FROM md_persisted""".stripMargin).head()
-    assert(r.getLong(0) == 500L && r.getLong(1) == 1000L)
+    try {
+      spark.range(1, 1001).selectExpr("id AS v").createOrReplaceTempView("md_in")
+      // k=2048 > n keeps the sketch in exact mode: KLL compaction offsets are
+      // randomized, so a compacted sketch's median is only *near* 500.
+      val sk = sql("SELECT datasketch_kll(2048, v) AS raw FROM md_in")
+        .select(graft.functions.as_sketch(
+          org.apache.spark.sql.functions.col("raw"), "sk", "kll", "long"))
+      sk.write.mode("overwrite").parquet(dir)
+      spark.read.parquet(dir).createOrReplaceTempView("md_persisted")
+      val r = sql(
+        """SELECT datasketch_kll_quantile(sk, 0.5, true) AS q50,
+          |       datasketch_kll_max_item(sk) AS mx
+          |FROM md_persisted""".stripMargin).head()
+      assert(r.getLong(0) == 500L && r.getLong(1) == 1000L)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("sketch aggregates work as window functions (free via Spark)") {

@@ -243,31 +243,33 @@ class KMeansSpec extends SparkTestBase {
 
     // SnapshotStore persistence: the model survives a cold reload
     val root = java.nio.file.Files.createTempDirectory("graft-pq-store").toString
-    val store = new SnapshotStore(spark, root)
-    val corpus = "/root/testdata/sf0.001/embeddings.parquet"
-    store.getOrBuildVectors(corpus, "pq-books")(model.toRows)
-    val coldRows = new SnapshotStore(spark, root).getOrBuildVectors(corpus, "pq-books")(
-      sys.error("must not rebuild"))
-    val cold = ProductQuantizer.fromRows(16, 4, 16, coldRows)
-    assert(cold.toRows.zip(model.toRows).forall { case (a, b) => a.sameElements(b) })
+    try {
+      val store = new SnapshotStore(spark, root)
+      val corpus = "/root/testdata/sf0.001/embeddings.parquet"
+      store.getOrBuildVectors(corpus, "pq-books")(model.toRows)
+      val coldRows = new SnapshotStore(spark, root).getOrBuildVectors(corpus, "pq-books")(
+        sys.error("must not rebuild"))
+      val cold = ProductQuantizer.fromRows(16, 4, 16, coldRows)
+      assert(cold.toRows.zip(model.toRows).forall { case (a, b) => a.sameElements(b) })
 
-    // ADC approximates the true inner product, and finer codebooks improve it
-    val big = ProductQuantizer.train(emb, "vec_id", "embedding", 64, 16, 64, 2)
-    val q3 = emb.limit(3).select(col("vec_id").as("qid"), col("embedding").as("qv"),
-      ProductQuantizer.lut(col("embedding"), model).as("lut"),
-      ProductQuantizer.lut(col("embedding"), big).as("lutb"))
-    val joined = emb.select(col("vec_id").as("cid"), col("embedding").as("vec"),
-        ProductQuantizer.encode(col("embedding"), model).as("codes"),
-        ProductQuantizer.encode(col("embedding"), big).as("codesb"))
-      .crossJoin(broadcast(q3))
-      .withColumn("t", SimilarityOps.dot(col("qv"), col("vec")))
-      .withColumn("a", ProductQuantizer.adc(col("lut"), col("codes"), model.ksub))
-      .withColumn("ab", ProductQuantizer.adc(col("lutb"), col("codesb"), big.ksub))
-      .agg(avg(abs(col("a") - col("t"))).as("mae16"),
-        avg(abs(col("ab") - col("t"))).as("mae64"))
-      .head()
-    val (mae16, mae64) = (joined.getDouble(0), joined.getDouble(1))
-    assert(mae16 < 0.5, s"ADC should track true dot, mae=$mae16")
-    assert(mae64 < mae16, s"finer codebooks must reduce ADC error: $mae64 !< $mae16")
+      // ADC approximates the true inner product, and finer codebooks improve it
+      val big = ProductQuantizer.train(emb, "vec_id", "embedding", 64, 16, 64, 2)
+      val q3 = emb.limit(3).select(col("vec_id").as("qid"), col("embedding").as("qv"),
+        ProductQuantizer.lut(col("embedding"), model).as("lut"),
+        ProductQuantizer.lut(col("embedding"), big).as("lutb"))
+      val joined = emb.select(col("vec_id").as("cid"), col("embedding").as("vec"),
+          ProductQuantizer.encode(col("embedding"), model).as("codes"),
+          ProductQuantizer.encode(col("embedding"), big).as("codesb"))
+        .crossJoin(broadcast(q3))
+        .withColumn("t", SimilarityOps.dot(col("qv"), col("vec")))
+        .withColumn("a", ProductQuantizer.adc(col("lut"), col("codes"), model.ksub))
+        .withColumn("ab", ProductQuantizer.adc(col("lutb"), col("codesb"), big.ksub))
+        .agg(avg(abs(col("a") - col("t"))).as("mae16"),
+          avg(abs(col("ab") - col("t"))).as("mae64"))
+        .head()
+      val (mae16, mae64) = (joined.getDouble(0), joined.getDouble(1))
+      assert(mae16 < 0.5, s"ADC should track true dot, mae=$mae16")
+      assert(mae64 < mae16, s"finer codebooks must reduce ADC error: $mae64 !< $mae16")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 }

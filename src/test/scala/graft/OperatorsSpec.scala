@@ -999,59 +999,61 @@ class OperatorsSpec extends SparkTestBase {
   test("SnapshotStore: build-once-probe-forever round-trip for hot list, bloom, centroids, pairs") {
     import org.apache.spark.sql.functions._
     val root = java.nio.file.Files.createTempDirectory("graft-snap").toString
-    val corpus = "/root/testdata/sf0.001/documents.parquet"
-    val store = new SnapshotStore(spark, root)
+    try {
+      val corpus = "/root/testdata/sf0.001/documents.parquet"
+      val store = new SnapshotStore(spark, root)
 
-    // hot-shingle list: build persists; a FRESH store instance loads cold
-    var built = 0
-    def mineHot(): Array[Long] = {
-      built += 1
-      DedupOps.hotShingles(DedupOps.shingleSets(docs, "doc_id", "text", 3), 5)
-    }
-    val hot1 = store.getOrBuildLongs(corpus, "hot-k3-c5")(mineHot())
-    val hot2 = new SnapshotStore(spark, root).getOrBuildLongs(corpus, "hot-k3-c5")(mineHot())
-    assert(built == 1, "second getOrBuild must load, not rebuild")
-    assert(hot1.sorted.toSeq == hot2.sorted.toSeq && hot1.nonEmpty)
-    // the q35-class query runs COLD from the stored artifact, same answer
-    val inline = DedupOps.jaccardPairs(docs, "doc_id", "text", 3, 0.6)
-      .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fromStore = DedupOps.jaccardPairs(docs, "doc_id", "text", 3, 0.6,
-        knownHot = Some(hot2))
-      .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(fromStore == inline)
+      // hot-shingle list: build persists; a FRESH store instance loads cold
+      var built = 0
+      def mineHot(): Array[Long] = {
+        built += 1
+        DedupOps.hotShingles(DedupOps.shingleSets(docs, "doc_id", "text", 3), 5)
+      }
+      val hot1 = store.getOrBuildLongs(corpus, "hot-k3-c5")(mineHot())
+      val hot2 = new SnapshotStore(spark, root).getOrBuildLongs(corpus, "hot-k3-c5")(mineHot())
+      assert(built == 1, "second getOrBuild must load, not rebuild")
+      assert(hot1.sorted.toSeq == hot2.sorted.toSeq && hot1.nonEmpty)
+      // the q35-class query runs COLD from the stored artifact, same answer
+      val inline = DedupOps.jaccardPairs(docs, "doc_id", "text", 3, 0.6)
+        .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val fromStore = DedupOps.jaccardPairs(docs, "doc_id", "text", 3, 0.6,
+          knownHot = Some(hot2))
+        .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(fromStore == inline)
 
-    // history bloom (q64-class): stored blob drives incremental dedup cold
-    val history = docs.filter(col("doc_id") % 2 === 0)
-    val batch = docs.filter(col("doc_id") % 2 === 1)
-    val bloom = store.getOrBuildBytes(corpus, "history-bloom")(
-      IncrementalDedup.buildHistoryFilter(history, "text", maxDistinct = 1 << 14))
-    val bloomCold = new SnapshotStore(spark, root).getOrBuildBytes(corpus, "history-bloom")(
-      sys.error("must not rebuild"))
-    assert(java.util.Arrays.equals(bloom, bloomCold))
+      // history bloom (q64-class): stored blob drives incremental dedup cold
+      val history = docs.filter(col("doc_id") % 2 === 0)
+      val batch = docs.filter(col("doc_id") % 2 === 1)
+      val bloom = store.getOrBuildBytes(corpus, "history-bloom")(
+        IncrementalDedup.buildHistoryFilter(history, "text", maxDistinct = 1 << 14))
+      val bloomCold = new SnapshotStore(spark, root).getOrBuildBytes(corpus, "history-bloom")(
+        sys.error("must not rebuild"))
+      assert(java.util.Arrays.equals(bloom, bloomCold))
 
-    // sampled centroids (q101-class): semantic dedup from stored centroids
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val cent = store.getOrBuildVectors(corpus, "centroids-k4")(
-      KMeansOps.fit(emb, "vec_id", "embedding", k = 4, iters = 2))
-    val centCold = new SnapshotStore(spark, root).getOrBuildVectors(corpus, "centroids-k4")(
-      sys.error("must not rebuild"))
-    assert(cent.length == 4 && cent.zip(centCold).forall { case (a, b) => a.sameElements(b) })
-    val fresh = KMeansOps.semDedup(emb, "vec_id", "embedding",
-      KMeansOps.fit(emb, "vec_id", "embedding", k = 4, iters = 2), tau = 0.35)
-      .collect().map(r => (r.getLong(0), r.getBoolean(2))).toSet
-    val cold = KMeansOps.semDedup(emb, "vec_id", "embedding", centCold, tau = 0.35)
-      .collect().map(r => (r.getLong(0), r.getBoolean(2))).toSet
-    assert(cold == fresh)
+      // sampled centroids (q101-class): semantic dedup from stored centroids
+      val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      val cent = store.getOrBuildVectors(corpus, "centroids-k4")(
+        KMeansOps.fit(emb, "vec_id", "embedding", k = 4, iters = 2))
+      val centCold = new SnapshotStore(spark, root).getOrBuildVectors(corpus, "centroids-k4")(
+        sys.error("must not rebuild"))
+      assert(cent.length == 4 && cent.zip(centCold).forall { case (a, b) => a.sameElements(b) })
+      val fresh = KMeansOps.semDedup(emb, "vec_id", "embedding",
+        KMeansOps.fit(emb, "vec_id", "embedding", k = 4, iters = 2), tau = 0.35)
+        .collect().map(r => (r.getLong(0), r.getBoolean(2))).toSet
+      val cold = KMeansOps.semDedup(emb, "vec_id", "embedding", centCold, tau = 0.35)
+        .collect().map(r => (r.getLong(0), r.getBoolean(2))).toSet
+      assert(cold == fresh)
 
-    // distributed artifact (q97-class pair evidence) stays a parquet scan
-    val pairs = store.getOrBuildDf(corpus, "pair-evidence")(
-      DedupOps.jaccardPairs(docs, "doc_id", "text", 3, 0.6).select("doc_a", "doc_b"))
-    assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == inline)
+      // distributed artifact (q97-class pair evidence) stays a parquet scan
+      val pairs = store.getOrBuildDf(corpus, "pair-evidence")(
+        DedupOps.jaccardPairs(docs, "doc_id", "text", 3, 0.6).select("doc_a", "doc_b"))
+      assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == inline)
 
-    // staleness: a different corpus mtime yields a DIFFERENT artifact path
-    val p1 = store.artifactPath(corpus, "hot-k3-c5")
-    assert(p1.contains("-m") && p1.startsWith(root))
-    ()
+      // staleness: a different corpus mtime yields a DIFFERENT artifact path
+      val p1 = store.artifactPath(corpus, "hot-k3-c5")
+      assert(p1.contains("-m") && p1.startsWith(root))
+      ()
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
   test("curateFull: every decision class lands on the constructed doc, stages in order") {
@@ -1164,39 +1166,41 @@ class OperatorsSpec extends SparkTestBase {
     val model = TextOps.seedCrawlNbFit(
       history.filter($"doc_id" < 6), history.filter($"doc_id" >= 6))
     val root = java.nio.file.Files.createTempDirectory("graft-nb-store").toString
-    val store = new SnapshotStore(spark, root)
-    val corpus = "/root/testdata/sf0.001/documents.parquet"
-    store.getOrBuildLongPairs(corpus, "nb-quality")(TextOps.nbModelToRows(model))
-    val cold = TextOps.nbModelFromRows(
-      new SnapshotStore(spark, root).getOrBuildLongPairs(corpus, "nb-quality")(
-        sys.error("must not rebuild")))
-    assert(cold == model)
-    // scoring with the reloaded model is identical to the fresh one
-    val batch = Seq(
-      (11L, "a curated article about science history and literature"),
-      (13L, "buy cheap casino bonus click here now free today")
-    ).toDF("doc_id", "text")
-    val a = TextOps.nbScore(model, batch).collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val b = TextOps.nbScore(cold, batch).collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    assert(a == b && a.size == 2)
-    // curateIncremental with the stored model: the crawl-like batch doc
-    // drops as low_quality, the seed-like one is kept
-    val embs = Seq(
-      0L -> Array(1f, 0f, 0f, 0f), 2L -> Array(0f, 1f, 0f, 0f),
-      4L -> Array(0f, 0f, 1f, 0f), 6L -> Array(0f, 0f, 0f, 1f),
-      8L -> Array(-1f, 0f, 0f, 0f), 11L -> Array(0f, -1f, 0f, 0f),
-      13L -> Array(0f, 0f, -1f, 0f)).toDF("vec_id", "emb")
-      .withColumn("emb", col("emb").cast("array<float>"))
-    val out = Pipeline.curateIncremental(history, batch, embs, "doc_id", "text",
-        vecIdCol = "vec_id", vecCol = "emb", semK = 2,
-        nbModel = Some(cold))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out(13L) == "low_quality" && out(11L) == "kept", s"$out")
-    // hook off: no low_quality class (q115's path unchanged)
-    val off = Pipeline.curateIncremental(history, batch, embs, "doc_id", "text",
-        vecIdCol = "vec_id", vecCol = "emb", semK = 2)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(off.values.forall(_ != "low_quality"), s"$off")
+    try {
+      val store = new SnapshotStore(spark, root)
+      val corpus = "/root/testdata/sf0.001/documents.parquet"
+      store.getOrBuildLongPairs(corpus, "nb-quality")(TextOps.nbModelToRows(model))
+      val cold = TextOps.nbModelFromRows(
+        new SnapshotStore(spark, root).getOrBuildLongPairs(corpus, "nb-quality")(
+          sys.error("must not rebuild")))
+      assert(cold == model)
+      // scoring with the reloaded model is identical to the fresh one
+      val batch = Seq(
+        (11L, "a curated article about science history and literature"),
+        (13L, "buy cheap casino bonus click here now free today")
+      ).toDF("doc_id", "text")
+      val a = TextOps.nbScore(model, batch).collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+      val b = TextOps.nbScore(cold, batch).collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+      assert(a == b && a.size == 2)
+      // curateIncremental with the stored model: the crawl-like batch doc
+      // drops as low_quality, the seed-like one is kept
+      val embs = Seq(
+        0L -> Array(1f, 0f, 0f, 0f), 2L -> Array(0f, 1f, 0f, 0f),
+        4L -> Array(0f, 0f, 1f, 0f), 6L -> Array(0f, 0f, 0f, 1f),
+        8L -> Array(-1f, 0f, 0f, 0f), 11L -> Array(0f, -1f, 0f, 0f),
+        13L -> Array(0f, 0f, -1f, 0f)).toDF("vec_id", "emb")
+        .withColumn("emb", col("emb").cast("array<float>"))
+      val out = Pipeline.curateIncremental(history, batch, embs, "doc_id", "text",
+          vecIdCol = "vec_id", vecCol = "emb", semK = 2,
+          nbModel = Some(cold))
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(out(13L) == "low_quality" && out(11L) == "kept", s"$out")
+      // hook off: no low_quality class (q115's path unchanged)
+      val off = Pipeline.curateIncremental(history, batch, embs, "doc_id", "text",
+          vecIdCol = "vec_id", vecCol = "emb", semK = 2)
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(off.values.forall(_ != "low_quality"), s"$off")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
   test("curateFull quality gate: low_quality fires on crawl-like text, matches the scorer") {

@@ -171,29 +171,31 @@ class PlanSpec extends SparkTestBase {
     // a projection mixing sketch probes across families with ordinary
     // arithmetic compiles into one codegen'd Project over the scan.
     val dir = java.nio.file.Files.createTempDirectory("graft_wscg").toString
-    spark.range(0, 1000).selectExpr("id % 3 AS g", "id AS v")
-      .createOrReplaceTempView("wscg_in")
-    sql("""SELECT g, datasketch_hll(12, v) AS s, datasketch_theta(12, v) AS t,
-          |       datasketch_kll(200, CAST(v AS DOUBLE)) AS kq
-          |FROM wscg_in GROUP BY g""".stripMargin)
-      .write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir).createOrReplaceTempView("wscg_skt")
-    val df = sql(
-      """SELECT datasketch_hll_estimate(s) + 1.0 AS x,
-        |       datasketch_theta_estimate(t) * 2.0 AS y,
-        |       datasketch_kll_quantile(kq, 0.5, true) - length(s) AS z
-        |FROM wscg_skt""".stripMargin)
-    val plan = planOf(df)
-    // the star marks a WholeStageCodegen stage; the Project carrying the
-    // sketch probes must be inside one
-    assert("""\*\(\d+\) Project \[.*datasketch_hll_estimate""".r
-      .findFirstIn(plan.replaceAll("\n", " ")).isDefined,
-      s"sketch scalar projection must be whole-stage codegen'd:\n$plan")
-    assert(!plan.contains("CodegenFallback"), plan)
-    // and the generated code computes the same values as interpreted eval
-    val rows = df.collect()
-    assert(rows.length == 3)
-    assert(rows.forall(r => r.getDouble(0) > 300 && r.getDouble(1) > 600))
+    try {
+      spark.range(0, 1000).selectExpr("id % 3 AS g", "id AS v")
+        .createOrReplaceTempView("wscg_in")
+      sql("""SELECT g, datasketch_hll(12, v) AS s, datasketch_theta(12, v) AS t,
+            |       datasketch_kll(200, CAST(v AS DOUBLE)) AS kq
+            |FROM wscg_in GROUP BY g""".stripMargin)
+        .write.mode("overwrite").parquet(dir)
+      spark.read.parquet(dir).createOrReplaceTempView("wscg_skt")
+      val df = sql(
+        """SELECT datasketch_hll_estimate(s) + 1.0 AS x,
+          |       datasketch_theta_estimate(t) * 2.0 AS y,
+          |       datasketch_kll_quantile(kq, 0.5, true) - length(s) AS z
+          |FROM wscg_skt""".stripMargin)
+      val plan = planOf(df)
+      // the star marks a WholeStageCodegen stage; the Project carrying the
+      // sketch probes must be inside one
+      assert("""\*\(\d+\) Project \[.*datasketch_hll_estimate""".r
+        .findFirstIn(plan.replaceAll("\n", " ")).isDefined,
+        s"sketch scalar projection must be whole-stage codegen'd:\n$plan")
+      assert(!plan.contains("CodegenFallback"), plan)
+      // and the generated code computes the same values as interpreted eval
+      val rows = df.collect()
+      assert(rows.length == 3)
+      assert(rows.forall(r => r.getDouble(0) > 300 && r.getDouble(1) > 600))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("cosine top-k broadcasts the query side (no corpus shuffle)") {

@@ -15,11 +15,17 @@ package graft
   */
 class SafetySpec extends SparkTestBase {
 
+  private val tmpDirs = scala.collection.mutable.Buffer.empty[java.io.File]
+
   private def tmpDir(name: String): String = {
     val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.deleteOnExit()
+    tmpDirs += d
     new java.io.File(d, "t").getAbsolutePath
   }
+
+  override def afterAll(): Unit =
+    try tmpDirs.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    finally super.afterAll()
 
   test("aggregate output carries family/elem metadata through explicit AS") {
     val df = sql(

@@ -148,6 +148,9 @@ class SketchCastSpec extends SparkTestBase {
           |       datasketch_kll_min_item(datasketch_kll(16, sketch)) AS mn
           |FROM graft_cast_sketches""".stripMargin).collect().head
       assert(r.getDouble(0) == 1000.0 && r.getDouble(1) == 1.0)
-    } finally sql("DROP TABLE graft_cast_sketches")
+    } finally {
+      sql("DROP TABLE graft_cast_sketches")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(loc))
+    }
   }
 }

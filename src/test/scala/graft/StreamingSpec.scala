@@ -55,27 +55,29 @@ class StreamingSpec extends SparkTestBase {
     import spark2.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_stream_sink").toString
-
-    val mem = MemoryStream[Ev]
-    val query = streaming.StreamingSketches.sinkToSketchTable(
-      mem.toDF(), dir, window = "1 hour", watermark = "10 hours")
     try {
-      mem.addData(Ev(t(9, 0), 1, "click", 1.0), Ev(t(9, 30), 2, "view", 2.0))
-      query.processAllAvailable()
-      mem.addData(Ev(t(9, 45), 3, "click", 3.0)) // same window, new user
-      query.processAllAvailable()
 
-      // Roll up the appended sketch rows: duplicate window rows (one per
-      // batch update) merge away through sketch union.
-      spark.read.parquet(dir).createOrReplaceTempView("stream_sketches")
-      val users = spark.sql(
-        """SELECT window_start,
-          |       CAST(round(datasketch_theta_estimate(datasketch_theta(users_sketch))) AS BIGINT) AS users
-          |FROM stream_sketches GROUP BY window_start""".stripMargin).collect()
-      assert(users.length == 1)
-      assert(users.head.getLong(1) == 3L,
-        s"rollup over batch updates must merge to 3 distinct users, got ${users.head}")
-    } finally query.stop()
+      val mem = MemoryStream[Ev]
+      val query = streaming.StreamingSketches.sinkToSketchTable(
+        mem.toDF(), dir, window = "1 hour", watermark = "10 hours")
+      try {
+        mem.addData(Ev(t(9, 0), 1, "click", 1.0), Ev(t(9, 30), 2, "view", 2.0))
+        query.processAllAvailable()
+        mem.addData(Ev(t(9, 45), 3, "click", 3.0)) // same window, new user
+        query.processAllAvailable()
+
+        // Roll up the appended sketch rows: duplicate window rows (one per
+        // batch update) merge away through sketch union.
+        spark.read.parquet(dir).createOrReplaceTempView("stream_sketches")
+        val users = spark.sql(
+          """SELECT window_start,
+            |       CAST(round(datasketch_theta_estimate(datasketch_theta(users_sketch))) AS BIGINT) AS users
+            |FROM stream_sketches GROUP BY window_start""".stripMargin).collect()
+        assert(users.length == 1)
+        assert(users.head.getLong(1) == 3L,
+          s"rollup over batch updates must merge to 3 distinct users, got ${users.head}")
+      } finally query.stop()
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   case class Doc(ts: Timestamp, doc_id: Long, text: String)

@@ -5,6 +5,10 @@
 #   codegen_sites   hand-written defineCodeGen/nullSafeCodeGen calls
 #   local_checkpoints  code lines that call localCheckpoint (comment
 #                      lines that only mention it are not counted)
+#   default_params  parameters declared with a default value: each
+#                   "name: Type = " on a code line, after string literals
+#                   are blanked, that no val/var/def keyword precedes
+#                   ("=>", "==" and "<=" are not defaults)
 # With --by-file it prints instead the local_checkpoints count of each
 # file that has any, one "<count> <file>" line each, highest first.
 # Run from the root of a checkout: sh tools/size_report.sh [--by-file] [dir]
@@ -28,3 +32,6 @@ echo "code_lines $(code_only $files | wc -l)"
 echo "scala_files $(echo "$files" | grep -c .)"
 echo "codegen_sites $(code_only $files | grep -c 'defineCodeGen\|nullSafeCodeGen' || true)"
 echo "local_checkpoints $(code_only $files | grep -c 'localCheckpoint' || true)"
+echo "default_params $(code_only $files | sed 's/"[^"]*"/""/g' |
+  grep -oP '(?<![\w.])(?:(?:val|var|def)\s+)?[A-Za-z_]\w*:\s+[^=(){};:]+?(?<![<>!=])=(?![>=])' |
+  grep -cvP '^(val|var|def)\s' || true)"
